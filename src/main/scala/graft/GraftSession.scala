@@ -116,7 +116,8 @@ final class GraftSession(
       path: String): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$schema`")
     spark.sql(s"DROP TABLE IF EXISTS `$schema`.`$table`")
-    spark.catalog.createTable(s"`$schema`.`$table`", path, "parquet")
+    spark.catalog.createTable(s"`$schema`.`$table`", "parquet",
+      graft.warehouse.ParquetFooter.readTable(spark, path).schema, Map("path" -> path))
   }
 
   /** Routing explanation for a model (the `icebreaker explain` analog). */
@@ -164,7 +165,11 @@ final class GraftSession(
               }
             else node
           val out = materializer.materialize(sampled, Option(now))
-          val rows = out.count()
+          // a parquet table's rows come from its footers, not a job
+          val rows =
+            if (node.config.tableFormat == "iceberg" ||
+              node.config.materialized == "view") out.count()
+            else warehouse.rowCount(materializer.schemaOf(node), node.name)
           val dur = (System.nanoTime() - t0) / 1e9
           org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
           (rows, dur, spillListener.totalSpillBytes - spill0)

@@ -17,20 +17,20 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // Schema cache per (session, file path): every `spark.read.parquet`
-  // without an explicit schema re-infers it — a driver-side footer
-  // read per call. A bench/verify run loads the same ten immutable
-  // test tables hundreds of times; supplying the once-inferred schema
-  // skips that repeated driver I/O (metadata only — never row data, so
-  // nothing about what a query computes changes; keyed by session so a
-  // restarted test session with a rewritten temp table cannot see a
-  // stale schema). The `events` normalization still inspects the RAW
-  // schema exactly as before.
+  // without an explicit schema re-infers it, and that inference is a
+  // Spark job. A bench/verify run loads the same ten immutable test
+  // tables hundreds of times; supplying the first load's schema (read
+  // from a Spark writer's footer without a job where it has one, see
+  // graft.warehouse.ParquetFooter) skips the repeats (metadata only, so
+  // nothing a query computes changes; keyed by session so a restarted
+  // test session with a rewritten temp table cannot see a stale schema).
+  // The `events` normalization still inspects the RAW schema as before.
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), org.apache.spark.sql.types.StructType]()
 
   private def readCached(spark: SparkSession, path: String): DataFrame = {
     val schema = schemaCache.computeIfAbsent((spark, path),
-      _ => spark.read.parquet(path).schema)
+      _ => graft.warehouse.ParquetFooter.readTable(spark, path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -89,7 +89,8 @@ final class SourceCache(spark: SparkSession, root: String,
   def get(schema: String, table: String,
       fetch: () => DataFrame): DataFrame = {
     if (!isFresh(schema, table)) put(schema, table, fetch())
-    val df = spark.read.parquet(dirOf(key(schema, table)))
+    val df = graft.warehouse.ParquetFooter.readTable(spark,
+      dirOf(key(schema, table)))
     df.createOrReplaceTempView(key(schema, table))
     df
   }

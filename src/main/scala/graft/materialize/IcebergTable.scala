@@ -602,50 +602,24 @@ object IcebergTable {
             : Boolean = size() > FooterCacheCap
       })
 
-  /** One parquet footer's top-level (name, field-id) pairs — a few KB
-    * of metadata read, never data pages. Static so the distributed
-    * batch resolver can run it executor-side. */
-  private def readFooterFields(path: String): Seq[(String, Option[Int])] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq
+  /** One parquet footer's top-level (name, field-id) pairs. */
+  private def footerFields(
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : Seq[(String, Option[Int])] =
+    meta.getFileMetaData.getSchema.getFields.asScala.toSeq
       .map(t => t.getName -> Option(t.getId).map(_.intValue))
-    finally r.close()
-  }
 
-  /** Cached footer resolution for one path. */
-  private def footerFields(path: String): Seq[(String, Option[Int])] = {
-    val cached = footerFieldsCache.get(path)
-    if (cached != null) return cached
-    val fields = readFooterFields(path)
-    footerFieldsCache.put(path, fields)
-    fields
-  }
-
-  /** Footer batches past this size resolve as a SPARK JOB over the
-    * path list (collecting only (path, fields) — kilobytes per file)
-    * instead of driver-side threads: at native table scale (10⁵-10⁶
-    * files) per-file driver I/O is minutes of wall that a cluster
-    * does in seconds, the same work native Iceberg scans push to
-    * tasks. Below it the parallelStream path avoids job-launch
-    * overhead. */
-  private val FooterJobThreshold = 4096
-
-  /** Resolve a batch of footers into the cache, distributed when the
-    * batch is large. */
-  private def resolveFooters(spark: SparkSession,
-      paths: Seq[String]): Unit = {
-    val uncached = paths.distinct.filterNot(footerFieldsCache.containsKey)
-    if (uncached.size > FooterJobThreshold) {
-      val slices = math.max(32, math.min(uncached.size / 64,
-        spark.sparkContext.defaultParallelism * 4))
-      spark.sparkContext.parallelize(uncached, slices)
-        .map(p => p -> readFooterFields(p)).collect()
-        .foreach { case (p, f) => footerFieldsCache.put(p, f) }
-    } else if (uncached.size > 8)
-      uncached.asJava.parallelStream().forEach(p => footerFields(p))
+  /** Footer fields of every path, uncached ones read through
+    * [[graft.warehouse.ParquetFooter.readAll]] (parallel driver threads
+    * for medium batches, one Spark job at native-scale file counts). */
+  private def resolveFooters(spark: SparkSession, paths: Seq[String])
+      : Map[String, Seq[(String, Option[Int])]] = {
+    val cached = paths.distinct
+      .flatMap(p => Option(footerFieldsCache.get(p)).map(p -> _)).toMap
+    val fresh = graft.warehouse.ParquetFooter.readAll(spark,
+      paths.distinct.filterNot(cached.contains))(footerFields)
+    fresh.foreach { case (p, f) => footerFieldsCache.put(p, f) }
+    cached ++ fresh
   }
 
   /** Per-file projection of the CURRENT schema onto a data file's
@@ -709,9 +683,7 @@ object IcebergTable {
       md: IcebergMetadata, files: Seq[FileEntry],
       withCoords: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
-    // resolve all footers up front (parallel threads for medium
-    // batches, a Spark job for native-scale file counts)
-    resolveFooters(spark, files.map(_.path))
+    val fields = resolveFooters(spark, files.map(_.path))
     val outCols = md.schema.fieldNames.map(col(_)) ++
       (if (withCoords) Seq(col("__graft_meta")) else Nil)
     // only IDENTITY tuple keys are schema columns that were
@@ -743,7 +715,7 @@ object IcebergTable {
     files.groupBy(f => (f.partitionValues.keySet,
         projectionOf(md, org.apache.spark.sql.types.StructType(
           md.schema.filterNot(c => f.partitionValues.contains(c.name))),
-          footerFields(f.path))))
+          fields(f.path))))
       .map { case ((_, proj), fs) =>
         val tuples = fs.map(_.partitionValues).distinct
         if (tuples.size <= LiteralInjectionMaxTuples) {
@@ -879,7 +851,8 @@ object IcebergTable {
         .drop("__graft_meta"),
       pathMap)
     if (posDeletes.nonEmpty) {
-      val dels = spark.read.parquet(posDeletes.map(_.path): _*)
+      val dels = graft.warehouse.ParquetFooter.readTable(spark,
+        posDeletes.map(_.path): _*)
         .select(rel(col("file_path")).as("__graft_file"),
           col("pos").cast("long").as("__graft_pos"))
       // no broadcast HINT on the delete side: positional tombstone
@@ -908,7 +881,7 @@ object IcebergTable {
       require(ids.nonEmpty, "equality delete file without equality_ids")
       val names = ids.map(md.fieldName)
       val dels = dfiles.map { f =>
-        spark.read.parquet(f.path)
+        graft.warehouse.ParquetFooter.readTable(spark, f.path)
           .select(names.map(n => col(n).as(s"__graft_eq_$n")): _*)
           .withColumn("__graft_dseq", lit(f.seq))
           .withColumn("__graft_dpt", lit(tupleKey(f.partitionValues)))

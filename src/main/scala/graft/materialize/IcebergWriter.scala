@@ -677,7 +677,7 @@ object IcebergWriter {
     val posFiles = entries.filter(_.content == 1).map(_.path)
     if (posFiles.isEmpty) data
     else {
-      val dels = spark.read.parquet(posFiles: _*)
+      val dels = graft.warehouse.ParquetFooter.readTable(spark, posFiles: _*)
         .select(regexp_replace(regexp_replace(col("file_path"),
           "^file:/+", "/"),
           "^" + java.util.regex.Pattern.quote(base + "/"), "")
@@ -904,16 +904,10 @@ object IcebergWriter {
       // footer stats per file, read concurrently (independent KB-sized
       // metadata reads — at a 10^5-file commit the serial walk was the
       // driver-side floor)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs = leaves(out).sortBy(_.getAbsolutePath).map { f =>
-        val p = f.getAbsolutePath
-        (p, tupleOf(out, f), Future(parquetStats(p, withBounds = true)))
-      }
-      fs.map { case (p, tup, st) =>
-        (p, tup, Await.result(st, Duration.Inf))
-      }
+      val fs = leaves(out).sortBy(_.getAbsolutePath)
+      val stats = graft.warehouse.ParquetFooter.readAll(df.sparkSession,
+        fs.map(_.getAbsolutePath))(parquetStats).toMap
+      fs.map(f => (f.getAbsolutePath, tupleOf(out, f), stats(f.getAbsolutePath)))
     }
     // the heavy DISTRIBUTED work happens outside the commit critical
     // section — data/tombstone parquet is keyed by commitId, so a
@@ -1505,121 +1499,114 @@ object IcebergWriter {
     * pruning on these bounds stays conservative. At 100 TB these
     * bounds are the difference between scanning a partition and
     * scanning the files a predicate can actually touch. */
-  private def parquetStats(path: String,
-      withBounds: Boolean): FileStats = {
+  private def parquetStats(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): FileStats = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val rows = r.getRecordCount
-      if (!withBounds) return FileStats(rows, Map.empty, Map.empty, Map.empty)
-      val lower = scala.collection.mutable.Map[String, String]()
-      val upper = scala.collection.mutable.Map[String, String]()
-      val nulls = scala.collection.mutable.Map[String, Long]()
-      val nans = scala.collection.mutable.Map[String, Long]()
-      // merge row-group statistics per top-level primitive column; a
-      // column's bounds only stand if EVERY row group carried stats
-      // (a gap means uncovered rows — pruning on partial bounds would
-      // be wrong, so the column is dropped from the maps entirely)
-      val nBlocks = r.getFooter.getBlocks.size()
-      val seen = scala.collection.mutable.Map[String, Int]()
-      val merged = scala.collection.mutable.Map[String,
-        org.apache.parquet.column.statistics.Statistics[_]]()
-      r.getFooter.getBlocks.asScala.foreach { block =>
-        block.getColumns.asScala.foreach { c =>
-          if (c.getPath.size() == 1) {
-            val name = c.getPath.toDotString
-            val st = c.getStatistics
-            if (st != null && !st.isEmpty) {
-              seen(name) = seen.getOrElse(name, 0) + 1
-              merged.get(name) match {
-                case Some(acc) =>
-                  // Statistics is generically self-typed in Java; the
-                  // Nothing cast satisfies Scala's view of the raw
-                  // `mergeStatistics(Statistics)` signature — both
-                  // sides come from the same column, so types agree
-                  acc.asInstanceOf[org.apache.parquet.column.statistics
-                    .Statistics[Nothing]].mergeStatistics(
-                    st.asInstanceOf[org.apache.parquet.column.statistics
-                      .Statistics[Nothing]])
-                case None => merged(name) = st.copy()
+    val rows = graft.warehouse.ParquetFooter.rows(footer)
+    val lower = scala.collection.mutable.Map[String, String]()
+    val upper = scala.collection.mutable.Map[String, String]()
+    val nulls = scala.collection.mutable.Map[String, Long]()
+    val nans = scala.collection.mutable.Map[String, Long]()
+    // merge row-group statistics per top-level primitive column; a
+    // column's bounds only stand if EVERY row group carried stats
+    // (a gap means uncovered rows — pruning on partial bounds would
+    // be wrong, so the column is dropped from the maps entirely)
+    val nBlocks = footer.getBlocks.size()
+    val seen = scala.collection.mutable.Map[String, Int]()
+    val merged = scala.collection.mutable.Map[String,
+      org.apache.parquet.column.statistics.Statistics[_]]()
+    footer.getBlocks.asScala.foreach { block =>
+      block.getColumns.asScala.foreach { c =>
+        if (c.getPath.size() == 1) {
+          val name = c.getPath.toDotString
+          val st = c.getStatistics
+          if (st != null && !st.isEmpty) {
+            seen(name) = seen.getOrElse(name, 0) + 1
+            merged.get(name) match {
+              case Some(acc) =>
+                // Statistics is generically self-typed in Java; the
+                // Nothing cast satisfies Scala's view of the raw
+                // `mergeStatistics(Statistics)` signature — both
+                // sides come from the same column, so types agree
+                acc.asInstanceOf[org.apache.parquet.column.statistics
+                  .Statistics[Nothing]].mergeStatistics(
+                  st.asInstanceOf[org.apache.parquet.column.statistics
+                    .Statistics[Nothing]])
+              case None => merged(name) = st.copy()
+            }
+          }
+        }
+      }
+    }
+    val complete = seen.filter(_._2 == nBlocks).keySet
+    merged.foreach { case (name, st) =>
+      if (complete(name) && st.isNumNullsSet)
+        nulls(name) = st.getNumNulls
+      if (complete(name) && st.hasNonNullValue) {
+        val pt = st.`type`()
+        val logical = pt.getLogicalTypeAnnotation
+        def render(v: Any): Option[String] = (pt.getPrimitiveTypeName, v) match {
+          case (INT32, i: Integer) => logical match {
+            case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
+              Some(java.time.LocalDate.ofEpochDay(i.longValue()).toString)
+            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              Some(java.math.BigDecimal.valueOf(i.longValue(), d.getScale).toPlainString)
+            case _ => Some(i.toString)
+          }
+          case (INT64, l: java.lang.Long) => logical match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              val us = t.getUnit match {
+                case LogicalTypeAnnotation.TimeUnit.MILLIS => l * 1000L
+                case LogicalTypeAnnotation.TimeUnit.MICROS => l.longValue()
+                case LogicalTypeAnnotation.TimeUnit.NANOS => l / 1000L
               }
-            }
+              val secs = Math.floorDiv(us, 1000000L)
+              val nanos = Math.floorMod(us, 1000000L) * 1000L
+              Some(java.time.LocalDateTime.ofEpochSecond(secs,
+                nanos.toInt, java.time.ZoneOffset.UTC)
+                .format(java.time.format.DateTimeFormatter
+                  .ofPattern("uuuu-MM-dd HH:mm:ss.SSSSSS")))
+            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              Some(java.math.BigDecimal.valueOf(l, d.getScale).toPlainString)
+            case _ => Some(l.toString)
           }
+          case (FLOAT, f: java.lang.Float) => Some(f.toString)
+          case (DOUBLE, d: java.lang.Double) => Some(d.toString)
+          case (BOOLEAN, b: java.lang.Boolean) => Some(b.toString)
+          case (BINARY | FIXED_LEN_BYTE_ARRAY,
+              b: org.apache.parquet.io.api.Binary) => logical match {
+            case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
+              Some(b.toStringUsingUTF8)
+            case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
+              Some(new java.math.BigDecimal(
+                new java.math.BigInteger(b.getBytes), d.getScale)
+                .toPlainString)
+            case _ => None // raw binary: no orderable bound
+          }
+          case _ => None
+        }
+        val isFloating = pt.getPrimitiveTypeName == FLOAT ||
+          pt.getPrimitiveTypeName == DOUBLE
+        for {
+          lo <- render(st.genericGetMin())
+          hi <- render(st.genericGetMax())
+          // a NaN min/max (an old parquet writer's poisoned stats) is
+          // not an orderable bound — drop it, and never claim the
+          // column NaN-free
+          if !(isFloating && (lo == "NaN" || hi == "NaN"))
+        } {
+          lower(name) = lo; upper(name) = hi
+          // parquet-mr (PARQUET-1246 lineage; verified on 1.16)
+          // DROPS float/double min/max for any row group holding a
+          // NaN, so bounds present in EVERY row group prove the file
+          // NaN-free — the exact `nan_value_counts = 0` evidence the
+          // reader's NaN guard needs to keep pruning these columns
+          if (isFloating) nans(name) = 0L
         }
       }
-      val complete = seen.filter(_._2 == nBlocks).keySet
-      merged.foreach { case (name, st) =>
-        if (complete(name) && st.isNumNullsSet)
-          nulls(name) = st.getNumNulls
-        if (complete(name) && st.hasNonNullValue) {
-          val pt = st.`type`()
-          val logical = pt.getLogicalTypeAnnotation
-          def render(v: Any): Option[String] = (pt.getPrimitiveTypeName, v) match {
-            case (INT32, i: Integer) => logical match {
-              case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-                Some(java.time.LocalDate.ofEpochDay(i.longValue()).toString)
-              case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                Some(java.math.BigDecimal.valueOf(i.longValue(), d.getScale).toPlainString)
-              case _ => Some(i.toString)
-            }
-            case (INT64, l: java.lang.Long) => logical match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                val us = t.getUnit match {
-                  case LogicalTypeAnnotation.TimeUnit.MILLIS => l * 1000L
-                  case LogicalTypeAnnotation.TimeUnit.MICROS => l.longValue()
-                  case LogicalTypeAnnotation.TimeUnit.NANOS => l / 1000L
-                }
-                val secs = Math.floorDiv(us, 1000000L)
-                val nanos = Math.floorMod(us, 1000000L) * 1000L
-                Some(java.time.LocalDateTime.ofEpochSecond(secs,
-                  nanos.toInt, java.time.ZoneOffset.UTC)
-                  .format(java.time.format.DateTimeFormatter
-                    .ofPattern("uuuu-MM-dd HH:mm:ss.SSSSSS")))
-              case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                Some(java.math.BigDecimal.valueOf(l, d.getScale).toPlainString)
-              case _ => Some(l.toString)
-            }
-            case (FLOAT, f: java.lang.Float) => Some(f.toString)
-            case (DOUBLE, d: java.lang.Double) => Some(d.toString)
-            case (BOOLEAN, b: java.lang.Boolean) => Some(b.toString)
-            case (BINARY | FIXED_LEN_BYTE_ARRAY,
-                b: org.apache.parquet.io.api.Binary) => logical match {
-              case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-                Some(b.toStringUsingUTF8)
-              case d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-                Some(new java.math.BigDecimal(
-                  new java.math.BigInteger(b.getBytes), d.getScale)
-                  .toPlainString)
-              case _ => None // raw binary: no orderable bound
-            }
-            case _ => None
-          }
-          val isFloating = pt.getPrimitiveTypeName == FLOAT ||
-            pt.getPrimitiveTypeName == DOUBLE
-          for {
-            lo <- render(st.genericGetMin())
-            hi <- render(st.genericGetMax())
-            // a NaN min/max (an old parquet writer's poisoned stats) is
-            // not an orderable bound — drop it, and never claim the
-            // column NaN-free
-            if !(isFloating && (lo == "NaN" || hi == "NaN"))
-          } {
-            lower(name) = lo; upper(name) = hi
-            // parquet-mr (PARQUET-1246 lineage; verified on 1.16)
-            // DROPS float/double min/max for any row group holding a
-            // NaN, so bounds present in EVERY row group prove the file
-            // NaN-free — the exact `nan_value_counts = 0` evidence the
-            // reader's NaN guard needs to keep pruning these columns
-            if (isFloating) nans(name) = 0L
-          }
-        }
-      }
-      FileStats(rows, lower.toMap, upper.toMap, nulls.toMap, nans.toMap)
-    } finally r.close()
+    }
+    FileStats(rows, lower.toMap, upper.toMap, nulls.toMap, nans.toMap)
   }
 
   private def writeAvro(path: File, schema: Schema,

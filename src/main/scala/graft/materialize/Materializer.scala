@@ -89,17 +89,17 @@ final class Materializer(wh: Warehouse, targetSchema: String = "main") {
           wh.createTableAs(df, schema, n.name, n.config.partitionBy.toSeq)
         else n.config.incrementalStrategy match {
           case "append" =>
-            val evolve = evolvesSchema(n)
             failOnDrift(n, wh.read(schema, n.name).schema, df.schema)
-            if (evolve)
+            if (evolvesSchema(n))
               rewrite(Incremental.append(
                 syncTarget(n, wh.read(schema, n.name), df), df,
                 evolveSchema = true), schema, n.name, n.config.partitionBy.toSeq)
             else wh.append(df, schema, n.name)
           case "delete+insert" | "merge" =>
             val evolve = evolvesSchema(n)
-            failOnDrift(n, wh.read(schema, n.name).schema, df.schema)
-            val target = syncTarget(n, wh.read(schema, n.name), df)
+            val current = wh.read(schema, n.name)
+            failOnDrift(n, current.schema, df.schema)
+            val target = syncTarget(n, current, df)
             val merged = n.config.partitionBy match {
               case Some(p) if n.config.uniqueKey.isEmpty =>
                 Incremental.deleteInsertByPartition(target, df, p, evolve)
@@ -151,8 +151,10 @@ final class Materializer(wh: Warehouse, targetSchema: String = "main") {
     n.config.onSchemaChange == "append_new_columns" ||
       n.config.onSchemaChange == "sync_all_columns"
 
+  /** `target` is evaluated only under `fail`, so other settings never
+    * read the target for this check. */
   private def failOnDrift(n: ModelNode,
-      target: org.apache.spark.sql.types.StructType,
+      target: => org.apache.spark.sql.types.StructType,
       batch: org.apache.spark.sql.types.StructType): Unit =
     if (n.config.onSchemaChange == "fail")
       require(target.map(f => (f.name, f.dataType)) ==

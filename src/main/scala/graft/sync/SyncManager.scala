@@ -45,9 +45,9 @@ final class SyncManager(config: SyncConfig = SyncConfig(),
       attempt += 1
       last =
         try {
-          val src = source.read(schema, table)
-          val srcCount = if (config.verifyRowCount) src.count() else -1L
-          target.createTableAs(src, schema, table)
+          val srcCount =
+            if (config.verifyRowCount) source.rowCount(schema, table) else -1L
+          target.createTableAs(source.read(schema, table), schema, table)
           val tgtCount =
             if (config.verifyRowCount) target.rowCount(schema, table) else -1L
           if (config.verifyRowCount && srcCount != tgtCount)

@@ -24,6 +24,23 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * so promotes get CHEAPER (the old delete walk is gone); on an object
   * store these become catalog pointer swaps with the same API.
   *
+  * METADATA READS: [[read]] and [[rowCount]] launch no Spark job for a
+  * Spark-written parquet table. `read` takes the table schema from one
+  * data file's footer (the `org.apache.spark.sql.parquet.row.metadata`
+  * key, which is what Spark's own schema inference reads, from the same
+  * file it would open) and passes it to `spark.read.schema`, so the
+  * inference job (a `parallelize`/`collect` even for one footer) never
+  * runs. `rowCount` sums the footer row counts of exactly the files
+  * Spark's file index lists for that read (`inputFiles`). For a
+  * `column=value` partitioned table the footer holds the data columns
+  * only, and Spark infers the partition columns from the directory
+  * names as it always does. Both fall back to Spark inference and a
+  * `count()` for views, Iceberg table directories, an empty directory,
+  * summary files, or a first file with no Spark schema key. Footers are
+  * read in parallel on the driver, or by one job on tables with more
+  * than [[ParquetFooter.JobThreshold]] files, and nothing is cached:
+  * every call reads the files as they are at that moment.
+  *
   * At cluster scale the root becomes an object-store prefix and
   * `saveAsTable`/Iceberg replace the raw Parquet dirs; the API is kept at
   * that altitude so swapping the backend does not touch callers.
@@ -56,7 +73,7 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   def read(schema: String, name: String): DataFrame =
     views.getOrElse((schema, name),
-      spark.read.parquet(tablePath(schema, name)))
+      ParquetFooter.readTable(spark, tablePath(schema, name)))
 
   /** CTAS — CREATE OR REPLACE TABLE (adapters.sql:32-47). Overwrite is
     * atomic-enough locally (Spark writes to a staging dir then renames);
@@ -124,7 +141,13 @@ class Warehouse(val spark: SparkSession, val root: String,
         .foreach(f => Files.deleteIfExists(f))
     }
 
-  def rowCount(schema: String, name: String): Long = read(schema, name).count()
+  def rowCount(schema: String, name: String): Long = {
+    val path = tablePath(schema, name)
+    val footerSchema =
+      if (viewExists(schema, name)) None else ParquetFooter.tableSchema(spark, path)
+    footerSchema.fold(read(schema, name).count())(s =>
+      ParquetFooter.rowCount(spark, spark.read.schema(s).parquet(path).inputFiles))
+  }
 
   /** Table maintenance — the small-files compaction + clustering rewrite
     * every long-lived table needs (incremental appends accumulate tiny
@@ -140,7 +163,7 @@ class Warehouse(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.functions.col
     val df = read(schema, name)
     val files = math.max(1L,
-      (df.count() + targetFileRows - 1) / targetFileRows).toInt
+      (rowCount(schema, name) + targetFileRows - 1) / targetFileRows).toInt
     val arranged =
       if (clusterBy.nonEmpty)
         df.repartitionByRange(files, clusterBy.map(col): _*)
@@ -162,7 +185,7 @@ class Warehouse(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.functions.col
     val df = read(schema, name)
     val files = math.max(1L,
-      (df.count() + targetFileRows - 1) / targetFileRows).toInt
+      (rowCount(schema, name) + targetFileRows - 1) / targetFileRows).toInt
     val arranged = graft.ops.ZOrder.withZValue(df, zOrderBy, bits)
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions(col("__z"))
@@ -287,7 +310,7 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   /** Read an archived version by number (from [[versions]]). */
   def readVersion(schema: String, name: String, version: Int): DataFrame =
-    spark.read.parquet(
+    ParquetFooter.readTable(spark,
       versionsDir(schema, name).resolve(version.toString).toString)
 
   /** Change-data-feed between an archived version and a newer state

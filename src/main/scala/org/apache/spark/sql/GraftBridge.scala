@@ -43,6 +43,10 @@ object GraftBridge {
       .nonEmpty)
   }
 
+  /** The session's Hadoop configuration, as Spark's own file reads use. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Whether `key` was EXPLICITLY set on this session (SQLConf's
     * settings map holds only set values; `conf.getOption` returns
     * registered defaults too, so it cannot distinguish "user chose the

@@ -82,6 +82,27 @@ class CacheSyncSpec extends AnyFunSuite {
     assert(rs.map(_.status) == Seq("failed")) // b never attempted
   }
 
+  test("sync: a target that silently drops rows fails the count check") {
+    import org.apache.spark.sql.{DataFrame, SaveMode}
+    import org.apache.spark.sql.functions.col
+    val src = new Warehouse(spark, Files.createTempDirectory("ws3").toString)
+    src.createTableAs(Tables.load(spark, sf, "nation"), "main", "nation")
+    // a copy that loses one row without raising: counts read from the
+    // target's footers must still expose it
+    val lossy = new Warehouse(spark,
+        Files.createTempDirectory("wd3").toString) {
+      override def createTableAs(df: DataFrame, schema: String,
+          name: String, partitionBy: Seq[String], mode: SaveMode): Unit =
+        super.createTableAs(df.filter(col("n_nationkey") =!= 0), schema,
+          name, partitionBy, mode)
+    }
+    val sm = new SyncManager(sleep = _ => ())
+    val r = sm.syncTable(src, lossy, "main", "nation")
+    assert(r.status == "failed" && r.attempts == 3)
+    assert(r.sourceRows == 25 && r.targetRows == 24)
+    assert(r.error.exists(_.contains("row count mismatch")))
+  }
+
   test("cache ingest downgrades complex columns to JSON text " +
     "(source_cache.py:224-308 VARIANT wrap)") {
     import spark.implicits._
