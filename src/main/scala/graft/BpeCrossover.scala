@@ -71,14 +71,8 @@ object BpeCrossover {
     val rounds = args.lift(1).map(_.toInt).getOrElse(8)
     val repeats = args.lift(2).map(_.toInt).getOrElse(2)
     require(nWords < 16777216L, "word ids must stay below 64^4")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = EngineDefaults.cpus
+    val spark = EngineDefaults.local(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nDocs = math.max(nWords / 2, 1000L) // 8 slots -> ~4x coverage

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model.{ModelConfig, ModelNode}
 import graft.planner.{MemoryGuard, QueryAnalyzer}
 import graft.telemetry.{Console, CostModel, RunSummary}
@@ -31,13 +29,12 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val root = sys.env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse")
-    lazy val spark = EngineDefaults.tune(SparkSession.builder()
-      .appName("graft-cli")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // SPARK_MASTER points the CLI at a deployment's cluster instead
+    lazy val spark = {
+      val b = EngineDefaults.local(EngineDefaults.cpus, 8).appName("graft-cli")
+      sys.env.get("SPARK_MASTER").foreach(b.master)
+      b.getOrCreate()
+    }
     // summary/savings/version/help read files only — no Spark needed
     val needsSpark =
       Set("explain", "sync", "verify", "cache", "health", "status", "stats")

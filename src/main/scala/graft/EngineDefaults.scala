@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive session defaults shared by every engine entry point
-  * (Bench, Verify, Cli, the dev tools, and [[GraftSession]] itself).
+  * (Bench, Verify, Cli, the dev tools, the tests, and [[GraftSession]]
+  * itself).
   *
   * Round 17 measured a 1-task collapse on CPU-dense small-byte reduce
   * stages (t_pmi's scoring stage: 1 task / 1.7 s over a 1 MB shuffle
@@ -15,17 +16,20 @@ import org.apache.spark.sql.SparkSession
   * bytes/64 KB still bounds task count. The fix lived only in the bench
   * harness in r17 — an engine problem patched in the benchmark (r17
   * verdict "What's wrong #2"); it is an ENGINE default now, applied by
-  * every session builder here and seeded onto externally-built sessions
-  * by the [[GraftSession]] constructor (never overriding an explicit
-  * deployment setting). `SPARK_GRAFT_MINPART` overrides the default,
-  * same knob the bench has carried since r17. */
+  * [[tune]] and seeded onto externally-built sessions by the
+  * [[GraftSession]] constructor (never overriding an explicit
+  * deployment setting).
+  *
+  * [[local]] is the one place a session builder is made: every main and
+  * every test starts from it, so master, shuffle sizing, time zone and
+  * UI are set the same way everywhere. [[cpus]] is its default core
+  * count. */
 object EngineDefaults {
 
   val MinPartKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  /** AQE coalescing floor: env-overridable, 64 KB default (see above). */
-  def minPartitionSize: String =
-    sys.env.getOrElse("SPARK_GRAFT_MINPART", "64k")
+  /** AQE coalescing floor: 64 KB (see above). */
+  val minPartitionSize: String = "64k"
 
   /** Whole-stage-codegen class cache entries
     * (`spark.sql.codegen.cache.maxEntries`, STATIC conf — builder path
@@ -41,14 +45,17 @@ object EngineDefaults {
     * by the JVM's reserved code cache, which build.sbt raises to 512 MB
     * for exactly this reason (240 MB default + thousands of live
     * generated classes = silent cold-code flushing; measured as a 3x
-    * full-suite-only regression on d_dedup_substring). Env-overridable
-    * via SPARK_GRAFT_CODEGEN_CACHE. A/B at equal host sentinels:
-    * full-suite 87.1 s (100) vs 72.1 s (4096), sentinel2 mid-run
-    * 0.42-0.55 s vs 0.22-0.27 s — the delta is per-query Janino
-    * recompilation, which a long-lived many-query session should pay
-    * once, not once per eviction cycle. */
-  def codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
+    * full-suite-only regression on d_dedup_substring). A/B at equal
+    * host sentinels: full-suite 87.1 s (100) vs 72.1 s (4096),
+    * sentinel2 mid-run 0.42-0.55 s vs 0.22-0.27 s — the delta is
+    * per-query Janino recompilation, which a long-lived many-query
+    * session should pay once, not once per eviction cycle. */
+  val codegenCacheEntries: String = "4096"
+
+  /** Local cores for [[local]]: `SPARK_GRAFT_CPUS` when set, else every
+    * processor the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Initial (pre-coalesce) reducer partition count: start every
     * exchange at max(8 x cores, static shuffle partitions) and let AQE
@@ -58,8 +65,21 @@ object EngineDefaults {
   def initialPartitionNum(cores: Int, shufflePartitions: Int): Int =
     math.max(8 * cores, shufflePartitions)
 
-  /** Apply the shared scale confs to a session builder. Call sites keep
-    * their own master / shuffle-partition / timezone choices. */
+  /** The session builder for a `local[cpus]` engine: static shuffle
+    * partitions, the AQE initial partition count from
+    * [[initialPartitionNum]], UTC session time, no UI, then [[tune]].
+    * Callers add only what is theirs (an app name, a master override, a
+    * cleaner interval) before `getOrCreate()`. */
+  def local(cpus: Int, shufflePartitions: Int): SparkSession.Builder =
+    tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        initialPartitionNum(cpus, shufflePartitions).toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+
+  /** Apply the shared scale confs to a session builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

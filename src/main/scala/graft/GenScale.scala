@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -71,14 +71,8 @@ object GenScale {
     require(replicas <= 10,
       s"replicas=$replicas > 10: chain multiple x10 runs instead " +
         "(token-suffix disjointness assumes single-digit indices)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = EngineDefaults.cpus
+    val spark = EngineDefaults.local(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // effective offset: next power of 10 above every source key (see

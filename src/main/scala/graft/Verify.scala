@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,26 +12,16 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev-only (driver sets neither): SPARK_GRAFT_SHUFFLE decouples
+    // dev-only (driver never sets it): SPARK_GRAFT_SHUFFLE decouples
     // shuffle partitions from cores, as in Bench — the house sizing
     // rule needs >cores partitions at the fourth decade (e.g. q9's
     // shuffled-hash build of 150 M orders / 32 partitions exceeds any
-    // reasonable heap; /128 fits)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Same AQE auto-sizing as Bench: high initial reducer count, AQE
-    // coalesces toward the 64 MB advisory — the sizing rule without a
-    // hand-set knob (see Bench.scala for the rationale + measurements)
-    val initial = sys.env.getOrElse("SPARK_GRAFT_INITIAL",
-      EngineDefaults.initialPartitionNum(cpus.toInt, shuffle.toInt).toString)
-    val spark = EngineDefaults.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initial)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // reasonable heap; /128 fits). `local` adds Bench's AQE auto-sizing
+    // (see Bench.scala for the rationale + measurements).
+    val cpus = EngineDefaults.cpus
+    val shuffle =
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse(cpus)
+    val spark = EngineDefaults.local(cpus, shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-only: multi-file result dumps for row-giant sf100 legs — the

@@ -1802,8 +1802,7 @@ object IcebergWriter {
       case other => sys.error(s"no Iceberg mapping for Spark type $other")
     }
 
-  /** Recursive local delete (abandoned-commit cleanup; also reused by
-    * the IceProf dev tool's temp-table teardown). */
+  /** Recursive local delete (abandoned-commit cleanup). */
   private[graft] def deleteRecursively(f: File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

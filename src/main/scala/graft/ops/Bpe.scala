@@ -211,7 +211,7 @@ object Bpe {
     * LITERALS. The r17 shape checkpointed the 1-row top on the cluster
     * and `crossJoin(broadcast(top))`-ed it into the next dictionary —
     * a broadcast-exchange job per round on top of the aggregate job
-    * (JobCensus: t_bpe_train 21 jobs for 6 rounds; literals remove
+    * (job census: t_bpe_train 21 jobs for 6 rounds; literals remove
     * every per-round broadcast). The superseded dictionary's blocks
     * are dropped only after its successor has materialized (a lazily-
     * checkpointed relation reads its predecessor's blocks at

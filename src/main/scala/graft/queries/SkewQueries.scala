@@ -27,13 +27,13 @@ import graft.ops.Skew
   * where the 8×-replicated dim would otherwise broadcast — and hash,
   * not merge, because salting a sort-merge join poisons its sort (the
   * salt becomes a tie-breaking second key and the prefix-tied
-  * comparisons fall into full-record compares; SkewBench measured the
-  * stage CPU doubling), while the hash join is sortless and its
+  * comparisons fall into full-record compares; the SkewBench A/B
+  * measured the stage CPU doubling), while the hash join is sortless and its
   * replicated dim builds a tiny per-partition map. Row results are
   * identical to the unsalted join by construction — the oracle is a
   * plain (unsalted) SQL join. The salted-vs-unsalted straggler and
-  * spill delta is measured by [[graft.SkewBench]] and recorded in
-  * SCALING.md.
+  * spill delta was measured by the SkewBench dev tool (last present at
+  * commit f0feb50) and is recorded in SCALING.md.
   *
   * Money discipline: revenue accumulates exact scaled-integer cents
   * products (the house c2 recipe — see [[TpchQueries]]), rescaled once.

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** Run-session recorder — port of the reference's run summary
@@ -28,7 +28,8 @@ final case class ModelRun(
 final class RunSummary(path: String,
     clock: () => Long = () => System.currentTimeMillis()) {
 
-  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+  import RunSummary.{loadSessions, mapper}
+
   private val startedAt = clock()
   // replace-key for re-persists: two sessions started in the same
   // millisecond must not overwrite each other
@@ -52,7 +53,7 @@ final class RunSummary(path: String,
 
   /** Append-or-replace this session in the persisted ledger. */
   def persist(): Unit = {
-    val prior = RunSummary.loadSessions(mapper, path)
+    val prior = loadSessions(path)
       .filterNot(_.path("session_id").asText("") == sessionId)
     val obj = Map("sessions" -> (prior.map(mapper.convertValue(_,
       classOf[java.util.Map[String, Object]])) :+
@@ -76,53 +77,41 @@ final class RunSummary(path: String,
 
   /** Last persisted session's model count (history reader analog). */
   def loadModelCount(): Int =
-    RunSummary.loadSessions(mapper, path).lastOption
+    loadSessions(path).lastOption
       .map(_.path("models").size()).getOrElse(0)
 }
 
 object RunSummary {
-  private[telemetry] def loadSessions(mapper: ObjectMapper, path: String)
-      : Seq[com.fasterxml.jackson.databind.JsonNode] = {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  private def loadSessions(path: String): Seq[JsonNode] = {
     if (!Files.exists(Paths.get(path))) return Nil
     val root = mapper.readTree(Files.readString(Paths.get(path)))
     if (root.has("sessions")) root.path("sessions").elements().asScala.toSeq
     else Seq(root) // legacy single-session file
   }
 
+  /** One persisted `models` entry (the shape `sessionObj` writes). */
+  private def decodeRun(m: JsonNode): ModelRun = ModelRun(
+    m.path("name").asText(),
+    m.path("venue").asText(),
+    m.path("duration_seconds").asDouble(),
+    m.path("rows").asLong(),
+    m.path("status").asText(),
+    m.path("reason").asText(""),
+    m.path("spill_bytes").asLong(0L))
+
+  private def runsOf(session: JsonNode): Seq[ModelRun] =
+    session.path("models").elements().asScala.map(decodeRun).toSeq
+
   /** All persisted model runs across sessions — the local query-history
     * analog of the reference's warehouse QUERY_HISTORY harvest
     * (metadata.py:109-232). */
-  def loadAllRuns(path: String): Seq[ModelRun] = {
-    val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
-    loadSessions(mapper, path).flatMap { s =>
-      s.path("models").elements().asScala.map { m =>
-        ModelRun(
-          m.path("name").asText(),
-          m.path("venue").asText(),
-          m.path("duration_seconds").asDouble(),
-          m.path("rows").asLong(),
-          m.path("status").asText(),
-          m.path("reason").asText(""),
-          m.path("spill_bytes").asLong(0L))
-      }
-    }
-  }
+  def loadAllRuns(path: String): Seq[ModelRun] =
+    loadSessions(path).flatMap(runsOf)
 
   /** The last persisted session (cli.py `cmd_summary` reads this). */
-  def loadLastSession(path: String): Option[(Long, Seq[ModelRun])] = {
-    val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
-    loadSessions(mapper, path).lastOption.map { s =>
-      val models = s.path("models").elements().asScala.map { m =>
-        ModelRun(
-          m.path("name").asText(),
-          m.path("venue").asText(),
-          m.path("duration_seconds").asDouble(),
-          m.path("rows").asLong(),
-          m.path("status").asText(),
-          m.path("reason").asText(""),
-          m.path("spill_bytes").asLong(0L))
-      }.toSeq
-      (s.path("started_at").asLong(), models)
-    }
-  }
+  def loadLastSession(path: String): Option[(Long, Seq[ModelRun])] =
+    loadSessions(path).lastOption
+      .map(s => (s.path("started_at").asLong(), runsOf(s)))
 }

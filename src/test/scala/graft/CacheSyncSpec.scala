@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cache.{CacheConfig, SourceCache}
@@ -12,11 +11,7 @@ import graft.telemetry.{CostModel, SavingsTracker}
 import graft.warehouse.Warehouse
 
 class CacheSyncSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{ModelConfig, ModelNode}
@@ -11,11 +10,7 @@ import graft.model.{ModelConfig, ModelNode}
   * (reference tests/test_auto_router.py:35-266 drive `AutoRouter.explain`,
   * which `icebreaker explain` renders, cli.py:490-520). */
 class CliSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.001"
 

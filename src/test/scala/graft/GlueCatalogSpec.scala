@@ -8,7 +8,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.materialize.{GlueCatalog, IcebergWriter, SigV4}
@@ -30,12 +29,7 @@ import graft.materialize.{GlueCatalog, IcebergWriter, SigV4}
   *
   * Only real AWS endpoints remain environment-waived (zero egress). */
 class GlueCatalogSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   // ---------------------------------------------------------- SigV4
   // The complete signing example published in the AWS General

@@ -7,7 +7,6 @@ import java.nio.file.Files
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,12 +26,7 @@ import graft.materialize.{IcebergMetadata, IcebergSingleValue, IcebergTable, Ice
   * non-default partition_spec_id never prune, and nested partition
   * sources resolve to dotted paths (never a wrong top-level match). */
 class IcebergForeignSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   // ---------------------------------------------------------------- //
   //  Appendix D codec round-trip

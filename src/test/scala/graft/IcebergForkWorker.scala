@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.materialize.IcebergWriter
 
 /** Test-support main FORKED AS A SEPARATE JVM by IcebergWriterSpec's
@@ -14,12 +12,7 @@ import graft.materialize.IcebergWriter
   * (the in-JVM lock cannot serialize two processes). */
 object IcebergForkWorker {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineDefaults.local(2, 2).getOrCreate()
     // arm the commit-race hook from THIS process's env — the
     // production commit path only reads the in-process var, so env
     // vars on a deployment can never reach it

@@ -8,7 +8,6 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.materialize.{IcebergRestCatalog, IcebergTable, IcebergWriter}
@@ -24,12 +23,7 @@ import graft.materialize.{IcebergRestCatalog, IcebergTable, IcebergWriter}
   * the protocol: served from 127.0.0.1 the protocol is fully
   * testable. */
 class IcebergRestCatalogSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -6,7 +6,6 @@ import java.nio.file.Files
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,12 +18,7 @@ import graft.materialize.{IcebergMetadata, IcebergTable}
   * table location so the reader's relocation rule is exercised
   * (reference capability: connections.py:990-1055). */
 class IcebergSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val manifestListSchema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_file","fields":[

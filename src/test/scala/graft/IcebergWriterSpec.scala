@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.materialize.{IcebergTable, IcebergWriter}
@@ -12,12 +11,7 @@ import graft.materialize.{IcebergTable, IcebergWriter}
   * deleteInsert (the reference's incremental strategy as one
   * snapshot), with time travel across every commit. */
 class IcebergWriterSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private def ids(dir: String): Seq[Long] =
     IcebergTable.read(spark, dir).select("id")
@@ -845,7 +839,6 @@ class IcebergWriterSpec extends AnyFunSuite {
       .filter(l => l.nonEmpty && !l.startsWith("#"))
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")).toSeq
     val cmd = Seq("java", "-cp", cp) ++ opens ++ Seq("-Xmx1500m",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-Duser.language=en", "-Duser.country=US",
       "graft.IcebergForkWorker", dir)
     val pb = new ProcessBuilder(cmd: _*)

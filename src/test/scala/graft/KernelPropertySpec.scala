@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -16,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Column-HOF executable specs the kernels replaced. Deterministic:
   * every sample is drawn with a fixed per-index seed. */
 class KernelPropertySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val gen: Gen[String] = {
     val special = Gen.oneOf(

@@ -12,12 +12,7 @@ import graft.model.{ContractColumn, Dag, ModelConfig, ModelNode}
 import graft.warehouse.Warehouse
 
 class MaterializerSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private def freshWh(): Warehouse =
     new Warehouse(spark, Files.createTempDirectory("graft_wh").toString)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,12 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * This spec locks the two legs the rule stands on.
   */
 class MoneyPredicateSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   /** The shared cents recipe (CoreQueries.c2 / TpchQueries.c2). */
   private def c2(c: org.apache.spark.sql.Column) =

@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Multimodal, Similarity}
 
 class OpsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -813,12 +807,11 @@ class OpsSpec extends AnyFunSuite {
       (5L, 1L)).toDF("src", "dst")
     val byWindow = graft.ops.Graph.pageRank(g, iterations = 4).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    spark.conf.set(graft.ops.Graph.OutdegreeStrategyKey, "join")
-    try {
+    TestSpark.withConf(graft.ops.Graph.OutdegreeStrategyKey -> "join") {
       val byJoin = graft.ops.Graph.pageRank(g, iterations = 4).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(byJoin == byWindow, s"join=$byJoin window=$byWindow")
-    } finally spark.conf.unset(graft.ops.Graph.OutdegreeStrategyKey)
+    }
   }
 
   test("pack manifest: offsets are the ordered cumsum, bucket-invariant") {
@@ -942,14 +935,13 @@ class OpsSpec extends AnyFunSuite {
       .unionByName(Seq((90001L, "lower lower lower"), (90002L, "low low"),
         (90003L, "newest")).toDF("doc_id", "text"), allowMissingColumns = true)
       .select("doc_id", "text")
-    def table(minWords: String): Seq[(Int, String, String, Long)] = {
-      spark.conf.set(graft.ops.Bpe.IncrementalMinWordsKey, minWords)
-      try graft.ops.Bpe.trainMerges(docs, "text", rounds = 5)
-        .orderBy("merge_rank").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-          r.getLong(3))).toSeq
-      finally spark.conf.unset(graft.ops.Bpe.IncrementalMinWordsKey)
-    }
+    def table(minWords: String): Seq[(Int, String, String, Long)] =
+      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
+        graft.ops.Bpe.trainMerges(docs, "text", rounds = 5)
+          .orderBy("merge_rank").collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+            r.getLong(3))).toSeq
+      }
     val recount = table(minWords = Long.MaxValue.toString)
     val incremental = table(minWords = "0")
     assert(recount == incremental, s"recount=$recount incr=$incremental")
@@ -967,12 +959,11 @@ class OpsSpec extends AnyFunSuite {
     // shape the incremental strategy exists for (its full-size 1 M+
     // word A/B runs via `runMain graft.BpeCrossover`, SCALING.md r9)
     val docs = graft.BpeCrossover.syntheticCorpus(spark, 20000L, 10000L)
-    def table(minWords: String): Seq[String] = {
-      spark.conf.set(graft.ops.Bpe.IncrementalMinWordsKey, minWords)
-      try graft.ops.Bpe.trainMerges(docs, "text", rounds = 6)
-        .orderBy("merge_rank").collect().map(_.mkString("|")).toSeq
-      finally spark.conf.unset(graft.ops.Bpe.IncrementalMinWordsKey)
-    }
+    def table(minWords: String): Seq[String] =
+      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
+        graft.ops.Bpe.trainMerges(docs, "text", rounds = 6)
+          .orderBy("merge_rank").collect().map(_.mkString("|")).toSeq
+      }
     val recount = table(Long.MaxValue.toString)
     val incremental = table("0")
     assert(recount == incremental, s"recount=$recount incr=$incremental")
@@ -987,15 +978,14 @@ class OpsSpec extends AnyFunSuite {
     // count and squeezed whatever ran after training.
     val docs = Tables.load(spark, sf, "documents").limit(300)
     for (minWords <- Seq(Long.MaxValue.toString, "0")) {
-      spark.conf.set(graft.ops.Bpe.IncrementalMinWordsKey, minWords)
-      try {
+      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val rounds = 4
         graft.ops.Bpe.trainMerges(docs, "text", rounds).collect()
         val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
         assert(added.size <= rounds,
           s"minWords=$minWords leaked ${added.size} cached RDDs (> $rounds tops)")
-      } finally spark.conf.unset(graft.ops.Bpe.IncrementalMinWordsKey)
+      }
     }
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape audits over the WHOLE query inventory — the 100-TB
@@ -12,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * accidental Cartesian products anywhere.
   */
 class PlanAuditSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.001"
 

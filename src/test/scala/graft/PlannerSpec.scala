@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{ModelConfig, ModelNode}
@@ -12,10 +11,7 @@ import graft.planner._
   * (reference tests/test_auto_router.py:35-266, tests/test_traffic.py:
   * 13-140, tests/test_state_metadata.py:16-94; FIXTURES.md §A). */
 class PlannerSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private def node(name: String, cfg: ModelConfig = ModelConfig(),
       deps: Seq[String] = Nil) = ModelNode(name, cfg, deps)(_ => null)
@@ -202,6 +198,26 @@ class PlannerSpec extends AnyFunSuite {
     assert(dSlow.venue == Venue.Cloud && dSlow.gate.contains("COMPLEXITY"))
     val dFast = tc.decide(spark, node("fast_model"), "SELECT 1")
     assert(dFast.venue == Venue.Local)
+  }
+
+  test("legacy single-session ledger reads through both loaders") {
+    import graft.telemetry.{ModelRun, RunSummary}
+    // before the `sessions` history the ledger was ONE session object
+    // with `models` at its top level; old warehouses still carry it
+    val path = Files.createTempDirectory("graft_legacy")
+      .resolve("run_summary.json").toString
+    Files.writeString(java.nio.file.Paths.get(path),
+      """{"started_at": 1234, "models": [
+        | {"name": "a", "venue": "local", "duration_seconds": 1.5,
+        |  "rows": 7, "status": "success"},
+        | {"name": "b", "venue": "cloud", "duration_seconds": 2.0,
+        |  "rows": 0, "status": "error", "reason": "boom",
+        |  "spill_bytes": 9}]}""".stripMargin)
+    val expected = Seq(ModelRun("a", "local", 1.5, 7, "success"),
+      ModelRun("b", "cloud", 2.0, 0, "error", "boom", 9))
+    assert(RunSummary.loadAllRuns(path) == expected)
+    assert(RunSummary.loadLastSession(path) == Some((1234L, expected)))
+    assert(new RunSummary(path).loadModelCount() == 2)
   }
 
   test("plan-walk sees inside CTE bodies") {

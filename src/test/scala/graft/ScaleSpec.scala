@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,43 +14,45 @@ import graft.warehouse.Warehouse
   * keys; bucketed tables join without exchanges; the native rolling-hash
   * expression matches its spec under codegen. */
 class ScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffles
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Join tests run with broadcast off, so the joins shuffle. */
+  private def noBroadcast[T](body: => T): T =
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
   test("salted join returns exactly the plain join's rows") {
-    val o = Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val c = Tables.load(spark, sf, "customer")
-      .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-    val plain = o.join(c, Seq("o_custkey")).collect().toSet
-    val salted = Skew.saltedJoin(o, c, Seq("o_custkey"), 8).collect().toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
+    noBroadcast {
+      val o = Tables.load(spark, sf, "orders")
+        .select(col("o_orderkey"), col("o_custkey"))
+      val c = Tables.load(spark, sf, "customer")
+        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
+      val plain = o.join(c, Seq("o_custkey")).collect().toSet
+      val salted = Skew.saltedJoin(o, c, Seq("o_custkey"), 8).collect().toSet
+      assert(salted == plain)
+      assert(plain.nonEmpty)
+    }
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = new Warehouse(spark,
-      Files.createTempDirectory("graft_bkt").toString)
-    val o = Tables.load(spark, sf, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val l = Tables.load(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    wh.createBucketedTable(o, "main", "orders_b", Seq("o_orderkey"), 4)
-    wh.createBucketedTable(l, "main", "lines_b", Seq("o_orderkey"), 4)
-    val joined = wh.readBucketed("main", "orders_b")
-      .join(wh.readBucketed("main", "lines_b"), Seq("o_orderkey"))
-    assert(joined.count() > 0)
-    val shuffles = joined.queryExecution.executedPlan.collect {
-      case e: ShuffleExchangeExec => e
+    noBroadcast {
+      val wh = new Warehouse(spark,
+        Files.createTempDirectory("graft_bkt").toString)
+      val o = Tables.load(spark, sf, "orders")
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+      val l = Tables.load(spark, sf, "lineitem")
+        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
+      wh.createBucketedTable(o, "main", "orders_b", Seq("o_orderkey"), 4)
+      wh.createBucketedTable(l, "main", "lines_b", Seq("o_orderkey"), 4)
+      val joined = wh.readBucketed("main", "orders_b")
+        .join(wh.readBucketed("main", "lines_b"), Seq("o_orderkey"))
+      assert(joined.count() > 0)
+      val shuffles = joined.queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(shuffles.isEmpty, s"expected no exchanges, got ${shuffles.length}")
     }
-    assert(shuffles.isEmpty, s"expected no exchanges, got ${shuffles.length}")
   }
 
   test("min rolling hash: known value, null under k, codegen path") {

@@ -1,0 +1,62 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The single session factory: every session in the code base is built
+  * by [[EngineDefaults.local]], and specs scope their own confs on the
+  * shared test session with [[TestSpark.withConf]]. */
+class SessionFactorySpec extends AnyFunSuite {
+  lazy val spark = TestSpark.session
+
+  test("the shared test session carries the factory's confs") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") ==
+      EngineDefaults.initialPartitionNum(4, 4).toString)
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(conf.get(EngineDefaults.MinPartKey) ==
+      EngineDefaults.minPartitionSize)
+  }
+
+  test("withConf restores a set key and unsets an absent one, " +
+    "also when the body throws") {
+    val set = "spark.graft.test.withconf.set"
+    val absent = "spark.graft.test.withconf.absent"
+    spark.conf.set(set, "before")
+    try {
+      for (fail <- Seq(false, true)) {
+        var inside = Seq.empty[Option[String]]
+        val body = scala.util.Try(TestSpark.withConf(
+            set -> "inside", absent -> "inside") {
+          inside = Seq(set, absent).map(spark.conf.getOption)
+          if (fail) throw new IllegalStateException("body failed")
+        })
+        assert(inside == Seq(Some("inside"), Some("inside")))
+        assert(body.isFailure == fail)
+        assert(spark.conf.get(set) == "before")
+        assert(spark.conf.getOption(absent).isEmpty)
+      }
+    } finally spark.conf.unset(set)
+  }
+
+  test("no session builder outside EngineDefaults") {
+    // the needle is assembled so this file does not match itself
+    val needle = Seq("SparkSession", "builder(").mkString(".")
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      val s = Files.walk(Paths.get(d))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val hits = files.filter(f => Files.readString(f).contains(needle))
+      .map(_.toString)
+    assert(hits == Seq("src/main/scala/graft/EngineDefaults.scala"),
+      s"session builders outside EngineDefaults.local: $hits")
+  }
+}

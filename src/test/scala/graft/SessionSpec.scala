@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import graft.model.{ModelConfig, ModelNode}
 import graft.planner.{RoutingReason, Venue}
 
 class SessionSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -268,11 +262,9 @@ class SessionSpec extends AnyFunSuite {
     // force every window buffer row to spill so the model produces real
     // task-metric spill bytes at test scale (the in-memory threshold
     // must drop too, or rows never reach the spillable sorter)
-    val key = "spark.sql.windowExec.buffer.spill.threshold"
-    val keyMem = "spark.sql.windowExec.buffer.in.memory.threshold"
-    spark.conf.set(key, "1")
-    spark.conf.set(keyMem, "1")
-    val gs = try {
+    val gs = TestSpark.withConf(
+        "spark.sql.windowExec.buffer.spill.threshold" -> "1",
+        "spark.sql.windowExec.buffer.in.memory.threshold" -> "1") {
       val gs = new GraftSession(spark, root)
       val node = ModelNode("spiller", ModelConfig("table"), Nil)(s => {
         import org.apache.spark.sql.expressions.Window
@@ -282,7 +274,7 @@ class SessionSpec extends AnyFunSuite {
       })
       gs.run(Seq(node))
       gs
-    } finally { spark.conf.unset(key); spark.conf.unset(keyMem) }
+    }
     val runs = graft.telemetry.RunSummary.loadAllRuns(
       s"$root/_graft/run_summary.json")
     assert(runs.exists(r => r.name == "spiller" && r.spillBytes > 0),
@@ -505,14 +497,15 @@ class SessionSpec extends AnyFunSuite {
     "explicit deployment setting") {
     val key = EngineDefaults.MinPartKey
     val root = Files.createTempDirectory("graft_seed").toString
-    // deployment-built session with no explicit floor: seeded
-    spark.conf.unset(key)
-    new GraftSession(spark, root)
-    assert(spark.conf.get(key) == EngineDefaults.minPartitionSize)
-    // an explicit deployment choice survives construction
-    spark.conf.set(key, "2m")
-    new GraftSession(spark, root)
-    assert(spark.conf.get(key) == "2m")
-    spark.conf.unset(key)
+    // the shared session's own floor comes back afterwards
+    TestSpark.withConf(key -> "2m") {
+      // an explicit deployment choice survives construction
+      new GraftSession(spark, root)
+      assert(spark.conf.get(key) == "2m")
+      // deployment-built session with no explicit floor: seeded
+      spark.conf.unset(key)
+      new GraftSession(spark, root)
+      assert(spark.conf.get(key) == EngineDefaults.minPartitionSize)
+    }
   }
 }

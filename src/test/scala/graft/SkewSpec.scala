@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +12,7 @@ import graft.queries.SkewQueries
   * that the derived skew is genuinely hot (~20% of rows on one key)
   * and that the salted plan carries the salt in its join keys. */
 class SkewSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = TestSpark.session
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -69,9 +63,9 @@ class SkewSpec extends AnyFunSuite {
     // shuffled-hash, not sort-merge: salting an SMJ makes the salt a
     // tie-breaking second sort key and the prefix-tied comparisons
     // (few distinct suppliers per partition) fall into full-record
-    // compares — SkewBench measured the stage CPU doubling. The hash
-    // join has no sort to poison; the replicated dim builds a tiny
-    // per-partition map.
+    // compares — the SkewBench A/B (SCALING.md) measured the stage CPU
+    // doubling. The hash join has no sort to poison; the replicated dim
+    // builds a tiny per-partition map.
     assert(p.contains("ShuffledHashJoin"), p)
     assert(p.contains("__graft_salt"), p)
   }

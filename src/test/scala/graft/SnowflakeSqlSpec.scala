@@ -132,12 +132,7 @@ class SnowflakeSqlSpec extends AnyFunSuite {
   // gate (q_sql_corpus); this sweep locks the per-case executability
   // and the text contract.
   test("reference transpiler corpus: all cases execute (≥25, cited)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = TestSpark.session
     Tables.registerAll(spark, "/root/testdata/sf0.001")
     val corpus = graft.queries.SqlCorpus.cases
     assert(corpus.size >= 25, s"corpus shrank to ${corpus.size}")

@@ -16,6 +16,5 @@ while read -r p; do
 done < tools/jdk17-add-opens.txt
 exec java -cp "$CP" $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Duser.language=en -Duser.country=US \
   "$@"
