@@ -143,8 +143,8 @@ final class GlueCatalog(region: String, accessKey: String,
     require(loc.nonEmpty,
       s"glue: ICEBERG table $db.$table carries no metadata_location")
     val md = IcebergMetadata.parse(java.nio.file.Files.readString(
-      java.nio.file.Path.of(stripFileScheme(loc))))
-    (md, stripFileScheme(md.location))
+      java.nio.file.Path.of(IcebergTable.localPath(loc))))
+    (md, IcebergTable.localPath(md.location))
   }
 
   /** Catalog-resolved read: GetTable → metadata document → manifest
@@ -184,9 +184,9 @@ final class GlueCatalog(region: String, accessKey: String,
     val prevLoc = t.path("Parameters").path("metadata_location").asText("")
     require(prevLoc.nonEmpty,
       s"glue: ICEBERG table $db.$table carries no metadata_location")
-    val dir = stripFileScheme(IcebergMetadata.parse(
+    val dir = IcebergTable.localPath(IcebergMetadata.parse(
       java.nio.file.Files.readString(
-        java.nio.file.Path.of(stripFileScheme(prevLoc)))).location)
+        java.nio.file.Path.of(IcebergTable.localPath(prevLoc)))).location)
     IcebergWriter.append(spark, dir, df)
     val hint = java.nio.file.Files.readString(java.nio.file.Path.of(
       dir, "metadata", "version-hint.text")).trim
@@ -229,11 +229,4 @@ final class GlueCatalog(region: String, accessKey: String,
     call("CreateTable", mapper.writeValueAsString(req))
     ()
   }
-
-  private def stripFileScheme(p: String): String =
-    if (p.startsWith("file:"))
-      new java.io.File(URI.create(
-        if (p.startsWith("file:///")) p
-        else "file://" + p.stripPrefix("file:")).getPath).getPath
-    else p
 }

@@ -158,9 +158,9 @@ final class IcebergRestCatalog(baseUri: String,
           s"${ns.mkString(".")}.$table carries neither metadata nor " +
           "metadata-location")
         IcebergMetadata.parse(java.nio.file.Files.readString(
-          java.nio.file.Path.of(stripFileScheme(loc))))
+          java.nio.file.Path.of(IcebergTable.localPath(loc))))
     }
-    (md, stripFileScheme(md.location))
+    (md, IcebergTable.localPath(md.location))
   }
 
   /** Catalog-resolved read: LoadTableResult → manifest chain →
@@ -261,11 +261,4 @@ final class IcebergRestCatalog(baseUri: String,
     post(s"/v1$prefix/namespaces/${nsPath(ns)}/register",
       mapper.writeValueAsString(root))
   }
-
-  private def stripFileScheme(p: String): String =
-    if (p.startsWith("file:"))
-      new java.io.File(URI.create(
-        if (p.startsWith("file:///")) p
-        else "file://" + p.stripPrefix("file:")).getPath).getPath
-    else p
 }

@@ -268,7 +268,7 @@ object IcebergTable {
     * so null-tuple inference must never fire on either: it would skip
     * files full of live rows — the silent-read-empty failure class.
     * Value-op tuple pruning is gated separately inside
-    * [[transformKeeps]] (unknown transforms fall through to keep). */
+    * [[transformRangeKeeps]] (unknown transforms fall through to keep). */
   private def nullFaithful(transform: String): Boolean =
     transform == "identity" ||
       transform.matches("bucket\\[\\d+\\]") ||
@@ -329,45 +329,18 @@ object IcebergTable {
     // value ops can never match a NULL row: an all-null file skips
     if (useStats && f.recordCount > 0L &&
       f.nullCounts.get(p.column).contains(f.recordCount)) return false
-    // NaN blindness guard: float/double bounds EXCLUDE NaN (spec
-    // "Metrics" — writers record NaN rows in `nan_value_counts`
-    // instead), while Spark SQL orders NaN ABOVE every number. So a
-    // NaN row satisfies `> v` / `>= v` for every finite v, and `!= v`
-    // always — the three ops whose bound-driven skip would silently
-    // drop those rows. They may only prune when the file is PROVEN
-    // NaN-free (`nan_value_counts` entry of 0); an absent entry keeps
-    // the file. `<`, `<=`, `=`, `in` stay prunable: NaN satisfies none
-    // of them against a parseable (finite) literal.
-    val nanBlind = {
-      import org.apache.spark.sql.types.{DoubleType, FloatType}
-      (dt == FloatType || dt == DoubleType) &&
-        Set(">", ">=", "!=")(p.op) &&
-        !f.nanCounts.get(p.column).contains(0L)
-    }
-    val boundsOk = !useStats || nanBlind || ((f.lowerBounds.get(p.column),
-        f.upperBounds.get(p.column)) match {
-      case (Some(lo), Some(hi)) =>
-        (cmpTyped(dt, p.value, lo), cmpTyped(dt, p.value, hi)) match {
-          case (Some(vl), Some(vh)) => p.op match {
-            case "=" => vl >= 0 && vh <= 0
-            // only a [v, v] point interval proves every non-null row
-            // equals v (null rows never satisfy != either)
-            case "!=" => !(vl == 0 && vh == 0)
-            case "<" => vl > 0 // some row < value iff lower < value
-            case "<=" => vl >= 0
-            case ">" => vh < 0 // some row > value iff upper > value
-            case ">=" => vh <= 0
-          }
-          case _ => true
-        }
-      case _ => true
-    })
+    val boundsOk = !useStats ||
+      nanBlind(dt, p.op, f.nanCounts.get(p.column).contains(0L)) ||
+      transformRangeKeeps("identity", dt, f.lowerBounds.get(p.column),
+        f.upperBounds.get(p.column), p)
     val partOk = md.specFields.forall { sf =>
       md.partitionSource(sf) match {
         case Some(src) if src == p.column =>
           f.partitionValues.get(sf.name) match {
+            // a file's tuple is the point interval [t, t] of its
+            // transform values
             case Some(t) if t != "__HIVE_DEFAULT_PARTITION__" =>
-              transformKeeps(sf.transform, dt, t, p)
+              transformRangeKeeps(sf.transform, dt, Some(t), Some(t), p)
             case Some(_) =>
               // the null partition: on a NULL-FAITHFUL transform every
               // source row is NULL here, so no value op matches; a
@@ -381,69 +354,22 @@ object IcebergTable {
     boundsOk && partOk
   }
 
-  /** Can a file whose rows all map to partition value `tuple` under
-    * `transform` contain a row satisfying `p`? */
-  private def transformKeeps(transform: String,
-      dt: org.apache.spark.sql.types.DataType, tuple: String,
-      p: ScanPred): Boolean = {
-    import org.apache.spark.sql.types._
-    val bucketN = "bucket\\[(\\d+)\\]".r
-    val truncW = "truncate\\[(\\d+)\\]".r
-    // != skips only when the tuple proves EVERY row equals the
-    // literal — which only an identity tuple can
-    if (p.op == "!=")
-      return transform != "identity" ||
-        !cmpTyped(dt, p.value, tuple).contains(0)
-    def keepByValue(t: Long): Boolean = {
-      // rows' transform value == tuple; the transform is monotonic, so
-      // pred value's transform t bounds which tuples can qualify
-      val tv = scala.util.Try(tuple.toLong).toOption
-      tv.forall { g => p.op match {
-        case "=" => g == t
-        case "<" | "<=" => g <= t
-        case ">" | ">=" => g >= t
-      }}
-    }
-    transform match {
-      case "identity" =>
-        cmpTyped(dt, p.value, tuple).forall { c => p.op match {
-          case "=" => c == 0
-          case "<" => c > 0 // tuple < value
-          case "<=" => c >= 0
-          case ">" => c < 0
-          case ">=" => c <= 0
-        }}
-      case bucketN(n) =>
-        if (p.op != "=") true
-        else bucketOf(dt, p.value, n.toInt).forall(b =>
-          scala.util.Try(tuple.toInt).toOption.forall(_ == b))
-      case truncW(w) => dt match {
-        case IntegerType | LongType =>
-          (for {
-            v <- scala.util.Try(p.value.toLong).toOption
-            g <- scala.util.Try(tuple.toLong).toOption
-          } yield {
-            val width = w.toLong
-            // rows v' ∈ [g, g + width)
-            p.op match {
-              case "=" => v - Math.floorMod(v, width) == g
-              case "<" => g < v
-              case "<=" => g <= v
-              case ">" => g + width - 1 > v
-              case ">=" => g + width - 1 >= v
-            }
-          }).getOrElse(true)
-        case StringType =>
-          if (p.op != "=") true
-          else p.value.take(w.toInt) == tuple
-        case _ => true
-      }
-      case "year" => temporalUnits(dt, p.value, "year").forall(keepByValue)
-      case "month" => temporalUnits(dt, p.value, "month").forall(keepByValue)
-      case "day" => temporalUnits(dt, p.value, "day").forall(keepByValue)
-      case "hour" => temporalUnits(dt, p.value, "hour").forall(keepByValue)
-      case _ => true
-    }
+  /** NaN blindness guard, shared by the file and manifest tiers:
+    * float/double bounds EXCLUDE NaN (spec "Metrics" — writers record
+    * NaN rows in `nan_value_counts` / `contains_nan` instead), while
+    * Spark SQL orders NaN ABOVE every number. So a NaN row satisfies
+    * `> v` / `>= v` for every finite v, and `!= v` always — the three
+    * ops whose bound-driven skip would silently drop those rows. They
+    * may only prune when the tier PROVES the values NaN-free
+    * (`nanFree`: a `nan_value_counts` entry of 0, a `contains_nan`
+    * recorded false); absent evidence keeps. `<`, `<=`, `=`, `in` stay
+    * prunable: NaN satisfies none of them against a parseable (finite)
+    * literal. */
+  private def nanBlind(dt: org.apache.spark.sql.types.DataType,
+      op: String, nanFree: Boolean): Boolean = {
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    (dt == FloatType || dt == DoubleType) &&
+      Set(">", ">=", "!=")(op) && !nanFree
   }
 
   /** Iceberg bucket value of a predicate literal, via the SAME spec
@@ -519,7 +445,12 @@ object IcebergTable {
       case TimestampType | TimestampNTZType => for {
         x <- parseTs(a); y <- parseTs(b)
       } yield x.compareTo(y)
-      case StringType => Some(a.compareTo(b))
+      // Spark's string order — UTF-8 bytes, i.e. code points — which
+      // parquet min/max follow too; `String.compareTo` orders UTF-16
+      // units and puts U+E000..U+FFFF above astral chars
+      case StringType => Some(org.apache.spark.unsafe.types.UTF8String
+        .fromString(a).compareTo(org.apache.spark.unsafe.types.UTF8String
+          .fromString(b)))
       case BooleanType => for {
         x <- scala.util.Try(a.toBoolean).toOption
         y <- scala.util.Try(b.toBoolean).toOption
@@ -575,17 +506,18 @@ object IcebergTable {
 
   /** Materialize the live row set of a chosen file subset: plain
     * distributed scan when the snapshot carries no deletes, the
-    * anti-join pipeline otherwise. */
+    * anti-join pipeline (its row coordinates projected away)
+    * otherwise. */
   private def assemble(spark: SparkSession, md: IcebergMetadata,
       tableDir: String, files: Seq[FileEntry],
       posDeletes: Seq[FileEntry], eqDeletes: Seq[FileEntry]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], md.schema)
-    else if (posDeletes.isEmpty && eqDeletes.isEmpty)
-      readData(spark, md, files, withCoords = false)
-        .select(md.schema.fieldNames.map(org.apache.spark.sql.functions.col(_)): _*)
-    else applyDeletes(spark, md, tableDir, files, posDeletes, eqDeletes)
+    else (if (posDeletes.isEmpty && eqDeletes.isEmpty)
+        readData(spark, md, files, withCoords = false)
+      else applyDeletes(spark, md, tableDir, files, posDeletes, eqDeletes))
+      .select(md.schema.fieldNames.map(org.apache.spark.sql.functions.col(_)): _*)
 
   /** Process-wide cache of parquet footer top-level fields
     * (name, field-id). Iceberg data files are immutable — a path never
@@ -679,7 +611,7 @@ object IcebergTable {
     * the single-scan shape is O(1) plan nodes at any partition count. */
   private val LiteralInjectionMaxTuples = 32
 
-  private[materialize] def readData(spark: SparkSession,
+  private def readData(spark: SparkSession,
       md: IcebergMetadata, files: Seq[FileEntry],
       withCoords: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -807,8 +739,14 @@ object IcebergTable {
     * both sides). The join is LEFT + raise: a rendering drift for any
     * file is a loud per-row error, never silently dropped rows (every
     * live row must resolve its file — the round-12 advisor's
-    * silent-data-loss finding). */
-  private def applyDeletes(spark: SparkSession,
+    * silent-data-loss finding).
+    *
+    * The live rows keep their coordinates: `__graft_file` (the
+    * table-relative raw path) and `__graft_row` (the row ordinal) —
+    * exactly what a positional tombstone names, so [[IcebergWriter]]'s
+    * `deleteWhere`/`deleteInsert` take liveness from here; reads
+    * project the two columns away ([[assemble]]). */
+  private[materialize] def applyDeletes(spark: SparkSession,
       md: IcebergMetadata, tableDir: String, files: Seq[FileEntry],
       posDeletes: Seq[FileEntry], eqDeletes: Seq[FileEntry]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -896,7 +834,7 @@ object IcebergTable {
       // ingested batches
       data = data.join(dels, cond, "left_anti")
     }
-    data.drop("__graft_file", "__graft_row", "__graft_seq", "__graft_pt")
+    data.drop("__graft_seq", "__graft_pt")
   }
 
   /** The exact string Spark's `_metadata.file_path` carries for a local
@@ -962,27 +900,41 @@ object IcebergTable {
     * read directly; foreign BINARY bounds decode per Appendix D —
     * [[IcebergSingleValue]] — against the spec field's transform value
     * type; an undecodable bound reads as None and keeps the
-    * manifest). */
+    * manifest), and the row's `manifest_length`. The one row type of
+    * both sides: [[IcebergWriter]] carries read rows forward verbatim
+    * (raw path, length, spec id, summaries) into the lists it writes. */
   private[graft] final case class ManifestListRow(path: String,
       seq: Long, content: Int, specId: Int,
-      summaries: Option[Seq[IcebergFieldSummary]])
+      summaries: Option[Seq[IcebergFieldSummary]], length: Long)
 
   /** The manifest-list rows of a snapshot — the metadata tier ABOVE the
-    * manifests, read without opening any manifest avro. */
+    * manifests, read without opening any manifest avro. v1 lists (no
+    * `content` / `sequence_number`) decode too, so a v1 table reaches
+    * the writer's loud format-version refusal instead of an avro
+    * schema error. A list without `manifest_length` (the field is
+    * required by the spec; hand-built lists omit it) reads the length
+    * off the resolved file. */
   private[graft] def manifestRows(md: IcebergMetadata,
       snap: IcebergSnapshot, tableDir: String): Seq[ManifestListRow] = {
-    def longOf(r: GenericRecord, f: String): Option[Long] =
-      if (r.getSchema.getField(f) == null) None
-      else Option(r.get(f)).map(_.toString.toLong)
     val stypes = summaryTypes(md)
     readAvro(resolve(snap.manifestList, md, tableDir)).map { r =>
-      ManifestListRow(r.get("manifest_path").toString,
-        longOf(r, "sequence_number").getOrElse(0L),
-        longOf(r, "content").map(_.toInt).getOrElse(0),
-        longOf(r, "partition_spec_id").map(_.toInt).getOrElse(-1),
-        parseFieldSummaries(r, stypes))
+      def num(f: String) = fieldOf(r, f).map(_.toString.toLong)
+      val path = r.get("manifest_path").toString
+      ManifestListRow(path,
+        num("sequence_number").getOrElse(0L),
+        num("content").fold(0)(_.toInt),
+        num("partition_spec_id").fold(-1)(_.toInt),
+        parseFieldSummaries(r, stypes),
+        num("manifest_length").getOrElse(
+          new File(resolve(path, md, tableDir)).length()))
     }
   }
+
+  /** An avro record field that may be absent from the record's schema
+    * (older or foreign layouts) or null: None either way. Reading an
+    * absent field with `get` raises. */
+  private def fieldOf(r: GenericRecord, f: String): Option[AnyRef] =
+    if (r.getSchema.getField(f) == null) None else Option(r.get(f))
 
   /** Ordering value domain of each default-spec field's TRANSFORM —
     * what a binary field-summary bound deserializes as: identity and
@@ -992,7 +944,7 @@ object IcebergTable {
     * plain number. An unresolvable source (foreign/nested/dropped)
     * maps to NullType — its binary bounds decode to None, keeping the
     * manifest. */
-  private[materialize] def summaryTypes(
+  private def summaryTypes(
       md: IcebergMetadata): Seq[org.apache.spark.sql.types.DataType] = {
     import org.apache.spark.sql.types._
     md.specFields.map { sf =>
@@ -1014,33 +966,27 @@ object IcebergTable {
     * write — decode through [[IcebergSingleValue]]. A bound that
     * decodes to nothing records None for THAT field (the range
     * comparator keeps on None), never dropping the rest of the array.
-    * Shared with [[IcebergWriter]]'s carry-forward so rewritten lists
-    * keep their summaries. */
-  private[materialize] def parseFieldSummaries(r: GenericRecord,
+    * Carried forward with the row ([[manifestRows]]), so lists the
+    * writer rewrites keep their summaries. */
+  private def parseFieldSummaries(r: GenericRecord,
       types: Seq[org.apache.spark.sql.types.DataType])
       : Option[Seq[IcebergFieldSummary]] = {
-    if (r.getSchema.getField("partitions") == null) return None
-    Option(r.get("partitions")).flatMap {
+    fieldOf(r, "partitions").flatMap {
       case c: java.util.Collection[_] =>
         val parsed = c.asScala.toSeq.zipWithIndex.map {
           case (g: GenericRecord, i) =>
             val dt = types.lift(i)
               .getOrElse(org.apache.spark.sql.types.NullType)
-            def strOf(f: String): Option[String] =
-              if (g.getSchema.getField(f) == null) None
-              else Option(g.get(f)).flatMap {
-                case s: CharSequence => Some(s.toString)
-                case other => IcebergSingleValue.bytesOf(other)
-                  .flatMap(IcebergSingleValue.decode(dt, _))
-              }
-            val nan =
-              if (g.getSchema.getField("contains_nan") == null) None
-              else Option(g.get("contains_nan"))
-                .map(_.toString.toBoolean)
+            def strOf(f: String): Option[String] = fieldOf(g, f).flatMap {
+              case s: CharSequence => Some(s.toString)
+              case other => IcebergSingleValue.bytesOf(other)
+                .flatMap(IcebergSingleValue.decode(dt, _))
+            }
             Some(IcebergFieldSummary(
-              Option(g.get("contains_null")).exists(_.toString.toBoolean),
+              fieldOf(g, "contains_null").exists(_.toString.toBoolean),
               strOf("lower_bound"), strOf("upper_bound"),
-              containsNan = nan))
+              containsNan = fieldOf(g, "contains_nan")
+                .map(_.toString.toBoolean)))
           case _ => None
         }
         if (parsed.forall(_.isDefined)) Some(parsed.map(_.get)) else None
@@ -1068,23 +1014,13 @@ object IcebergTable {
             md.specFields.zip(ss).forall { case (sf, s) =>
               md.partitionSource(sf) match {
                 case Some(src) if src == p.column =>
-                  // the file-tier NaN guard, one tier up: float/double
-                  // summary bounds exclude NaN, so `>`/`>=`/`!=` may
-                  // skip a manifest only when `contains_nan` is
-                  // RECORDED false (absent field — older writers —
-                  // keeps)
-                  val nanBlind = {
-                    import org.apache.spark.sql.types.{DoubleType, FloatType}
-                    (dt == FloatType || dt == DoubleType) &&
-                      Set(">", ">=", "!=")(p.op) &&
-                      !s.containsNan.contains(false)
-                  }
-                  def rangeKeeps(pp: ScanPred): Boolean = nanBlind ||
-                    ((s.lower, s.upper) match {
-                      case (Some(lo), Some(hi)) =>
-                        transformRangeKeeps(sf.transform, dt, lo, hi, pp)
-                      case _ => true
-                    })
+                  // [[nanBlind]] one tier up: `contains_nan` RECORDED
+                  // false is the NaN-free proof (absent field — older
+                  // writers — keeps)
+                  def rangeKeeps(pp: ScanPred): Boolean =
+                    nanBlind(dt, pp.op, s.containsNan.contains(false)) ||
+                      transformRangeKeeps(sf.transform, dt, s.lower,
+                        s.upper, pp)
                   p.op match {
                     // a null-free partition field proves a null-free
                     // source column across the whole manifest — on a
@@ -1110,20 +1046,25 @@ object IcebergTable {
   }
 
   /** Can ANY file whose transform values lie in `[lo, hi]` contain a
-    * row satisfying `p`? The range twin of [[transformKeeps]]: identity
-    * ranges compare directly; monotonic transforms map the predicate
-    * literal into transform units and range-compare; `bucket[N]` prunes
-    * equality when the literal's bucket falls outside the range
-    * (bucket values are unordered, but membership in [lo, hi] is still
-    * necessary). */
-  private def transformRangeKeeps(transform: String,
-      dt: org.apache.spark.sql.types.DataType, lo: String, hi: String,
-      p: ScanPred): Boolean = {
+    * row satisfying `p`? The one interval test of every pruning tier:
+    * a file's `lower_bounds`/`upper_bounds` are an identity interval, a
+    * manifest's field summary is an interval of transform values, and
+    * a file's partition tuple `t` is the point interval `[t, t]`. A
+    * missing bound keeps. Identity ranges compare directly; monotonic
+    * transforms map the predicate literal into transform units and
+    * range-compare; `bucket[N]` prunes equality when the literal's
+    * bucket falls outside the range (bucket values are unordered, but
+    * membership in [lo, hi] is still necessary). */
+  private[graft] def transformRangeKeeps(transform: String,
+      dt: org.apache.spark.sql.types.DataType, loBound: Option[String],
+      hiBound: Option[String], p: ScanPred): Boolean = {
     import org.apache.spark.sql.types._
+    if (loBound.isEmpty || hiBound.isEmpty) return true
+    val (lo, hi) = (loBound.get, hiBound.get)
     val bucketN = "bucket\\[(\\d+)\\]".r
     val truncW = "truncate\\[(\\d+)\\]".r
-    // != skips a manifest only when the identity summary's [lo, hi]
-    // is the point interval [v, v] — every row in every file equals v
+    // != skips only when the identity [lo, hi] is the point interval
+    // [v, v] — every row equals v (null rows never satisfy != either)
     if (p.op == "!=")
       return transform != "identity" ||
         !(cmpTyped(dt, p.value, lo).contains(0) &&
@@ -1165,14 +1106,24 @@ object IcebergTable {
                   val g = v - Math.floorMod(v, width); l <= g && g <= h
                 case "<" => l < v // a group l holds rows >= l
                 case "<=" => l <= v
-                case ">" => h + width - 1 > v // group h holds rows < h+w
-                case ">=" => h + width - 1 >= v
+                // group h holds rows < h + w; BigInt because the last
+                // group below Long.MaxValue ends past it
+                case ">" => BigInt(h) + width - 1 > v
+                case ">=" => BigInt(h) + width - 1 >= v
               }
             }
           }
         case StringType =>
           if (p.op != "=") true
-          else { val pre = p.value.take(w.toInt); lo <= pre && pre <= hi }
+          else {
+            // W CODE POINTS, as the writer's `substring` cuts — W UTF-16
+            // units would split an astral char
+            val v = p.value
+            val pre = v.substring(0, v.offsetByCodePoints(0,
+              math.min(w.toInt, v.codePointCount(0, v.length))))
+            cmpTyped(dt, lo, pre).forall(_ <= 0) &&
+              cmpTyped(dt, pre, hi).forall(_ <= 0)
+          }
         case _ => true
       }
       case "year" | "month" | "day" | "hour" =>
@@ -1198,9 +1149,6 @@ object IcebergTable {
   private[graft] def snapshotFiles(md: IcebergMetadata,
       snap: IcebergSnapshot, tableDir: String,
       branches: Seq[Seq[ScanPred]] = Nil): Seq[FileEntry] = {
-    def longOf(r: GenericRecord, f: String): Option[Long] =
-      if (r.getSchema.getField(f) == null) None
-      else Option(r.get(f)).map(_.toString.toLong)
     val rows = manifestRows(md, snap, tableDir)
     val manifests = (if (branches.isEmpty) rows
       else rows.filter(r => branches.exists(manifestMayMatch(md, r, _))))
@@ -1208,25 +1156,20 @@ object IcebergTable {
     val out = Seq.newBuilder[FileEntry]
     manifests.foreach { case (mp, mseq) =>
       readAvro(resolve(mp, md, tableDir)).foreach { entry =>
-        val status = Option(entry.get("status")).map(_.toString.toInt)
-          .getOrElse(0)
+        val status = fieldOf(entry, "status").fold(0)(_.toString.toInt)
         val df = entry.get("data_file").asInstanceOf[GenericRecord]
-        val content =
-          if (df.getSchema.getField("content") == null) 0
-          else Option(df.get("content")).map(_.toString.toInt).getOrElse(0)
+        val content = fieldOf(df, "content").fold(0)(_.toString.toInt)
         if (status != 2) { // 2 = DELETED manifest entry (file removed)
           val path = resolve(df.get("file_path").toString, md, tableDir)
-          val seq = longOf(entry, "sequence_number").getOrElse(mseq)
+          val seq = fieldOf(entry, "sequence_number")
+            .fold(mseq)(_.toString.toLong)
           require(content >= 0 && content <= 2,
             s"snapshot ${snap.snapshotId}: unknown file content $content")
-          val eqIds =
-            if (content != 2 || df.getSchema.getField("equality_ids") == null)
-              Seq.empty[Int]
-            else Option(df.get("equality_ids")) match {
-              case Some(l: java.util.Collection[_]) =>
-                l.asScala.map(_.toString.toInt).toSeq
-              case _ => Seq.empty[Int]
-            }
+          val eqIds = fieldOf(df, "equality_ids") match {
+            case Some(l: java.util.Collection[_]) if content == 2 =>
+              l.asScala.map(_.toString.toInt).toSeq
+            case _ => Seq.empty[Int]
+          }
           val pv = partitionTuple(df, md)
           // stats maps in BOTH layouts: this writer's column-name-keyed
           // string-valued avro maps, and the spec's FIELD-ID-keyed
@@ -1242,15 +1185,15 @@ object IcebergTable {
           // remapping it could read another column's bounds.
           val ids = md.fieldIds.getOrElse(md.currentSchemaId, Map.empty)
           def kvPairs(field: String): Seq[(String, Any, Boolean)] =
-            if (df.getSchema.getField(field) == null) Nil
-            else Option(df.get(field)).toSeq.flatMap {
+            fieldOf(df, field).toSeq.flatMap {
               case m: java.util.Map[_, _] =>
                 m.asScala.toSeq.map { case (k, v) =>
                   (k.toString, v: Any, false)
                 }
-              case c: java.util.Collection[_] => c.asScala.toSeq.collect {
-                case g: GenericRecord if g.getSchema.getField("key") != null =>
-                  (g.get("key").toString, g.get("value"): Any, true)
+              case c: java.util.Collection[_] => c.asScala.toSeq.flatMap {
+                case g: GenericRecord => fieldOf(g, "key")
+                  .map(k => (k.toString, g.get("value"): Any, true))
+                case _ => None
               }
               case _ => Nil
             }
@@ -1299,9 +1242,7 @@ object IcebergTable {
             upperBounds = boundMap("upper_bounds"),
             nullCounts = countMap("null_value_counts"),
             recordCount =
-              if (df.getSchema.getField("record_count") == null) 0L
-              else Option(df.get("record_count"))
-                .map(_.toString.toLong).getOrElse(0L),
+              fieldOf(df, "record_count").fold(0L)(_.toString.toLong),
             nanCounts = countMap("nan_value_counts"),
             rawPath = df.get("file_path").toString,
             pathBounds = pathBounds)
@@ -1327,14 +1268,12 @@ object IcebergTable {
   private def partitionTuple(df: GenericRecord,
       md: IcebergMetadata): Map[String, String] = {
     def fromMap: Option[Map[String, String]] =
-      if (df.getSchema.getField("partition_values") == null) None
-      else Option(df.get("partition_values")).collect {
+      fieldOf(df, "partition_values").collect {
         case m: java.util.Map[_, _] =>
           m.asScala.map { case (k, v) => k.toString -> v.toString }.toMap
       }
     def fromStruct: Option[Map[String, String]] =
-      if (df.getSchema.getField("partition") == null) None
-      else Option(df.get("partition")).collect {
+      fieldOf(df, "partition").collect {
         case rec: GenericRecord =>
           rec.getSchema.getFields.asScala.map { fld =>
             fld.name -> Option(rec.get(fld.pos))
@@ -1383,17 +1322,10 @@ object IcebergTable {
     }
   }
 
-  /** Back-compat shim for callers/tests that only want live data files;
-    * raises if the snapshot carries row-level deletes of any kind. */
-  private[materialize] def dataFiles(md: IcebergMetadata,
-      snap: IcebergSnapshot, tableDir: String): Seq[String] = {
-    val entries = snapshotFiles(md, snap, tableDir)
-    require(entries.forall(_.content == 0),
-      s"snapshot ${snap.snapshotId} carries row-level delete files")
-    entries.map(_.path)
-  }
-
-  private def readAvro(path: String): Seq[GenericRecord] = {
+  /** Every record of one avro file (a manifest list or a manifest) —
+    * the only avro decoding of Iceberg metadata in the code base; the
+    * writer reads through it too. */
+  private[materialize] def readAvro(path: String): Seq[GenericRecord] = {
     val reader = DataFileReader.openReader(new File(localPath(path)),
       new GenericDatumReader[GenericRecord]())
     try reader.iterator().asScala.toList finally reader.close()
@@ -1402,8 +1334,9 @@ object IcebergTable {
   /** Iceberg stores ABSOLUTE paths; tables are routinely relocated
     * (copied into a test dir, restored from backup), so re-anchor any
     * path under the original table `location` onto `tableDir` — the
-    * same relocation rule engines apply. */
-  private def resolve(path: String, md: IcebergMetadata,
+    * same relocation rule engines apply. Shared with [[IcebergWriter]],
+    * so both sides resolve `file:` URIs and relocated tables alike. */
+  private[materialize] def resolve(path: String, md: IcebergMetadata,
       tableDir: String): String = {
     val p = localPath(path)
     val loc = localPath(md.location)
@@ -1416,7 +1349,10 @@ object IcebergTable {
     else p
   }
 
-  private def localPath(p: String): String =
+  /** The local filesystem path of a plain path or a `file:` URI
+    * (`file:/x`, `file:///x`) — the one normalizer of the reader, the
+    * writer and the catalogs. */
+  private[materialize] def localPath(p: String): String =
     if (p.startsWith("file:")) new File(java.net.URI.create(
       // normalize file:/x and file:///x; spaces are not expected in
       // fixture paths

@@ -8,10 +8,10 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Offline Iceberg v2 TABLE writer — the write half of the reference's
@@ -47,6 +47,7 @@ import org.apache.spark.sql.types._
   * sequence numbers (1, 2, 3…) so table history is deterministic —
   * commit timestamps advance monotonically from the parent. */
 object IcebergWriter {
+  import IcebergTable.ManifestListRow
 
   /** Create the table at `tableDir` from `df` (snapshot 1).
     * `partitionBy` columns become identity partition fields: data files
@@ -265,7 +266,7 @@ object IcebergWriter {
   def deleteWhere(spark: SparkSession, tableDir: String,
       cond: Column): Long = {
     val (md, prior) = state(tableDir)
-    val tomb = tombstonesOf(spark, tableDir, md, cond)
+    val tomb = tombstonesOf(liveRows(spark, tableDir, md).filter(cond))
     commit(spark, new File(tableDir), md.schema, prior,
       parent = md.currentSnapshot, newData = None,
       tombstones = Some(tomb), operation = "delete",
@@ -285,10 +286,8 @@ object IcebergWriter {
     // maxResultSize); AQE still picks a broadcast join at runtime
     // whenever the distinct key set is actually small
     val keyBatch = df.select(keys.map(col): _*).distinct()
-    val current = withOrdinals(spark, tableDir, md)
-    val tomb = current.join(keyBatch, keys, "left_semi")
-      .select(col("__graft_w_file").as("file_path"),
-        col("__graft_w_pos").as("pos"))
+    val tomb = tombstonesOf(
+      liveRows(spark, tableDir, md).join(keyBatch, keys, "left_semi"))
     commit(spark, new File(tableDir), md.schema, prior,
       parent = md.currentSnapshot, newData = Some(df),
       tombstones = Some(tomb), operation = "overwrite",
@@ -516,23 +515,21 @@ object IcebergWriter {
       (s.timestampMs, s.snapshotId))
     if (kept.size == md.snapshots.size) return
     val reachable = scala.collection.mutable.Set[String]()
+    def reach(path: String): String = {
+      val f = new File(IcebergTable.resolve(path, md, tableDir))
+      require(f.isFile, s"iceberg: reachable file not found: $f")
+      reachable += f.getCanonicalPath
+      f.getPath
+    }
     kept.foreach { s =>
-      val lfile = localFile(s.manifestList, md, tableDir)
-      reachable += lfile.getCanonicalPath
-      val reader = DataFileReader.openReader(lfile,
-        new GenericDatumReader[GenericRecord]())
-      val mans = try reader.iterator().asScala
-        .map(_.get("manifest_path").toString).toList finally reader.close()
-      mans.foreach { mp =>
-        val mf = localFile(mp, md, tableDir)
-        reachable += mf.getCanonicalPath
-        val r2 = DataFileReader.openReader(mf,
-          new GenericDatumReader[GenericRecord]())
-        try r2.iterator().asScala.foreach { e =>
-          val p = e.get("data_file").asInstanceOf[GenericRecord]
-            .get("file_path").toString
-          reachable += localFile(p, md, tableDir).getCanonicalPath
-        } finally r2.close()
+      reach(s.manifestList)
+      IcebergTable.manifestRows(md, s, tableDir).foreach { row =>
+        // every entry is reachable, DELETED-status ones included: a
+        // kept snapshot's manifests still name them
+        IcebergTable.readAvro(reach(row.path)).foreach { e =>
+          reach(e.get("data_file").asInstanceOf[GenericRecord]
+            .get("file_path").toString)
+        }
       }
     }
     // amend the RAW metadata with only the kept snapshots, then drop
@@ -605,96 +602,34 @@ object IcebergWriter {
 
   // ---------------------------------------------------------------- //
 
-  /** Current metadata + the live manifests of the current snapshot,
-    * each with its original (content, sequence-number) list row. */
-  private def state(tableDir: String): (IcebergMetadata, Seq[ManifestRef]) = {
+  /** Current metadata + the manifest-list rows of the current
+    * snapshot, carried forward verbatim by the next commit. */
+  private def state(tableDir: String)
+      : (IcebergMetadata, Seq[ManifestListRow]) = {
     val md = IcebergTable.loadMetadata(tableDir)
     val snap = md.currentSnapshot.getOrElse(
       sys.error(s"$tableDir has no current snapshot"))
-    val lfile = localFile(snap.manifestList, md, tableDir)
-    val reader = DataFileReader.openReader(lfile,
-      new GenericDatumReader[GenericRecord]())
-    val refs = try reader.iterator().asScala
-      .map(refOf(_, IcebergTable.summaryTypes(md))).toList
-      finally reader.close()
-    (md, refs)
+    (md, IcebergTable.manifestRows(md, snap, tableDir))
   }
 
-  private final case class ManifestRef(path: String, content: Int,
-      seq: Long, summaries: Option[Seq[IcebergFieldSummary]] = None,
-      specId: Int = 0)
-
-  /** One manifest-list row → ManifestRef, keeping the row's partition
-    * field summaries so carried-forward manifests don't lose their
-    * manifest-level pruning metadata on rewrite. Foreign lists carry
-    * the spec's BINARY bounds — decoded per Appendix D against the
-    * spec field's transform value domain (`types`); an undecodable
-    * bound carries forward as None (conservative: the reader keeps
-    * boundless fields). */
-  private def refOf(r: GenericRecord,
-      types: Seq[org.apache.spark.sql.types.DataType]): ManifestRef =
-    ManifestRef(r.get("manifest_path").toString,
-      r.get("content").toString.toInt,
-      r.get("sequence_number").toString.toLong,
-      IcebergTable.parseFieldSummaries(r, types),
-      specId = Option(r.get("partition_spec_id"))
-        .map(_.toString.toInt).getOrElse(0))
-
-  /** Live rows with their (table-relative file path, row ordinal) —
-    * the coordinates a positional tombstone names. */
-  private def withOrdinals(spark: SparkSession, tableDir: String,
+  /** Live rows of the current snapshot with the (table-relative file
+    * path, row ordinal) coordinates a positional tombstone names —
+    * the reader's own liveness ([[IcebergTable.applyDeletes]]'s
+    * `__graft_file` / `__graft_row` columns). */
+  private def liveRows(spark: SparkSession, tableDir: String,
       md: IcebergMetadata): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val base = new File(tableDir).getAbsolutePath
-    // IcebergTable.read drops the _metadata coordinates a tombstone
-    // must name, so liveness is recomputed here: read the data files
-    // with ordinals attached, then anti-join prior tombstones away
     val entries = IcebergTable.snapshotFiles(md,
       md.currentSnapshot.get, tableDir)
     require(!entries.exists(_.content == 2),
       "tombstone generation over a table with equality deletes is not " +
         "supported (liveness would need the equality columns re-applied)")
-    val dataEntries = entries.filter(_.content == 0)
-    // exact-rendering map (see IcebergTable.applyDeletes): keyed on the
-    // file's _metadata.file_path form, LEFT join + raise so a rendering
-    // drift surfaces as an error instead of tombstoning nothing
-    val pathMap = spark.createDataFrame(dataEntries.map { f =>
-      val rel = f.path.replaceFirst("^file:/+", "/")
-        .stripPrefix(base + "/")
-      (IcebergTable.metaPathOf(f.path), rel)
-    }).toDF("__graft_w_uri", "__graft_w_file")
-    val data = IcebergTable.readData(spark, md, dataEntries,
-      withCoords = true)
-      .withColumn("__graft_w_uri", col("__graft_meta.file_path"))
-      .withColumn("__graft_w_pos", col("__graft_meta.row_index"))
-      .drop("__graft_meta")
-      .join(broadcast(pathMap), Seq("__graft_w_uri"), "left")
-      .withColumn("__graft_w_file", coalesce(col("__graft_w_file"),
-        raise_error(concat(lit("iceberg: data file not in the " +
-          "snapshot's path map (path rendering drift): "),
-          col("__graft_w_uri")))))
-      .drop("__graft_w_uri")
-    val posFiles = entries.filter(_.content == 1).map(_.path)
-    if (posFiles.isEmpty) data
-    else {
-      val dels = graft.warehouse.ParquetFooter.readTable(spark, posFiles: _*)
-        .select(regexp_replace(regexp_replace(col("file_path"),
-          "^file:/+", "/"),
-          "^" + java.util.regex.Pattern.quote(base + "/"), "")
-          .as("__graft_w_file"),
-          col("pos").cast("long").as("__graft_w_pos"))
-      // no broadcast hint: accumulated tombstone sets scale with
-      // delete history; AQE broadcasts small ones at runtime
-      data.join(dels, Seq("__graft_w_file", "__graft_w_pos"),
-        "left_anti")
-    }
+    IcebergTable.applyDeletes(spark, md, tableDir,
+      entries.filter(_.content == 0), entries.filter(_.content == 1), Nil)
   }
 
-  private def tombstonesOf(spark: SparkSession, tableDir: String,
-      md: IcebergMetadata, cond: Column): DataFrame =
-    withOrdinals(spark, tableDir, md).filter(cond)
-      .select(col("__graft_w_file").as("file_path"),
-        col("__graft_w_pos").as("pos"))
+  private def tombstonesOf(live: DataFrame): DataFrame =
+    live.select(col("__graft_file").as("file_path"),
+      col("__graft_row").as("pos"))
 
   /** Write one snapshot: data files and/or a positional-delete file,
     * their manifests, the manifest list (prior manifests carried
@@ -776,7 +711,7 @@ object IcebergWriter {
   }
 
   private def commit(spark: SparkSession, dir: File, schema: StructType,
-      prior: Seq[ManifestRef], parent: Option[IcebergSnapshot],
+      prior: Seq[ManifestListRow], parent: Option[IcebergSnapshot],
       newData: Option[DataFrame], tombstones: Option[DataFrame],
       operation: String,
       tableMd: Option[IcebergMetadata] = None,
@@ -1014,8 +949,10 @@ object IcebergWriter {
             s"iceberg: concurrent schema change on $base — re-run")
         val effParent = if (conflicted) mdNow.flatMap(_.currentSnapshot)
           else parent
-        val effPrior = if (conflicted) listRefs(mdNow.get, dir.getPath)
-          else prior
+        val effPrior =
+          if (!conflicted) prior
+          else mdNow.get.currentSnapshot.toSeq.flatMap(
+            IcebergTable.manifestRows(mdNow.get, _, dir.getPath))
         // next sequence number: past the document's counter AND past
         // every carried manifest's (a foreign document with an absent
         // or stale last-sequence-number must not produce a commit
@@ -1050,19 +987,18 @@ object IcebergWriter {
               equalityIds = eqIdsOf(layout)) }
         }
         val defSpecId = mdNow.map(_.defaultSpecId).getOrElse(0)
-        var refs = effPrior
-        dataLeg.foreach { case (files, m) =>
-          refs :+= ManifestRef(m.getAbsolutePath, 0, seq,
-            summariesOf(files, spec, schema, layout), specId = defSpecId)
-        }
-        tombLeg.foreach { case (_, m) =>
-          refs :+= ManifestRef(m.getAbsolutePath, 1, seq,
-            specId = defSpecId)
-        }
-        eqLeg.foreach { case (_, m) =>
-          refs :+= ManifestRef(m.getAbsolutePath, 1, seq,
-            specId = defSpecId)
-        }
+        // new manifests: lengths from the files just written (after
+        // any re-key above); carried rows keep the lengths they were
+        // read with
+        val refs = effPrior ++
+          dataLeg.map { case (files, m) =>
+            ManifestListRow(m.getAbsolutePath, seq, 0, defSpecId,
+              summariesOf(files, spec, schema, layout), m.length())
+          } ++
+          (tombLeg ++ eqLeg).map { case (_, m) =>
+            ManifestListRow(m.getAbsolutePath, seq, 1, defSpecId, None,
+              m.length())
+          }
         val mlist = new File(mdir, s"snap-$snapId-$commitId.avro")
         writeManifestList(mlist, refs, spec, schema, layout)
         val tsMs = math.max(System.currentTimeMillis(),
@@ -1142,19 +1078,6 @@ object IcebergWriter {
     tombRows
   }
 
-  /** The current snapshot's manifest-list rows for `md` (refresh path
-    * of a conflicted append). */
-  private def listRefs(md: IcebergMetadata,
-      tableDir: String): Seq[ManifestRef] = {
-    val snap = md.currentSnapshot.getOrElse(return Nil)
-    val lfile = localFile(snap.manifestList, md, tableDir)
-    val reader = DataFileReader.openReader(lfile,
-      new GenericDatumReader[GenericRecord]())
-    try reader.iterator().asScala
-      .map(refOf(_, IcebergTable.summaryTypes(md))).toList
-      finally reader.close()
-  }
-
   private def currentVersion(mdir: File): Int =
     mdir.listFiles().filter(_.getName.endsWith(".metadata.json"))
       .flatMap(f => "^v?(\\d+)".r.findFirstMatchIn(f.getName)
@@ -1174,8 +1097,10 @@ object IcebergWriter {
 
   /** Transform VALUE DOMAIN of one spec field: identity and truncate
     * carry source-typed values, bucket / year / month / day / hour are
-    * spec `int`s. (The writer-side twin of the reader's
-    * [[IcebergTable.summaryTypes]], positional instead of id-resolved.) */
+    * spec `int`s — the domains the reader decodes these values in
+    * (`IcebergTable.summaryTypes`). Resolved through the write layout,
+    * and loud on a source it cannot resolve: the writer encodes, it
+    * never decodes. */
   private def tupleDomain(pf: IcebergPartField,
       schema: StructType, layout: IdLayout): DataType =
     if (pf.transform == "identity" || pf.transform.startsWith("truncate["))
@@ -1386,17 +1311,19 @@ object IcebergWriter {
     writeAvro(path, manifestSchema, rows)
   }
 
-  private def writeManifestList(path: File, refs: Seq[ManifestRef],
+  private def writeManifestList(path: File, refs: Seq[ManifestListRow],
       spec: Seq[IcebergPartField], schema: StructType,
       layout: IdLayout): Unit = {
     val rows = refs.map { ref =>
       val r = new GenericData.Record(manifestListSchema)
       r.put("manifest_path", ref.path)
-      r.put("manifest_length", new File(ref.path).length())
+      r.put("manifest_length", ref.length)
       // each manifest keeps ITS spec id: a carried-forward foreign
       // manifest of an evolved-away spec must not pass the reader's
-      // default-spec summary gate by being restamped
-      r.put("partition_spec_id", ref.specId)
+      // default-spec summary gate by being restamped. A row without a
+      // spec id (read as -1) is stamped the initial spec 0: a written
+      // -1 would name no spec at all
+      r.put("partition_spec_id", math.max(ref.specId, 0))
       r.put("content", ref.content)
       r.put("sequence_number", ref.seq)
       r.put("min_sequence_number", ref.seq)
@@ -1807,17 +1734,5 @@ object IcebergWriter {
     if (f.isDirectory)
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
-  }
-
-  private def localFile(path: String, md: IcebergMetadata,
-      tableDir: String): File = {
-    val p = path.replaceFirst("^file:/+", "/")
-    val loc = md.location.replaceFirst("^file:/+", "/")
-    val f =
-      if (loc.nonEmpty && (p == loc || p.startsWith(loc + "/")))
-        new File(tableDir, p.stripPrefix(loc).dropWhile(_ == '/'))
-      else new File(p)
-    require(f.isFile, s"manifest list not found: $f")
-    f
   }
 }

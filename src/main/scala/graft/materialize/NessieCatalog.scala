@@ -122,8 +122,8 @@ final class NessieCatalog(baseUri: String,
     require(loc.nonEmpty, s"nessie: ICEBERG_TABLE " +
       s"${(ns :+ table).mkString(".")} carries no metadataLocation")
     val md = IcebergMetadata.parse(java.nio.file.Files.readString(
-      java.nio.file.Path.of(stripFileScheme(loc))))
-    (md, stripFileScheme(md.location))
+      java.nio.file.Path.of(IcebergTable.localPath(loc))))
+    (md, IcebergTable.localPath(md.location))
   }
 
   /** Catalog-resolved read: content → metadata document → manifest
@@ -144,11 +144,4 @@ final class NessieCatalog(baseUri: String,
     val (md, dir) = loadTable(ns, table)
     IcebergTable.readPrunedOrResolved(spark, md, dir, Seq(preds))
   }
-
-  private def stripFileScheme(p: String): String =
-    if (p.startsWith("file:"))
-      new java.io.File(URI.create(
-        if (p.startsWith("file:///")) p
-        else "file://" + p.stripPrefix("file:")).getPath).getPath
-    else p
 }

@@ -634,7 +634,7 @@ class IcebergForeignSpec extends AnyFunSuite {
     def row(nan: Option[Boolean]) = IcebergTable.ManifestListRow(
       "m.avro", 1L, 0, 0, Some(Seq(graft.materialize.IcebergFieldSummary(
         containsNull = false, Some("1.0"), Some("2.0"),
-        containsNan = nan))))
+        containsNan = nan))), 0L)
     val gt = Seq(IcebergTable.ScanPred("v", ">", "100.0"))
     // recorded NaN-free: the [1.0, 2.0] summary proves no row > 100
     assert(!IcebergTable.manifestMayMatch(md, row(Some(false)), gt))

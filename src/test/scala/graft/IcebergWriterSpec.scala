@@ -598,14 +598,14 @@ class IcebergWriterSpec extends AnyFunSuite {
       Seq(6L, 9L, 10L)) // the delete applied inside the pruned scan
 
     // summary-less rows (foreign/binary bounds) are always kept
-    val bare = IcebergTable.ManifestListRow("m.avro", 1L, 0, 0, None)
+    val bare = IcebergTable.ManifestListRow("m.avro", 1L, 0, 0, None, 0L)
     assert(IcebergTable.manifestMayMatch(md, bare,
       Seq(IcebergTable.ScanPred("k", "=", "999"))))
     // a null-carrying field still prunes VALUE ops by its non-null
     // bounds (NULL rows can't match `=`), but is kept for IS NULL
     val withNull = IcebergTable.ManifestListRow("m.avro", 1L, 0, 0,
       Some(Seq(graft.materialize.IcebergFieldSummary(
-        containsNull = true, Some("1"), Some("2")))))
+        containsNull = true, Some("1"), Some("2")))), 0L)
     assert(!IcebergTable.manifestMayMatch(md, withNull,
       Seq(IcebergTable.ScanPred("k", "=", "999"))))
     assert(IcebergTable.manifestMayMatch(md, withNull,
@@ -972,5 +972,110 @@ class IcebergWriterSpec extends AnyFunSuite {
     assert(IcebergTable.read(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
       Seq((1L, "u1"), (3L, "u3")))
+  }
+
+  /** Every record of a local avro file. */
+  private def avroRecords(f: java.io.File)
+      : List[org.apache.avro.generic.GenericRecord] = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.avro.file.DataFileReader.openReader(f,
+      new org.apache.avro.generic.GenericDatumReader[
+        org.apache.avro.generic.GenericRecord]())
+    try r.iterator().asScala.toList finally r.close()
+  }
+
+  test("a relocated table's append records every manifest's true length") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft_icemove").toFile
+    val orig = new java.io.File(root, "t").getAbsolutePath
+    IcebergWriter.create(spark, orig,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name"))
+    assert(IcebergWriter.deleteWhere(spark, orig, col("id") === 2L) == 1L)
+    // tombstones name the data files by their absolute paths under the
+    // table directory
+    val md0 = IcebergTable.loadMetadata(orig)
+    val entries = IcebergTable.snapshotFiles(md0, md0.currentSnapshot.get,
+      orig)
+    val named = spark.read.parquet(entries.filter(_.content == 1).map(_.path): _*)
+      .select("file_path").collect().map(_.getString(0)).toSet
+    assert(named.nonEmpty && named.forall(p => p.startsWith(orig + "/data/") &&
+      entries.exists(e => e.content == 0 && e.path == p)), named)
+
+    val moved = new java.io.File(root, "moved").getAbsolutePath
+    Files.move(java.nio.file.Paths.get(orig), java.nio.file.Paths.get(moved))
+    IcebergWriter.append(spark, moved, Seq((4L, "d")).toDF("id", "name"))
+    // the list read raw: carried rows still name the ORIGINAL paths,
+    // which re-anchor under the moved directory
+    val list = new java.io.File(
+      IcebergTable.loadMetadata(moved).currentSnapshot.get.manifestList)
+    val rows = avroRecords(list).map(r => (r.get("manifest_path").toString,
+      r.get("manifest_length").asInstanceOf[Long]))
+    assert(rows.size == 3)
+    rows.foreach { case (p, len) =>
+      val f = new java.io.File(
+        if (p.startsWith(orig + "/")) moved + p.stripPrefix(orig) else p)
+      assert(f.isFile && len == f.length(),
+        s"$p: manifest_length $len, file size ${f.length()}")
+    }
+    // the writer's liveness resolves the relocated files too
+    assert(IcebergWriter.deleteWhere(spark, moved, col("id") === 3L) == 1L)
+    assert(ids(moved) == Seq(1L, 4L))
+  }
+
+  test("a v1 table is refused on format-version, not an avro error, and reads") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.Schema
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val dir = Files.createTempDirectory("graft_icev1").toFile.getPath
+    IcebergWriter.create(spark, dir,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name"))
+    // rewrite the manifest list in the v1 layout: no content, no
+    // sequence numbers
+    val list = new java.io.File(
+      IcebergTable.loadMetadata(dir).currentSnapshot.get.manifestList)
+    val rows = avroRecords(list)
+    val v2 = rows.head.getSchema
+    val v1 = Schema.createRecord(v2.getName, null, null, false,
+      v2.getFields.asScala.filterNot(f => Set("content", "sequence_number",
+        "min_sequence_number")(f.name))
+        .map(f => new Schema.Field(f.name, f.schema, f.doc, f.defaultVal))
+        .asJava)
+    val w = new org.apache.avro.file.DataFileWriter(
+      new GenericDatumWriter[GenericRecord](v1))
+    w.create(v1, list)
+    rows.foreach { r =>
+      val g = new GenericData.Record(v1)
+      v1.getFields.asScala.foreach(f => g.put(f.name, r.get(f.name)))
+      w.append(g)
+    }
+    w.close()
+    val doc = new java.io.File(dir, "metadata/v1.metadata.json").toPath
+    val v2doc = Files.readString(doc)
+    val v1doc = v2doc.replace("\"format-version\" : 2",
+      "\"format-version\" : 1")
+    assert(v1doc != v2doc)
+    Files.writeString(doc, v1doc)
+    assert(IcebergTable.loadMetadata(dir).formatVersion == 1)
+    val e = intercept[IllegalArgumentException](
+      IcebergWriter.append(spark, dir, Seq((4L, "d")).toDF("id", "name")))
+    assert(e.getMessage.contains("format-version"))
+    assert(ids(dir) == Seq(1L, 2L, 3L))
+  }
+
+  test("Iceberg avro metadata is decoded only in IcebergTable") {
+    import java.nio.file.{Files => F, Paths}
+    import scala.jdk.CollectionConverters._
+    // the needle is assembled so this file does not match itself
+    val needle = Seq("DataFileReader", "openReader").mkString(".")
+    val s = F.walk(Paths.get("src/main/scala"))
+    val files =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    val hits = files.filter(f => F.readString(f).contains(needle))
+      .map(_.toString)
+    assert(hits == Seq("src/main/scala/graft/materialize/IcebergTable.scala"),
+      s"avro metadata decoded outside IcebergTable: $hits")
   }
 }
