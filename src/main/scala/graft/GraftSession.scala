@@ -20,10 +20,11 @@ import graft.warehouse.Warehouse
   * verified sync, and savings telemetry over a Spark session.
   *
   * Venue semantics in a single-engine deployment: `Local` executes here;
-  * `Cloud` is surfaced to the caller as a flagged decision (the model is
-  * still executed locally when `executeCloudRouted`, the default, since
-  * there is no second engine attached — exactly the "planner advice"
-  * reinterpretation SURVEY.md §7 calls for).
+  * `Cloud` is surfaced to the caller as a flagged decision and the model
+  * still executes here, recorded as a local run, since there is no second
+  * engine attached — exactly the "planner advice" reinterpretation
+  * SURVEY.md §7 calls for. Only a classified fallback retry records a
+  * cloud run.
   *
   * @param sourceFetch cache-miss resolver for auto-cached sources: given
   *   (schema, table) referenced by incoming SQL but absent from the
@@ -36,7 +37,6 @@ final class GraftSession(
     targetSchema: String = "main",
     target: String = "prod", // "dev" enables LIMIT sampling
     config: PlannerConfig = PlannerConfig(),
-    executeCloudRouted: Boolean = true,
     sourceFetch: (String, String) => Option[DataFrame] = (_, _) => None,
     console: Console = Console.silent) {
 
@@ -47,8 +47,6 @@ final class GraftSession(
 
   val warehouse = new Warehouse(spark, warehouseRoot)
   val state = new StateManager(s"$warehouseRoot/_graft/state.json", config)
-  val scanner = new CatalogScanner()
-  val router = new AutoRouter(config, state)
   val harvester = new MetadataHarvester(
     s"$warehouseRoot/_graft/run_summary.json")
   val traffic = new TrafficController(config, state, harvester.statsOf)
@@ -120,9 +118,10 @@ final class GraftSession(
       graft.warehouse.ParquetFooter.readTable(spark, path).schema, Map("path" -> path))
   }
 
-  /** Routing explanation for a model (the `icebreaker explain` analog). */
+  /** Routing explanation for a model (the `icebreaker explain` analog):
+    * the gate-by-gate findings and the decision [[run]] takes. */
   def explain(node: ModelNode, sqlText: String): String =
-    router.explain(spark, node, sqlText)
+    traffic.explain(spark, node, sqlText)
 
   final case class RunResult(name: String, decision: RoutingDecision,
       durationSeconds: Double, rows: Long,
@@ -138,9 +137,6 @@ final class GraftSession(
     try {
       Dag.topoOrder(nodes).map { node =>
         val decision = traffic.decide(spark, node, sqlOf(node))
-        val venue =
-          if (decision.venue == Venue.Cloud && !executeCloudRouted) Venue.Cloud
-          else Venue.Local
         state.markRunning(node.uniqueId)
         val tStart = System.nanoTime()
         // each attempt times itself: a fallback retry's recorded duration
@@ -188,7 +184,7 @@ final class GraftSession(
         console.step(s"Materializing ${node.name}...")
         try {
           val (rows, dur, spill) = materializeNode()
-          finish(rows, dur, spill, venue, "")
+          finish(rows, dur, spill, Venue.Local, "")
         } catch {
           case e: Throwable =>
             state.markCrash(node.uniqueId)

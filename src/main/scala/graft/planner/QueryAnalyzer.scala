@@ -21,7 +21,6 @@ final case class QueryFacts(
     windowCount: Int,
     subqueryCount: Int,
     hasCubeOrRollup: Boolean,
-    hasCrossJoin: Boolean,
     parsed: Boolean,
     externalPatterns: Seq[String]) {
 
@@ -67,22 +66,6 @@ object QueryAnalyzer {
     "st_asgeojson", "st_geogfromtext", "st_makepolygon", "geography",
     "external_function", "invoke ")
 
-  /** Locally-safe functions the engine promises to execute
-    * (`auto_router.py:137-149`) — every name here is covered by an
-    * oracle-checked query in graft.queries. */
-  val nativeSafeFunctions: Set[String] = Set(
-    "count", "sum", "avg", "min", "max",
-    "row_number", "rank", "dense_rank", "ntile",
-    "lead", "lag", "first_value", "last_value",
-    "coalesce", "nullif", "ifnull",
-    "case", "when", "then", "else",
-    "cast", "try_cast", "convert",
-    "concat", "substring", "trim", "lower", "upper",
-    "date_trunc", "dateadd", "datediff", "extract",
-    "json_extract", "json_extract_string",
-    "array_agg", "list_agg", "string_agg",
-    "regexp_matches", "regexp_replace")
-
   def analyze(spark: SparkSession, sql: String): QueryFacts = {
     val ext = externalPatterns.collect {
       case (name, p) if p.r.findFirstIn(sql).isDefined => name
@@ -90,8 +73,8 @@ object QueryAnalyzer {
     Try(spark.sessionState.sqlParser.parsePlan(sql)).toOption match {
       case None =>
         QueryFacts(extractFunctionsByRegex(sql), Nil, 0, 0, 0,
-          hasCubeOrRollup = cubeRegex(sql), hasCrossJoin = false,
-          parsed = false, externalPatterns = ext)
+          hasCubeOrRollup = cubeRegex(sql), parsed = false,
+          externalPatterns = ext)
       case Some(plan) =>
         var fns = Set.newBuilder[String]
         var rels = Seq.newBuilder[Seq[String]]
@@ -99,7 +82,6 @@ object QueryAnalyzer {
         var windows = 0
         var subqueries = 0
         var cube = cubeRegex(sql)
-        var cross = false
         def walkExpr(e: Expression): Unit = {
           e match {
             case f: UnresolvedFunction =>
@@ -118,9 +100,7 @@ object QueryAnalyzer {
         def walk(p: LogicalPlan): Unit = {
           p match {
             case r: UnresolvedRelation => rels += r.multipartIdentifier
-            case j: Join =>
-              joins += 1
-              if (j.joinType.sql == "CROSS") cross = true
+            case _: Join => joins += 1
             case a: Aggregate =>
               if (a.groupingExpressions.exists(_.toString.toLowerCase
                 .matches(".*(cube|rollup|groupingsets).*"))) cube = true
@@ -134,7 +114,7 @@ object QueryAnalyzer {
         }
         walk(plan)
         QueryFacts(fns.result(), rels.result(), joins, windows,
-          subqueries, cube, cross, parsed = true, externalPatterns = ext)
+          subqueries, cube, parsed = true, externalPatterns = ext)
     }
   }
 

@@ -14,28 +14,19 @@ object Venue {
 }
 
 object RoutingReason {
-  // Cloud routing reasons (AutoRouter)
-  val ExternalSource = "External data source detected"
-  val CloudFunction = "Cloud-only SQL function"
-  val CloudDependency = "Upstream dependency requires cloud"
-  val VolumeExceedsLimit = "Data volume exceeds local threshold"
-  val MemoryConstraint = "Estimated memory exceeds available"
+  // Cloud routing reasons
   val UserOverride = "User configured icebreaker_route"
-  val PreviousFailure = "Previously failed on local execution"
-  val HistoricalCost = "Historical query cost exceeds threshold"
-  // Cloud routing reasons (TrafficController gates)
-  val ViewDependency = "Depends on cloud-only views"
   val InternalSource = "Uses internal/proprietary sources"
-  val Untranspilable = "SQL contains untranspilable syntax"
+  val ExternalSource = "External data source detected"
+  val CloudDependency = "Upstream dependency requires cloud"
+  val CloudFunction = "Cloud-only SQL function"
   val ToxicTypes = "Contains incompatible data types"
+  val Untranspilable = "SQL contains untranspilable syntax"
   val CrashHistory = "Previously crashed local execution"
   val HighComplexity = "Historical runtime exceeds threshold"
   val LargeVolume = "Data volume exceeds local threshold"
   // Local routing reasons
-  val AutoLocal = "Automatic routing (free compute)"
   val UserOverrideLocal = "User configured icebreaker_route='local'"
-  val IcebergLocal = "Iceberg catalog source (DuckDB-native)"
-  val HistoricalCheap = "Historical query cost is negligible"
   val DefaultLocal = "Passed all gates - running locally (free!)"
 }
 
@@ -52,12 +43,11 @@ final case class RoutingDecision(
 }
 
 /** Router thresholds — reference defaults (`connections.py:75-77`,
-  * `traffic.py:30-43`, `auto_router.py:163-166`; BASELINE.md). */
+  * `traffic.py:30-43`; BASELINE.md). */
 final case class PlannerConfig(
     maxLocalSizeGb: Double = 5.0,
     maxLocalSeconds: Double = 600.0,
     maxSpillBytes: Long = 1L << 30,
-    costThresholdUsd: Double = 0.10,
     crashBlacklistCount: Int = 3)
 
 /** Per-model telemetry snapshot (reference `metadata.py` cloud stats). */
@@ -65,8 +55,7 @@ final case class ModelStats(
     avgSeconds: Double,
     avgSpillBytes: Long,
     avgRowsProduced: Long = 0L,
-    runCount: Int = 0,
-    avgCostUsd: Option[Double] = None)
+    runCount: Int = 0)
 
 /** Source metadata (reference FIXTURES.md §A.4 source rows). */
 final case class SourceMeta(

@@ -355,10 +355,10 @@ class Warehouse(val spark: SparkSession, val root: String,
 
   private def ledgerAppend(schema: String, name: String, version: Int,
       label: String, action: String): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val line = s"""{"schema":"${esc(schema)}","table":"${esc(name)}",""" +
-      s""""version":$version,"label":"${esc(label)}",""" +
-      s""""action":"${esc(action)}"}""" + "\n"
+    val mapper = Warehouse.ledgerMapper
+    val line = mapper.writeValueAsString(mapper.createObjectNode()
+      .put("schema", schema).put("table", name).put("version", version)
+      .put("label", label).put("action", action)) + "\n"
     Files.write(ledgerPath, line.getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
@@ -370,23 +370,20 @@ class Warehouse(val spark: SparkSession, val root: String,
   def versionLedger: Seq[VersionEntry] = {
     if (!Files.exists(ledgerPath)) return Seq.empty
     import scala.jdk.CollectionConverters._
-    def field(line: String, k: String): String = {
-      val m = ("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-        .findFirstMatchIn(line)
-      m.map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse("")
-    }
     Files.readAllLines(ledgerPath).asScala.toSeq.filter(_.nonEmpty).map { l =>
-      val v = "\"version\":([0-9]+)".r.findFirstMatchIn(l)
-        .map(_.group(1).toInt).getOrElse(0)
-      VersionEntry(field(l, "schema"), field(l, "table"), v,
-        field(l, "label"), field(l, "action"))
+      val e = Warehouse.ledgerMapper.readTree(l)
+      VersionEntry(e.path("schema").asText(), e.path("table").asText(),
+        e.path("version").asInt(), e.path("label").asText(),
+        e.path("action").asText())
     }
   }
 }
 
 object Warehouse {
   import org.apache.spark.sql.functions._
+
+  // the version ledger's JSON codec (JSONL: one archived version a line)
+  private val ledgerMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Row-level diff of two same-schema relations keyed by `keyCols`
     * (the engine of [[Warehouse.diffVersions]], usable standalone).

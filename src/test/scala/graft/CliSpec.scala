@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{ModelConfig, ModelNode}
 
 /** CLI behavioral coverage — mirrors the reference's explain cases
-  * (reference tests/test_auto_router.py:35-266 drive `AutoRouter.explain`,
-  * which `icebreaker explain` renders, cli.py:490-520). */
+  * (reference tests/test_auto_router.py:35-266 drive the router's
+  * `explain`, which `icebreaker explain` renders, cli.py:490-520). */
 class CliSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
 
@@ -24,8 +24,8 @@ class CliSpec extends AnyFunSuite {
     val local = Cli.cmdExplain(gs,
       "SELECT id, ROW_NUMBER() OVER (PARTITION BY c ORDER BY t) rn FROM x")
     assert(local.contains("Routing Explanation"))
-    assert(local.contains("1. override"))
-    assert(local.contains("7. complexity"))
+    assert(local.contains("1. INTENT"))
+    assert(local.contains("5. COMPLEXITY"))
     assert(local.contains("LOCAL"))
     val cloud = Cli.cmdExplain(gs,
       "SELECT * FROM read_parquet('s3://bucket/x.parquet')")

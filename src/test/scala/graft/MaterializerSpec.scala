@@ -242,6 +242,25 @@ class MaterializerSpec extends AnyFunSuite {
       .filter(col("tag") === "v4").count() == 5)
   }
 
+  test("version ledger round-trips a label with a newline, a quote and a backslash") {
+    val wh = freshWh()
+    val m = new Materializer(wh)
+    def node(tag: String) = ModelNode("inc_l",
+      ModelConfig("incremental", uniqueKey = Seq("r_regionkey"),
+        incrementalStrategy = "merge"), Nil)(
+      s => Tables.load(s, sf, "region").withColumn("tag", lit(tag)))
+    val label = "2024-02-01\n\"q\" \\x"
+    wh.setVersionLabel("2024-01-01")
+    m.materialize(node("v1"))
+    wh.setVersionLabel(label)
+    m.materialize(node("v2")) // archives version 1 under `label`
+    assert(wh.versionLedger.map(e =>
+      (e.schema, e.table, e.version, e.label, e.action)) ==
+      Seq(("main", "inc_l", 1, label, "promote")))
+    assert(wh.readAsOf("main", "inc_l", "2024-01-15")
+      .filter(col("tag") === "v1").count() == 5)
+  }
+
   test("diffVersions emits Delta-CDF change rows between archived and live") {
     val wh = freshWh()
     val v1 = Tables.load(spark, sf, "region")

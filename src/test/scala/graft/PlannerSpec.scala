@@ -16,9 +16,9 @@ class PlannerSpec extends AnyFunSuite {
   private def node(name: String, cfg: ModelConfig = ModelConfig(),
       deps: Seq[String] = Nil) = ModelNode(name, cfg, deps)(_ => null)
 
-  // ------------------------------------------------------ AutoRouter
+  // ---------------------------------------- router (auto_router.py cases)
   test("external sources route CLOUD (s3/stage/copy into/3-part)") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     val cases = Seq(
       "SELECT * FROM read_parquet('s3://my-bucket/data/f.parquet')",
       "SELECT * FROM @my_stage/data/",
@@ -32,14 +32,14 @@ class PlannerSpec extends AnyFunSuite {
   }
 
   test("iceberg catalog references stay LOCAL") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     val d = r.decide(spark, node("m"),
       "SELECT * FROM iceberg_catalog.my_namespace.customers")
     assert(d.venue == Venue.Local)
   }
 
   test("cloud-only functions route CLOUD") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     Seq("SELECT cortex.complete('hi') FROM t",
       "SELECT snowflake.ml.predict(1) FROM t",
       "SELECT system$stream_has_data('s')").foreach { sql =>
@@ -49,7 +49,7 @@ class PlannerSpec extends AnyFunSuite {
   }
 
   test("window dedup flagship and multi-joins stay LOCAL") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     val dedup =
       """WITH ranked AS (SELECT id, name, amount,
         |  ROW_NUMBER() OVER (PARTITION BY customer_id
@@ -66,7 +66,7 @@ class PlannerSpec extends AnyFunSuite {
   }
 
   test("user override beats everything; volume gate fires at >5GB") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     val d = r.decide(spark,
       node("m", ModelConfig(routeOverride = Some("local"))),
       "SELECT * FROM s3://bucket/x/")
@@ -75,11 +75,11 @@ class PlannerSpec extends AnyFunSuite {
     val big = r.decide(spark,
       node("m", ModelConfig(estimatedSizeGb = Some(100.0))), "SELECT 1")
     assert(big.venue == Venue.Cloud &&
-      big.reason == RoutingReason.VolumeExceedsLimit)
+      big.reason == RoutingReason.LargeVolume)
   }
 
   test("cloud-routed upstream dependency propagates") {
-    val r = new AutoRouter()
+    val r = new TrafficController()
     r.decide(spark, node("up"), "SELECT * FROM s3://b/x/") // CLOUD
     val d = r.decide(spark, node("down", deps = Seq("model.graft.up")),
       "SELECT 1")
@@ -87,7 +87,7 @@ class PlannerSpec extends AnyFunSuite {
       d.reason == RoutingReason.CloudDependency)
   }
 
-  // ------------------------------------------------ TrafficController
+  // -------------------------------------------- router (traffic.py cases)
   test("gates: internal source, toxic types, slow telemetry, size") {
     val tc0 = new TrafficController()
     assert(tc0.decide(spark, node("m"), "SELECT 1",
@@ -130,11 +130,11 @@ class PlannerSpec extends AnyFunSuite {
     s2.markCrash("model.x")
     assert(s2.isBlacklisted("model.x"))
     // router consults the WAL
-    val r = new AutoRouter(state = s2)
+    val r = new TrafficController(state = s2)
     val d = r.decide(spark, ModelNode("x", ModelConfig(), Nil)(_ => null)
       .copy(uniqueId = "model.x"), "SELECT 1")
     assert(d.venue == Venue.Cloud &&
-      d.reason == RoutingReason.PreviousFailure)
+      d.reason == RoutingReason.CrashHistory && d.gate.contains("STABILITY"))
   }
 
   test("WAL: success clears running; savings share") {
@@ -152,8 +152,7 @@ class PlannerSpec extends AnyFunSuite {
   // ------------------------------------------------------- MemoryGuard
   test("memory guard classes and multipliers") {
     def facts(joins: Int, windows: Int, cube: Boolean = false) =
-      QueryFacts(Set(), Nil, joins, windows, 0, cube, hasCrossJoin = false,
-        parsed = true, Nil)
+      QueryFacts(Set(), Nil, joins, windows, 0, cube, parsed = true, Nil)
     assert(MemoryGuard.check(facts(0, 0), 1.0, 16).multiplier == 1.2)
     assert(MemoryGuard.check(facts(1, 0), 1.0, 16).multiplier == 1.5)
     assert(MemoryGuard.check(facts(5, 0), 1.0, 16).multiplier == 2.5)
