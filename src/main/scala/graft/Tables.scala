@@ -70,7 +70,23 @@ object Tables {
     * missing ones; a query that does reference one still fails loudly at
     * analysis (TABLE_OR_VIEW_NOT_FOUND). */
   def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
+    register(spark, dir, names)
+
+  /** [[registerAll]] for only the tables `sql` names as whole identifiers
+    * (case-insensitive). Each view costs a relation resolution and a SQL
+    * execution, so a statement over one table registers one, not ten.
+    * Scans the raw text, so dialect the Spark parser rejects (QUALIFY)
+    * is fine. */
+  def registerFor(spark: SparkSession, dir: String, sql: String): Unit =
+    register(spark, dir, namePatterns.collect {
+      case (n, re) if re.findFirstIn(sql).isDefined => n
+    })
+
+  private val namePatterns = names.map(n => n -> s"(?i)\\b$n\\b".r)
+
+  private def register(spark: SparkSession, dir: String,
+      tables: Seq[String]): Unit =
+    tables.foreach { n =>
       if (new java.io.File(s"$dir/$n.parquet").exists())
         load(spark, dir, n).createOrReplaceTempView(n)
     }

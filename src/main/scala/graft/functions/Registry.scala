@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -124,21 +125,22 @@ object Registry {
     }
   )
 
-  /** Idempotent per-session registration — safe under concurrent first
-    * calls (the transpiler corpus analyzes branches in parallel):
-    * createOrReplaceTempFunction is idempotent by construction, and the
-    * extraOptimizations check-then-append (not atomic on its own —
-    * concurrent first calls could double-append JsonPathCse or lose it)
-    * is serialized here rather than relying on call-site ordering. */
-  def register(spark: SparkSession): Unit = {
+  /** Once-per-session registration: the first call on a session
+    * registers every builder and appends JsonPathCse; later calls find
+    * the last builder's name already in the session's registry and
+    * replace nothing. Temp functions and extra optimizations are
+    * session-scoped, so a `newSession()` registers its own. Serialized,
+    * so concurrent first calls (the transpiler corpus analyzes branches
+    * in parallel) register exactly once and can neither double-append
+    * JsonPathCse nor lose it. */
+  def register(spark: SparkSession): Unit = Registry.synchronized {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-    Registry.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(graft.plans.JsonPathCse))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ graft.plans.JsonPathCse
-    }
+    if (!reg.functionExists(FunctionIdentifier(builders.last._1)))
+      builders.foreach { case (name, b) =>
+        reg.createOrReplaceTempFunction(name, b, "built-in")
+      }
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.JsonPathCse))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.JsonPathCse
   }
 }

@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native codegen'd vector kernels for the similarity operators. Each
@@ -69,6 +71,58 @@ object VecMath {
     n
   }
 
+  /** Random-hyperplane component for (table, plane, dim): uniform in
+    * [-1, 1] at exact 3-decimal steps, from the first 4 bytes of
+    * md5("table:plane/dim") read as an unsigned int. Depends only on the
+    * indices, so the oracle SQL can embed the same literals. */
+  def lshPlaneValue(table: Int, p: Int, d: Int): Double = {
+    val h = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$table:$p/$d".getBytes("UTF-8"))
+    val u = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
+      ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+    ((u % 2001) - 1000).toDouble / 1000.0
+  }
+
+  // One hyperplane table per (numTables, numPlanes, maxDim), built once
+  // per JVM: a constant of the indices, flattened as
+  // planes((t * numPlanes + p) * maxDim + d).
+  private val lshPlaneTables = new java.util.concurrent.ConcurrentHashMap[
+    (Int, Int, Int), Array[Double]]()
+
+  def lshPlanes(numTables: Int, numPlanes: Int, maxDim: Int): Array[Double] =
+    lshPlaneTables.computeIfAbsent((numTables, numPlanes, maxDim), _ =>
+      Array.tabulate(numTables * numPlanes * maxDim)(i => lshPlaneValue(
+        i / (numPlanes * maxDim), (i / maxDim) % numPlanes, i % maxDim)))
+
+  /** `(t, b)` for t in 0 until numTables: b folds one sign bit per plane,
+    * `b * 2 + bit`, in plane order. A plane's dot is [[dotD]] of `vec`
+    * and the plane truncated to `vec`'s length; bit 1 iff dot >= 0 in
+    * Spark's ordering, where NaN sorts above every value. A null vector,
+    * or one longer than `maxDim` (no plane to dot it with), has bit 0 on
+    * every plane. */
+  def lshTableBuckets(vec: ArrayData, planes: Array[Double], numTables: Int,
+      numPlanes: Int, maxDim: Int): ArrayData = {
+    val x = if (vec == null) null else vec.toDoubleArray()
+    val usable = x != null && x.length <= maxDim
+    val out = new Array[Any](numTables)
+    var t = 0
+    while (t < numTables) {
+      var b = 0L
+      var p = 0
+      while (usable && p < numPlanes) {
+        val base = (t * numPlanes + p) * maxDim
+        var acc = 0.0
+        var i = 0
+        while (i < x.length) { acc += x(i) * planes(base + i); i += 1 }
+        b = b * 2 + (if (acc >= 0.0 || java.lang.Double.isNaN(acc)) 1 else 0)
+        p += 1
+      }
+      out(t) = InternalRow(t, b)
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
+
   // ------------------------------------------------------ Column forms
   def dotD(a: Column, b: Column): Column =
     GraftBridge.column(DotD(GraftBridge.expression(a), GraftBridge.expression(b)))
@@ -79,6 +133,10 @@ object VecMath {
   def sortedIntersectSize(a: Column, b: Column): Column =
     GraftBridge.column(SortedIntersectSize(GraftBridge.expression(a),
       GraftBridge.expression(b)))
+  def lshTableBuckets(vec: Column, numTables: Int, numPlanes: Int,
+      maxDim: Int): Column =
+    GraftBridge.column(LshTableBuckets(GraftBridge.expression(vec),
+      numTables, numPlanes, maxDim))
 }
 
 case class DotD(left: Expression, right: Expression) extends BinaryExpression {
@@ -146,4 +204,39 @@ case class SortedIntersectSize(left: Expression, right: Expression)
       s"${ev.value} = graft.functions.VecMath.sortedIntersectSize($a, $b);")
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+/** Multi-table LSH sign buckets of a double vector as one call:
+  * `array<struct<t:int, b:bigint>>`, one entry per table in table
+  * order, never null ([[VecMath.lshTableBuckets]] gives a null vector
+  * bucket 0). The hyperplanes ship as one reference object, so the plan
+  * holds no plane literals. */
+case class LshTableBuckets(child: Expression, numTables: Int, numPlanes: Int,
+    maxDim: Int) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("t", IntegerType, nullable = false),
+    StructField("b", LongType, nullable = false))), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "lsh_table_buckets"
+
+  @transient private lazy val planes =
+    VecMath.lshPlanes(numTables, numPlanes, maxDim)
+
+  override def eval(input: InternalRow): Any =
+    VecMath.lshTableBuckets(child.eval(input).asInstanceOf[ArrayData],
+      planes, numTables, numPlanes, maxDim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val pl = ctx.addReferenceObj("lshPlanes", planes, "double[]")
+    ev.copy(code = code"""
+      |${v.code}
+      |ArrayData ${ev.value} = graft.functions.VecMath.lshTableBuckets(
+      |  ${v.isNull} ? null : ${v.value}, $pl, $numTables, $numPlanes, $maxDim);
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

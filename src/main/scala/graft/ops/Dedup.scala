@@ -316,8 +316,8 @@ object Dedup {
     * per-bucket joins, and giant buckets are CAPPED like
     * [[bucketPairs]] (row_number ≤ maxBucket sharing the bucket
     * exchange, cap replicated in the oracle). Hyperplanes are
-    * deterministic literal constants ([[Similarity.planeValue]]), so
-    * the whole operator — buckets, caps, cosines — is
+    * deterministic constants ([[graft.functions.VecMath.lshPlaneValue]]),
+    * so the whole operator — buckets, caps, cosines — is
     * DuckDB-hash-checkable. A true near-dup pair (cosine ≈ 1) agrees
     * with every hyperplane sign with probability ≈ 1, so it collides
     * in essentially every table. */

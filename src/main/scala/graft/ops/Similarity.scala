@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import TextOps.h32
-
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — north-star similarity-search operators.
   *
@@ -16,10 +14,15 @@ import TextOps.h32
   *     once with no shuffle of the big side.
   *   - [[lshTopK]]: the scale path — random-hyperplane LSH buckets;
   *     candidates only form inside a query's bucket, turning the N×M
-  *     cross product into per-bucket joins. Hyperplanes are derived
-  *     deterministically from [[TextOps.h32]], so results are
+  *     cross product into per-bucket joins, and one exchange on
+  *     query_id serves the collision de-dup and the top-k window.
+  *     Buckets come from one codegen'd kernel
+  *     ([[graft.functions.LshTableBuckets]]) whose hyperplane table is
+  *     built once per JVM from md5 of the (table, plane, dim) indices
+  *     ([[graft.functions.VecMath.lshPlaneValue]]) and rides in the
+  *     generated code as one reference object, so results are
   *     reproducible across engines and runs (no wall-clock, no RNG
-  *     state).
+  *     state) and the plan holds no plane literals.
   */
 object Similarity {
 
@@ -401,52 +404,22 @@ object Similarity {
       col("mmr_score"))
   }
 
-  /** Deterministic pseudo-random hyperplane component for
-    * (table, plane, dim): uniform in [-1, 1] from an md5-derived hash.
-    * Computed ONCE on the driver (planes depend only on indices, never
-    * on data) and shipped as literal arrays — zero per-row hashing. */
-  /** Public so oracle SQL can embed the same exact 3-decimal literals. */
-  def planeValue(table: Int, p: Int, d: Int): Double =
-    planeComponent(table, p, d)
-
-  private def planeComponent(table: Int, p: Int, d: Int): Double = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$table:$p/$d".getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    ((java.lang.Long.parseLong(hex, 16) % 2001) - 1000).toDouble / 1000.0
-  }
-
   /** Sign-bucket of a vector under `numPlanes` hyperplanes of hash table
-    * `table`. Supports any dimension up to `maxDim` (literal plane
-    * vectors are truncated to the data's length by zip_with). */
+    * `table`: the `b` of that table's entry in [[tableBuckets]]. Supports
+    * any dimension up to `maxDim` (planes are truncated to the data's
+    * length; a longer vector lands in bucket 0). */
   def lshBuckets(vec: Column, numPlanes: Int, table: Int = 0,
-      maxDim: Int = 64): Column = {
-    val bits = (0 until numPlanes).map { p =>
-      val plane = array((0 until maxDim)
-        .map(d => lit(planeComponent(table, p, d))): _*)
-      // codegen'd left-to-right dot (VecMath.DotD) instead of the
-      // interpreted zip_with+aggregate higher-order fold — identical
-      // IEEE op sequence (the kernel's documented contract), so every
-      // hash-checked bucket is unchanged, but the per-row cost moves
-      // into whole-stage codegen: this expression runs numPlanes ×
-      // numTables times per corpus row in the LSH family. The slice
-      // keeps the equal-length contract (plane truncated to the data's
-      // dimension; a vec LONGER than maxDim nulls the dot exactly like
-      // the zip_with null-pad + null fold it replaces).
-      val dot = graft.functions.VecMath.dotD(
-        vec, slice(plane, lit(1), size(vec)))
-      when(dot >= 0, lit(1L)).otherwise(lit(0L))
-    }
-    bits.foldLeft(lit(0L))((acc, b) => acc * 2 + b)
-  }
+      maxDim: Int = 64): Column =
+    graft.functions.VecMath.lshTableBuckets(vec, table + 1, numPlanes, maxDim)
+      .getItem(table).getField("b")
 
-  /** Per-table (table_idx, bucket) pairs as an array column — one entry
-    * per hash table, for the standard multi-table LSH recall boost.
-    * Public: also the blocking key of [[Dedup.embeddingLshDups]]. */
+  /** Per-table (t, b) pairs as an array column — one entry per hash
+    * table, for the standard multi-table LSH recall boost — from the one
+    * codegen'd [[graft.functions.LshTableBuckets]] kernel. Public: also
+    * the blocking key of [[Dedup.embeddingLshDups]]. */
   def tableBuckets(vec: Column, numPlanes: Int,
       numTables: Int): Column =
-    array((0 until numTables).map(t =>
-      struct(lit(t).as("t"), lshBuckets(vec, numPlanes, t).as("b"))): _*)
+    graft.functions.VecMath.lshTableBuckets(vec, numTables, numPlanes, 64)
 
   /** IVF (inverted-file) ANN: k-means cells over the corpus, search
     * only the `nProbe` cells nearest each query. Centroid seeding is
@@ -618,28 +591,32 @@ object Similarity {
   /** ANN top-k: candidates share the query's bucket in ANY of
     * `numTables` hash tables (multi-table LSH — each extra table trades
     * compute for recall; random high-dim corpora need several). Recall
-    * vs [[bruteForceTopK]] is validated in OpsSpec. */
+    * vs [[bruteForceTopK]] is validated in OpsSpec.
+    *
+    * Shape: the query side is broadcast, so the corpus is bucketed and
+    * probed in one narrow pass; each collision is scored there with the
+    * norms taken once per vector. The scored (query_id, cand_id, cosine)
+    * rows — never the vectors — then cross ONE exchange clustered on
+    * query_id, inside which the collision de-dup (a pair may collide in
+    * several tables) and the top-k window both run. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numPlanes: Int = 8, numTables: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      asDouble(col(vecCol)).as("qv"))
-      .select(col("query_id"), col("qv"),
-        explode(tableBuckets(col("qv"), numPlanes, numTables)).as("tb"))
-      .select(col("query_id"), col("qv"),
-        col("tb.t").as("t"), col("tb.b").as("b"))
-    val c = corpus.select(col(idCol).as("cand_id"),
-      asDouble(col(vecCol)).as("cv"))
-      .select(col("cand_id"), col("cv"),
-        explode(tableBuckets(col("cv"), numPlanes, numTables)).as("tb"))
-      .select(col("cand_id"), col("cv"),
-        col("tb.t").as("t"), col("tb.b").as("b"))
-    val cand = c.join(broadcast(q), Seq("t", "b"))
+    def buckets(df: DataFrame, id: String, v: String, n: String): DataFrame =
+      df.select(col(idCol).as(id), asDouble(col(vecCol)).as(v))
+        .withColumn(n, norm(col(v)))
+        .select(col(id), col(v), col(n),
+          explode(tableBuckets(col(v), numPlanes, numTables)).as("tb"))
+        .select(col(id), col(v), col(n),
+          col("tb.t").as("t"), col("tb.b").as("b"))
+    val scored = buckets(corpus, "cand_id", "cv", "cn")
+      .join(broadcast(buckets(queries, "query_id", "qv", "qn")), Seq("t", "b"))
       .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("qv"), col("cv"))
-      .distinct() // a pair may collide in several tables
-    val scored = cand.select(col("query_id"), col("cand_id"),
-      cosine(col("qv"), col("cv")).as("cosine"))
+      .select(col("query_id"), col("cand_id"),
+        cosinePrenormed(col("qv"), col("cv"), col("qn"), col("cn"))
+          .as("cosine"))
+      .repartition(col("query_id"))
+      .distinct()
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("cand_id"))
     scored.withColumn("rnk", row_number().over(w))

@@ -200,8 +200,7 @@ object CoreQueries {
     // Catalyst decorrelates to a left outer aggregate join — including the
     // COUNT-over-empty-group case, which must yield 0, not NULL)
     "q_correlated_scalar" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(
+      val sql =
         """SELECT c_custkey,
           |  (SELECT count(*) FROM orders o
           |   WHERE o.o_custkey = c.c_custkey) AS n_orders,
@@ -210,7 +209,9 @@ object CoreQueries {
           |        WHERE o.o_custkey = c.c_custkey
           |          AND o.o_orderstatus = 'F') AS DOUBLE) AS f_spend
           |FROM customer c
-          |WHERE c_mktsegment = 'BUILDING'""".stripMargin)
+          |WHERE c_mktsegment = 'BUILDING'""".stripMargin
+      Tables.registerFor(s, dir, sql)
+      s.sql(sql)
     }),
 
     // §2.3 TPC-H Q3 shape (shipping priority): customer⋈orders⋈lineitem

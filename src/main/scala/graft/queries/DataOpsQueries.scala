@@ -646,9 +646,9 @@ FROM (SELECT w, list_filter(string_split_regex(enc, '\\|+'),
 
   /** Full DuckDB replica of the multi-table LSH ANN (s_ann_lsh): the
     * hyperplanes are deterministic exact-3-decimal constants
-    * ([[graft.ops.Similarity.planeValue]]), so the oracle embeds them as
-    * literal arrays and recomputes buckets, candidates, and top-k
-    * independently — turning the approximate operator into a
+    * ([[graft.functions.VecMath.lshPlaneValue]]), so the oracle embeds
+    * them as literal arrays and recomputes buckets, candidates, and
+    * top-k independently — turning the approximate operator into a
     * hash-checked one. */
   /** The multi-table sign-bucket expression as DuckDB SQL with the
     * hyperplanes embedded as exact literal arrays — shared by the
@@ -656,7 +656,8 @@ FROM (SELECT w, list_filter(string_split_regex(enc, '\\|+'),
   private def lshBucketCase(numTables: Int, numPlanes: Int,
       dims: Int): String = {
     def planeLit(t: Int, p: Int): String =
-      (0 until dims).map(d => graft.ops.Similarity.planeValue(t, p, d))
+      (0 until dims)
+        .map(d => graft.functions.VecMath.lshPlaneValue(t, p, d))
         .mkString("[", ", ", "]")
     def bucketExpr(t: Int): String =
       (0 until numPlanes).map { p =>

@@ -113,14 +113,15 @@ object ExtraQueries {
 
     // GROUPING SETS + grouping() markers (SURVEY §2.4 heavy ops)
     "q_grouping_sets" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      s.sql(
+      val sql =
         """SELECT o_orderstatus, o_orderpriority,
           |  grouping(o_orderstatus) AS g_status,
           |  grouping(o_orderpriority) AS g_prio,
           |  COUNT(*) AS n
           |FROM orders
-          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)
+          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin
+      Tables.registerFor(s, dir, sql)
+      s.sql(sql)
     }),
 
     // PIVOT: one column per status with decimal-exact sums

@@ -20,6 +20,12 @@ import graft.transpile.SnowflakeSql
 object FunctionQueries {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Snowflake text over the views of the tables it names. */
+  private def sfSql(s: SparkSession, dir: String, sql: String): DataFrame = {
+    Tables.registerFor(s, dir, sql)
+    SnowflakeSql.run(s, sql)
+  }
+
   val defs: Map[String, Q] = Map(
     // IFF / NVL / NVL2 / ZEROIFNULL / NULLIFZERO (transpiler.py:181-324)
     "q_fn_null_family" -> ((s, dir) => {
@@ -206,8 +212,7 @@ object FunctionQueries {
 
     // QUALIFY with inline window fn → hoist + filter
     "q_sql_qualify" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT o_orderkey, o_custkey, o_totalprice
           |FROM orders
           |WHERE o_orderstatus = 'O'
@@ -218,8 +223,7 @@ object FunctionQueries {
     // QUALIFY followed by ORDER BY / LIMIT — the filter applies first,
     // then the trailing clauses (a real user's most common QUALIFY shape)
     "q_sql_qualify_order" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT o_orderkey, o_custkey, o_totalprice
           |FROM orders
           |WHERE o_orderstatus = 'O'
@@ -230,8 +234,7 @@ object FunctionQueries {
 
     // LATERAL FLATTEN(input => ...) → LATERAL VIEW POSEXPLODE
     "q_sql_flatten" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT n_nationkey, f.value AS v, f.index AS i
           |FROM nation, LATERAL FLATTEN(input =>
           |  array_construct(n_regionkey, n_nationkey * 2)) f""".stripMargin)
@@ -239,8 +242,7 @@ object FunctionQueries {
 
     // col:path::type semi-structured access (the reference's cloud-only gap)
     "q_sql_colon_path" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT event_id, props:k::int AS k_val
           |FROM events WHERE props:k::int BETWEEN 20 AND 40""".stripMargin)
     }),
@@ -252,13 +254,12 @@ object FunctionQueries {
     // path); the string-repr path stays the default because its results
     // are directly oracle-comparable. Values must match exactly.
     "q_sql_colon_path_native" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
       // restore the caller's prior flag value, not a hard-coded
       // "false" — a session that enabled the documented upgrade path
       // globally must not be silently downgraded by this query
       val prev = s.conf.get("graft.variant.native", "false")
       s.conf.set("graft.variant.native", "true")
-      try SnowflakeSql.run(s,
+      try sfSql(s, dir,
         """SELECT event_id, props:k::int AS k_val
           |FROM events WHERE props:k::int BETWEEN 20 AND 40""".stripMargin)
       finally s.conf.set("graft.variant.native", prev)
@@ -266,8 +267,7 @@ object FunctionQueries {
 
     // VARIANT cast forms (CAST(x AS VARIANT), x::VARIANT, TO_VARIANT(x))
     "q_sql_variant_cast" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT r_regionkey, CAST(r_name AS VARIANT) AS v1,
           |  r_regionkey::VARIANT AS v2, TO_VARIANT(r_name) AS v3
           |FROM region""".stripMargin)
@@ -276,8 +276,7 @@ object FunctionQueries {
     // 3-arg TRY_TO_NUMBER/TRY_TO_DECIMAL(expr, precision, scale)
     // (transpiler.py:246-260 type_map surface)
     "q_sql_trynum_ps" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT o_orderkey,
           |  CAST(TRY_TO_NUMBER(REGEXP_SUBSTR(o_orderpriority, '[0-9]+'), 18, 3)
           |    AS DOUBLE) AS prio_num,
@@ -287,8 +286,7 @@ object FunctionQueries {
 
     // IFF / OBJECT_CONSTRUCT / TRY_TO_* / DATEADD via SQL names
     "q_sql_dialect_fns" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
-      SnowflakeSql.run(s,
+      sfSql(s, dir,
         """SELECT o_orderkey,
           |  IFF(o_totalprice > 200000, 'big', 'small') AS size_tag,
           |  OBJECT_CONSTRUCT('id', o_orderkey, 'st', o_orderstatus) AS obj,

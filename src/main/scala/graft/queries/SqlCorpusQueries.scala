@@ -255,7 +255,7 @@ object SqlCorpus {
     // QUALIFY-pinned rows; union order is irrelevant to the sorted-row
     // hash)
     "q_sql_corpus" -> ((s, dir) => {
-      Tables.registerAll(s, dir)
+      Tables.registerFor(s, dir, cases.map(_.sf).mkString("\n"))
       // branch construction (parse + transpile + analyze) is pure
       // driver-side work with a per-case floor; at 39 cases it WAS the
       // query's dominant cost (3.7 s of serial analysis at any sf —
@@ -263,8 +263,7 @@ object SqlCorpus {
       // concurrently: Spark sessions support concurrent query
       // submission, the transpiler is pure string work, and QUALIFY
       // temp views are UUID-named, and Registry.register is itself
-      // thread-safe (the extraOptimizations append is synchronized) —
-      // the warm call below is purely a performance warm, not a
+      // thread-safe (serialized, once per session) — the warm call below is purely a performance warm, not a
       // correctness precondition. Future.sequence preserves case
       // order, so the union (and the driver hash) is byte-identical
       // to the serial build.

@@ -39,7 +39,7 @@ object SqlTpchQueries {
       |    AS DECIMAL(28,0))""".stripMargin
 
   private def run(sql: String): Q = (s, dir) => {
-    Tables.registerAll(s, dir)
+    Tables.registerFor(s, dir, sql)
     SnowflakeSql.run(s, sql)
   }
 

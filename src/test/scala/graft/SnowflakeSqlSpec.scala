@@ -155,6 +155,52 @@ class SnowflakeSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("dialect functions register once per session; a new session has its own") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = TestSpark.session.newSession()
+    val sql = "SELECT IFF(1 > 0, 'a', 'b') AS x"
+    def infos(sp: org.apache.spark.sql.SparkSession) =
+      Seq("iff", "to_variant", "graft_datediff").map(n => sp.sessionState
+        .functionRegistry.lookupFunction(FunctionIdentifier(n)).get)
+    assert(graft.transpile.SnowflakeSql.run(s, sql).head().getString(0) == "a")
+    val first = infos(s)
+    assert(graft.transpile.SnowflakeSql.run(s, sql).head().getString(0) == "a")
+    // a re-registration would store a fresh ExpressionInfo per name
+    first.zip(infos(s)).foreach { case (a, b) => assert(a eq b, a.getName) }
+    assert(s.experimental.extraOptimizations
+      .count(_ == graft.plans.JsonPathCse) == 1)
+    val fresh = s.newSession()
+    assert(graft.transpile.SnowflakeSql.run(fresh, sql).head().getString(0) == "a")
+  }
+
+  test("registerFor registers only the tables a statement names") {
+    val dir = "/root/testdata/sf0.001"
+    val s = TestSpark.session.newSession()
+    def views = s.catalog.listTables().collect().map(_.name).toSet
+    Tables.registerFor(s, dir,
+      "SELECT n_nationkey, o_orders FROM fct_orders, Nation QUALIFY 1 = 1")
+    assert(views == Set("nation"))
+    Tables.registerFor(s, dir, "SELECT * FROM ORDERS o JOIN lineitem l")
+    assert(views == Set("nation", "orders", "lineitem"))
+    // a named table whose file is absent is skipped, and still fails
+    // loudly at analysis
+    val partial = java.nio.file.Files.createTempDirectory("graft-partial")
+    val region = partial.resolve("region.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "region.parquet"),
+      region)
+    try {
+      val p = s.newSession()
+      val sql = "SELECT * FROM region JOIN supplier ON r_regionkey = s_suppkey"
+      Tables.registerFor(p, partial.toString, sql)
+      assert(p.catalog.listTables().collect().map(_.name).toSet == Set("region"))
+      val e = intercept[org.apache.spark.sql.AnalysisException](p.sql(sql))
+      assert(e.getCondition == "TABLE_OR_VIEW_NOT_FOUND", e.getMessage)
+    } finally {
+      java.nio.file.Files.delete(region)
+      java.nio.file.Files.delete(partial)
+    }
+  }
+
   test("empty SQL passes through (test_transpiler.py:65-70)") {
     assert(transpile("") == "")
     assert(transpile("   ") == "   ")
