@@ -79,16 +79,25 @@ object EngineDefaults {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false"))
 
-  /** Apply the shared scale confs to a session builder. */
+  /** Apply the shared confs to a session builder: AQE with the
+    * [[minPartitionSize]] coalescing floor, the [[codegenCacheEntries]]
+    * class cache, and [[graft.warehouse.LocalFs]] as the `file:`
+    * filesystem (`fs.file.impl`), which sets warehouse file and directory
+    * modes without forking a `chmod` process for each. The codegen cache
+    * size and the filesystem are static: they take effect only through
+    * the builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config(MinPartKey, minPartitionSize)
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.warehouse.LocalFs].getName)
 
   /** Seed the floor onto an EXTERNALLY-built session (the GraftSession
     * deployment path) — only when the deployment did not explicitly set
-    * it, so an operator's own tuning always wins. */
+    * it, so an operator's own tuning always wins. Only the floor: the
+    * static confs of [[tune]] cannot be seeded, so such a session keeps
+    * its own codegen cache size and its own `file:` filesystem. */
   def seed(spark: SparkSession): Unit =
     if (!org.apache.spark.sql.GraftBridge.isConfSet(spark, MinPartKey))
       spark.conf.set(MinPartKey, minPartitionSize)

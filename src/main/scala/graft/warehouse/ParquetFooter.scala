@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Try, Using}
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -16,7 +17,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * parquet file goes through here with the session's Hadoop
   * configuration: Iceberg field ids and write stats, warehouse schemas
   * and row counts, source-cache schemas. A footer is a few KB at the end
-  * of the file; no data page is read, and nothing is cached. */
+  * of the file; no data page is read, and nothing is cached: the read
+  * options over the caller's conf are built per call and shared only by
+  * that call's reads. */
 object ParquetFooter {
 
   /** Above this many files, footers are read by ONE Spark job collecting
@@ -28,10 +31,17 @@ object ParquetFooter {
     * parquet schema inference reads this key first. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  private def read[T](conf: Configuration, path: String)(f: ParquetMetadata => T): T = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf))
-    try f(r.getFooter) finally r.close()
+  /** `f` over the footer of one file at a time, every read sharing one
+    * set of read options over `conf`. Without them parquet makes a fresh
+    * Hadoop `Configuration` per file, which re-parses `core-default.xml`;
+    * build one reader per call, so no conf outlives it. */
+  private def reader[T](conf: Configuration)(f: ParquetMetadata => T): String => T = {
+    val options = HadoopReadOptions.builder(conf).build()
+    path => {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf), options)
+      try f(r.getFooter) finally r.close()
+    }
   }
 
   /** `f` over every footer in `paths`; above [[JobThreshold]] files `f`
@@ -47,11 +57,12 @@ object ParquetFooter {
       spark.sparkContext.parallelize(paths, slices).mapPartitions { it =>
         val conf = new Configuration(false)
         entries.foreach { case (k, v) => conf.set(k, v) }
-        it.map(p => p -> read(conf, p)(f))
+        val read = reader(conf)(f)
+        it.map(p => p -> read(p))
       }.collect().toSeq
     } else {
-      val conf = GraftBridge.hadoopConf(spark)
-      paths.asJava.parallelStream().map[(String, T)](p => p -> read(conf, p)(f))
+      val read = reader(GraftBridge.hadoopConf(spark))(f)
+      paths.asJava.parallelStream().map[(String, T)](p => p -> read(p))
         .toList.asScala.toSeq
     }
 
@@ -82,7 +93,7 @@ object ParquetFooter {
   def tableSchema(spark: SparkSession, path: String): Option[StructType] =
     if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
     else firstDataFile(Paths.get(path))
-      .flatMap(f => read(GraftBridge.hadoopConf(spark), f)(sparkSchema))
+      .flatMap(f => reader(GraftBridge.hadoopConf(spark))(sparkSchema)(f))
 
   /** `spark.read.parquet(paths: _*)`, given the [[tableSchema]] when
     * there is one so that no inference job runs: of the one path, or of

@@ -23,6 +23,8 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
     assert(conf.get(EngineDefaults.MinPartKey) ==
       EngineDefaults.minPartitionSize)
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
+      classOf[graft.warehouse.LocalFs].getName)
   }
 
   test("withConf restores a set key and unsets an absent one, " +

@@ -173,6 +173,34 @@ class SnowflakeSqlSpec extends AnyFunSuite {
     assert(graft.transpile.SnowflakeSql.run(fresh, sql).head().getString(0) == "a")
   }
 
+  test("Spark's own forms of the names graft shadows still resolve; " +
+    "a graft-only name with another arity fails analysis") {
+    val s = TestSpark.session.newSession()
+    def viaSpark(call: String) = String.valueOf(s.sql(s"SELECT $call").head().get(0))
+    val builtins = Seq("try_to_number('12', '99')",
+      "try_to_date('2020-01-02', 'yyyy-MM-dd')",
+      "regexp_substr('a1b22', '[0-9]+')")
+    val before = builtins.map(viaSpark)
+    assert(before == Seq("12", "2020-01-02", "1"))
+    def viaGraft(call: String) = String.valueOf(
+      graft.transpile.SnowflakeSql.run(s, s"SELECT $call").head().get(0))
+    // graft's own arities
+    assert(viaGraft("try_to_number('12.34', 10, 2)") == "12.34")
+    assert(viaGraft("try_to_number('x')") == "null")
+    assert(viaGraft("try_to_date('2020-01-02')") == "2020-01-02")
+    assert(viaGraft("regexp_substr('abc', '[0-9]+')") == "null")
+    assert(viaGraft("iff(1 > 0, 'a', 'b')") == "a")
+    assert(builtins.map(viaSpark) == before)
+    for ((call, name, n) <- Seq(("iff(true, 1)", "iff", 2),
+        ("object_construct('a')", "object_construct", 1))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        graft.transpile.SnowflakeSql.run(s, s"SELECT $call"))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", e.getMessage)
+      assert(e.getMessage.contains(s"`$name`") &&
+        e.getMessage.contains(s"actual number is $n"), e.getMessage)
+    }
+  }
+
   test("registerFor registers only the tables a statement names") {
     val dir = "/root/testdata/sf0.001"
     val s = TestSpark.session.newSession()
