@@ -11,7 +11,7 @@ import graft.sync.SyncManager
 import graft.telemetry.{Console, HealthCheck, ModelRun, RunSummary,
   SavingsTracker}
 import graft.transpile.SnowflakeSql
-import graft.warehouse.Warehouse
+import graft.warehouse.{ParquetFooter, Warehouse}
 
 /** The engine facade — what `impl.execute_model` + connection manager are
   * to the reference (reference `impl.py:222-303`, SURVEY.md §3.2): one
@@ -161,11 +161,12 @@ final class GraftSession(
               }
             else node
           val out = materializer.materialize(sampled, Option(now))
-          // a parquet table's rows come from its footers, not a job
+          // a parquet table's rows come from the footers of the files
+          // of the relation materialize returned, not a job
           val rows =
             if (node.config.tableFormat == "iceberg" ||
               node.config.materialized == "view") out.count()
-            else warehouse.rowCount(materializer.schemaOf(node), node.name)
+            else ParquetFooter.rowCount(spark, out.inputFiles)
           val dur = (System.nanoTime() - t0) / 1e9
           org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
           (rows, dur, spillListener.totalSpillBytes - spill0)

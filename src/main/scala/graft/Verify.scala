@@ -12,16 +12,9 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet)
       else None
-    // dev-only (driver never sets it): SPARK_GRAFT_SHUFFLE decouples
-    // shuffle partitions from cores, as in Bench — the house sizing
-    // rule needs >cores partitions at the fourth decade (e.g. q9's
-    // shuffled-hash build of 150 M orders / 32 partitions exceeds any
-    // reasonable heap; /128 fits). `local` adds Bench's AQE auto-sizing
-    // (see Bench.scala for the rationale + measurements).
+    // AQE's initial partition count (8x cores) sizes the shuffles
     val cpus = EngineDefaults.cpus
-    val shuffle =
-      sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt).getOrElse(cpus)
-    val spark = EngineDefaults.local(cpus, shuffle).getOrCreate()
+    val spark = EngineDefaults.local(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev-only: multi-file result dumps for row-giant sf100 legs — the

@@ -24,7 +24,7 @@ final class Materializer(wh: Warehouse, targetSchema: String = "main") {
   def run(nodes: Seq[ModelNode], now: Column = null): Map[String, DataFrame] =
     Dag.topoOrder(nodes).map(n => n.name -> materialize(n, Option(now))).toMap
 
-  def schemaOf(n: ModelNode): String =
+  private def schemaOf(n: ModelNode): String =
     Dag.schemaName(targetSchema, n.config.customSchema)
 
   /** dbt model-contract enforcement (contract: enforced: true): the

@@ -34,9 +34,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Spark's file index lists for that read (`inputFiles`). For a
   * `column=value` partitioned table the footer holds the data columns
   * only, and Spark infers the partition columns from the directory
-  * names as it always does. Both fall back to Spark inference and a
-  * `count()` for views, Iceberg table directories, an empty directory,
-  * summary files, or a first file with no Spark schema key. Footers are
+  * names as it always does. `read` falls back to Spark inference for
+  * Iceberg table directories, an empty directory, summary files, or a
+  * first file with no Spark schema key; `rowCount` of a view is a
+  * `count()`. Footers are
   * read in parallel on the driver, or by one job on tables with more
   * than [[ParquetFooter.JobThreshold]] files, and nothing is cached:
   * every call reads the files as they are at that moment.
@@ -141,13 +142,9 @@ class Warehouse(val spark: SparkSession, val root: String,
         .foreach(f => Files.deleteIfExists(f))
     }
 
-  def rowCount(schema: String, name: String): Long = {
-    val path = tablePath(schema, name)
-    val footerSchema =
-      if (viewExists(schema, name)) None else ParquetFooter.tableSchema(spark, path)
-    footerSchema.fold(read(schema, name).count())(s =>
-      ParquetFooter.rowCount(spark, spark.read.schema(s).parquet(path).inputFiles))
-  }
+  def rowCount(schema: String, name: String): Long =
+    if (viewExists(schema, name)) read(schema, name).count()
+    else ParquetFooter.rowCount(spark, read(schema, name).inputFiles)
 
   /** Table maintenance — the small-files compaction + clustering rewrite
     * every long-lived table needs (incremental appends accumulate tiny

@@ -61,4 +61,32 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(hits == Seq("src/main/scala/graft/EngineDefaults.scala"),
       s"session builders outside EngineDefaults.local: $hits")
   }
+
+  test("src/main reads exactly the listed environment variables") {
+    val deployment = Set("GRAFT_WAREHOUSE", "SPARK_MASTER",
+      "GRAFT_ICEBERG_TOKEN", "GRAFT_ICEBERG_CREDENTIAL",
+      "GRAFT_ICEBERG_WAREHOUSE", "GRAFT_NESSIE_TOKEN", "GRAFT_NESSIE_REF",
+      "AWS_ACCESS_KEY_ID", "AWS_SECRET_ACCESS_KEY", "AWS_SESSION_TOKEN",
+      "GRAFT_VERBOSITY")
+    val benchAndVerify = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_WARM_DIR", "SPARK_GRAFT_NO_COALESCE")
+    // every read must name its variable as a literal, so none escapes
+    // the list
+    val anyRead = """sys\.env|System\.getenv""".r
+    val read = ("""(?:sys\.env|System\.getenv)(?:\.(?:get|getOrElse|""" +
+      """contains))?\(\s*"([A-Z0-9_]+)"""").r
+    val sources = {
+      val s = Files.walk(Paths.get("src/main/scala"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(Files.readString).toList
+      finally s.close()
+    }
+    val names = sources.flatMap(read.findAllMatchIn(_).map(_.group(1))).toSet
+    val uses = sources.map(anyRead.findAllMatchIn(_).size).sum
+    val literal = sources.map(read.findAllMatchIn(_).size).sum
+    assert(uses == literal, s"$uses env reads, only $literal name a literal")
+    assert(names == deployment ++ benchAndVerify,
+      s"unlisted: ${names -- deployment -- benchAndVerify}; " +
+        s"unread: ${deployment ++ benchAndVerify -- names}")
+  }
 }

@@ -259,11 +259,13 @@ class SessionSpec extends AnyFunSuite {
   test("real spill telemetry flips Gate 5 (no mocks)") {
     import graft.planner.{MetadataHarvester, PlannerConfig, TrafficController, Venue}
     val root = Files.createTempDirectory("graft_spill").toString
-    // force every window buffer row to spill so the model produces real
+    // spill the window buffer every 64 rows so the model produces real
     // task-metric spill bytes at test scale (the in-memory threshold
-    // must drop too, or rows never reach the spillable sorter)
+    // must drop too, or rows never reach the spillable sorter): tens of
+    // spill files, where one per row (threshold 1) opens a reader buffer
+    // per row at merge and ran a 4 GB test heap out of memory
     val gs = TestSpark.withConf(
-        "spark.sql.windowExec.buffer.spill.threshold" -> "1",
+        "spark.sql.windowExec.buffer.spill.threshold" -> "64",
         "spark.sql.windowExec.buffer.in.memory.threshold" -> "1") {
       val gs = new GraftSession(spark, root)
       val node = ModelNode("spiller", ModelConfig("table"), Nil)(s => {
@@ -289,6 +291,39 @@ class SessionSpec extends AnyFunSuite {
       s => Tables.load(s, sf, "orders")), "SELECT 1")
     assert(d.venue == Venue.Cloud && d.gate.contains("COMPLEXITY"))
     assert(d.detail.exists(_.contains("spill")))
+  }
+
+  test("recorded rows equal count() for partitioned table, append " +
+    "incremental and snapshot models") {
+    import org.apache.spark.sql.types.TimestampType
+    val root = Files.createTempDirectory("graft_rows").toString
+    val gs = new GraftSession(spark, root)
+    def nodes(keys: Long) = Seq(
+      ModelNode("p_orders", ModelConfig("table",
+        partitionBy = Some("o_orderstatus")), Nil)(
+        s => Tables.load(s, sf, "orders").filter(col("o_orderkey") < keys)),
+      ModelNode("a_log", ModelConfig("incremental",
+        incrementalStrategy = "append"), Nil)(
+        s => Tables.load(s, sf, "nation").filter(col("n_nationkey") < keys)),
+      ModelNode("s_regions", ModelConfig("snapshot",
+        uniqueKey = Seq("r_regionkey"),
+        snapshotUpdatedAt = Some("updated_at")), Nil)(
+        s => Tables.load(s, sf, "region").withColumn("updated_at",
+          lit(s"2024-01-0${keys % 9 + 1} 00:00:00").cast(TimestampType))))
+    // the second run appends and versions every snapshot row
+    val recorded = Seq(1000L, 20L).zipWithIndex.flatMap { case (keys, i) =>
+      val now = lit(s"2024-02-0${i + 1} 00:00:00").cast(TimestampType)
+      val rows = gs.run(nodes(keys), now = now).map(r => r.name -> r.rows)
+      assert(rows == rows.map { case (n, _) =>
+        n -> gs.warehouse.read("main", n).count() })
+      rows
+    }
+    assert(gs.warehouse.read("main", "a_log").count() == 45)
+    assert(gs.warehouse.read("main", "s_regions").count() == 10)
+    // the ledger persists the same rows
+    assert(graft.telemetry.RunSummary
+      .loadAllRuns(s"$root/_graft/run_summary.json")
+      .map(r => r.name -> r.rows) == recorded)
   }
 
   test("auto-cache: SQL referencing an unknown schema.table ingests once") {

@@ -23,7 +23,7 @@ out=$(mktemp -d /tmp/preclose_verify.XXXX)
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out"
 python3 tools/check.py /root/testdata/sf0.01 "$out"
 
-echo "== preclose 4/4: Bench contract smoke at sf0.001 (one JSON line, rc=0)"
+echo "== preclose 4/4: Bench contract smoke at sf0.001 (one JSON line, rc=0, no failures)"
 # Capture to a file first: under pipefail a Bench crash (or a run that
 # emits no metric line) otherwise aborts the gate with zero diagnostics,
 # making the most likely failure the hardest to debug.
@@ -38,7 +38,17 @@ if [ "$n" -ne 1 ]; then
   echo "FAIL: expected 1 metric line, got $n; log tail:"
   tail -40 "$benchlog"; exit 1
 fi
-python3 -c "import json,sys; json.loads(sys.argv[1])" "$line"
+# a query that throws is listed under failed, not timed: the line must
+# parse AND report no failed query and no failed warm execution
+if ! python3 -c '
+import json, sys
+r = json.loads(sys.argv[1])
+bad = {k: r[k] for k in ("failed_count", "warm_failed") if r[k] > 0}
+if bad:
+    sys.exit("FAIL: %s, failed queries: %s" % (bad, r["failed"]))
+' "$line"; then
+  grep '^\[bench\]' "$benchlog" | tail -20; exit 1
+fi
 rm -f "$benchlog"
 
 rm -rf "$out"

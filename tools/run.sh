@@ -1,8 +1,10 @@
 #!/usr/bin/env bash
 # Dev launcher for graft mains without sbt (avoids the sbt lock so
 # long-running GenScale/Bench/Verify legs can overlap a test build).
-# Usage: tools/run.sh <MainClass> [args...]   (e.g. graft.GenScale)
-# Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_* knobs pass through.
+# Usage: tools/run.sh [-Dspark.key=value ...] <MainClass> [args...]
+#   (e.g. graft.GenScale). A -Dspark.* JVM option reaches the session's
+#   SparkConf, e.g. -Dspark.cleaner.periodicGC.interval=1min graft.Bench.
+# Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_* inputs pass through.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # Classpath mirrors build.sbt: unmanagedBase=/opt/spark/jars + the
