@@ -315,12 +315,15 @@ object Cli {
   /** `icebreaker summary` (cli.py:612-664): last session rendered
     * through the reference's run-summary block (run_summary.py:165-225,
     * shared with the end-of-run print). */
-  def cmdSummary(root: String): String =
-    RunSummary.loadLastSession(s"$root/_graft/run_summary.json") match {
+  def cmdSummary(root: String): String = {
+    val path = s"$root/_graft/run_summary.json"
+    RunSummary.loadLastSession(path) match {
       case None => "No run sessions found yet."
       case Some((startedAt, models)) =>
-        s"Session: $startedAt" + Console.formatRunSummary(models)
+        s"Session: $startedAt" + Console.formatRunSummary(models,
+          RunSummary.loadLastWallSeconds(path).getOrElse(0.0))
     }
+  }
 
   // ----------------------------------------------- health/status/stats
 

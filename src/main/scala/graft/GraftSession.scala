@@ -55,7 +55,7 @@ final class GraftSession(
   val sync = new SyncManager()
   val savings = new SavingsTracker()
   val runSummary = new RunSummary(s"$warehouseRoot/_graft/run_summary.json")
-  /** Task-metric spill accumulator feeding Gate 5's spill clause
+  /** Task-metric spill by job group, feeding Gate 5's spill clause
     * (shared per SparkContext — see [[graft.telemetry.SpillListener]]). */
   val spillListener =
     graft.telemetry.SpillListener.forContext(spark.sparkContext)
@@ -127,122 +127,254 @@ final class GraftSession(
       durationSeconds: Double, rows: Long,
       fallback: Option[String] = None)
 
-  /** Execute a model DAG in topological order with routing, WAL
-    * accounting, dev sampling, fallback-on-error, and savings logging
-    * per node. The WAL ([[state]]) is written per node for crash
-    * recovery; the telemetry ledger persists ONCE per run (success or
-    * not) — a per-node rewrite would make every finish O(full ledger). */
+  /** Execute a model DAG with routing, WAL accounting, dev sampling,
+    * fallback-on-error and savings logging per model; one result per
+    * model, in [[Dag.topoOrder]] order.
+    *
+    * A model starts as soon as every parent has succeeded, and
+    * independent models write side by side on a fixed pool of daemon
+    * threads, as many as the session's cores (`defaultParallelism`) —
+    * the reference's dbt `threads`. The calling thread keeps the work
+    * that is order-sensitive or not thread-safe: it routes each model
+    * (after its parents), marks it running in the WAL and calls its
+    * `build`, one build at a time in topological order, then hands the
+    * built DataFrame to the pool. The pool task checks the contract,
+    * writes, counts rows and records the success, under the model's own
+    * Spark job group, so spill is attributed per model.
+    *
+    * Failures: a classified error is retried (see `DagRun.retry`) once
+    * no other model is in flight, since a degraded retry flips the
+    * session-global codegen conf. Any other error stops new launches and
+    * lets running models finish; then the first failure in topological
+    * order is raised with the others suppressed, so nothing downstream
+    * of a failure runs. The WAL ([[state]]) is written per model for
+    * crash recovery; the telemetry ledger persists ONCE per run (success
+    * or not) — a per-model rewrite would make every finish O(full
+    * ledger). */
   def run(nodes: Seq[ModelNode], now: Column = lit(null),
-      sqlOf: ModelNode => String = _ => ""): Seq[RunResult] =
-    try {
-      Dag.topoOrder(nodes).map { node =>
-        val decision = traffic.decide(spark, node, sqlOf(node))
-        state.markRunning(node.uniqueId)
-        val tStart = System.nanoTime()
-        // each attempt times itself: a fallback retry's recorded duration
-        // must not include the failed first attempt (it would overstate
-        // savings and poison the COMPLEXITY gate's average runtime)
-        def materializeNode(): (Long, Double, Long) = {
-          // drain async task-metric events on both sides so the spill
-          // delta belongs to exactly this model (models run serially)
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          val spill0 = spillListener.totalSpillBytes
-          val t0 = System.nanoTime()
-          val sampled =
-            if (target == "dev" && node.config.materialized != "snapshot")
-              node.config.devSampleMethod match {
-                case "tablesample" =>
-                  // deterministic seed: a dev re-run sees the same rows
-                  node.copy(build = s => node.build(s)
-                    .sample(node.config.devSampleFraction, 42L))
-                case _ =>
-                  node.copy(build =
-                    s => node.build(s).limit(node.config.devSampleSize))
-              }
-            else node
-          val out = materializer.materialize(sampled, Option(now))
-          // a parquet table's rows come from the footers of the files
-          // of the relation materialize returned, not a job
-          val rows =
-            if (node.config.tableFormat == "iceberg" ||
-              node.config.materialized == "view") out.count()
-            else ParquetFooter.rowCount(spark, out.inputFiles)
-          val dur = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          (rows, dur, spillListener.totalSpillBytes - spill0)
-        }
-        def finish(rows: Long, dur: Double, spill: Long, venue: Venue,
-            reason: String): RunResult = {
-          state.markSuccess(node.uniqueId, venue)
-          val venueName = if (venue == Venue.Local) "local" else "cloud"
-          savings.logExecution(node.name, venueName, dur)
-          runSummary.record(ModelRun(node.name, venueName, dur, rows,
-            "success", reason, spillBytes = spill))
-          console.success(f"${node.name} ($venueName, $dur%.1fs, $rows rows)")
-          RunResult(node.name, decision, dur, rows,
-            fallback = Option(reason).filter(_.nonEmpty))
-        }
-        console.step(s"Materializing ${node.name}...")
-        try {
-          val (rows, dur, spill) = materializeNode()
-          finish(rows, dur, spill, Venue.Local, "")
-        } catch {
-          case e: Throwable =>
-            state.markCrash(node.uniqueId)
-            ErrorClassifier.classify(e) match {
-              case Some(cls) =>
-                // reference connections.py:538-545: "Local execution
-                // failed: <err>" → re-execute on the fallback venue
-                console.warn(s"Local execution failed: ${e.getMessage} " +
-                  s"(${cls.reason})")
-                retryPerPolicy(cls, materializeNode _, finish, node, e)
-              case None =>
-                runSummary.record(ModelRun(node.name, "local",
-                  (System.nanoTime() - tStart) / 1e9, 0L, "error"))
-                console.error(s"${node.name}: ${e.getMessage}")
-                throw e
-            }
-        }
-      }
-    } finally {
+      sqlOf: ModelNode => String = _ => ""): Seq[RunResult] = {
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, spark.sparkContext.defaultParallelism), (r: Runnable) => {
+        val t = new Thread(r, s"graft-model-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    try new DagRun(Dag.topoOrder(nodes).toIndexedSeq, now, sqlOf, pool)
+      .execute()
+    finally {
+      // no write outlives the call, even when the scheduler itself threw
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.DAYS)
       runSummary.persist()
       harvester.refresh()
       // reference run_summary.py:253-256: every run closes with the
       // formatted summary block at normal verbosity
-      console.info(Console.formatRunSummary(runSummary.recorded))
+      console.info(Console.formatRunSummary(runSummary.recorded,
+        runSummary.wallSeconds))
+    }
+  }
+
+  /** The scheduler of one [[run]] call. Its state is read and written by
+    * the calling thread only; pool tasks report back through `done`. */
+  private final class DagRun(order: IndexedSeq[ModelNode], now: Column,
+      sqlOf: ModelNode => String,
+      pool: java.util.concurrent.ExecutorService) {
+    private val n = order.length
+    private val parents = {
+      val index = order.map(_.uniqueId).zipWithIndex.toMap
+      order.map(_.dependsOn.flatMap(index.get))
+    }
+    private val decisions = new Array[RoutingDecision](n)
+    private val results = new Array[RunResult](n)
+    private val launched = new Array[Boolean](n)
+    private val launchedAt = new Array[Long](n)
+    private val done = new java.util.concurrent.LinkedBlockingQueue[
+      (Int, Either[Throwable, RunResult])]()
+    private var inFlight = 0
+    private val retries = scala.collection.mutable.Queue[
+      (Int, ErrorClassifier.ErrorClass, Throwable)]()
+    private val failures =
+      scala.collection.mutable.ArrayBuffer[(Int, Throwable)]()
+    // job groups are unique per run: sessions may share one context
+    private val groupPrefix = s"graft-${java.util.UUID.randomUUID()}"
+
+    def execute(): Seq[RunResult] = {
+      var more = true
+      while (more) {
+        collect(block = false)
+        if (failures.nonEmpty || retries.nonEmpty) {
+          // a failure drains the pool and stops; a retry waits for it
+          if (inFlight > 0) collect(block = true)
+          else if (failures.isEmpty) retry(retries.dequeue())
+          else more = false
+        } else (0 until n).find(i => !launched(i) &&
+            parents(i).forall(results(_) != null)) match {
+          case Some(i) => launch(i)
+          case None => if (inFlight > 0) collect(block = true) else more = false
+        }
+      }
+      if (failures.nonEmpty) {
+        val errs = failures.sortBy(_._1).map(_._2)
+        errs.tail.filterNot(_ eq errs.head).foreach(errs.head.addSuppressed)
+        throw errs.head
+      }
+      results.toSeq
     }
 
-  /** Execute the classified retry: FallbackCloud re-runs flagged CLOUD
-    * (single-engine deployment — the run happens here, the venue is the
-    * flag the reference records); RetryDegraded re-runs locally with
-    * whole-stage codegen off. A retry failure surfaces the ORIGINAL
-    * error with the retry error suppressed. */
-  private def retryPerPolicy(cls: ErrorClassifier.ErrorClass,
-      attempt: () => (Long, Double, Long),
-      finish: (Long, Double, Long, Venue, String) => RunResult,
-      node: ModelNode, original: Throwable): RunResult =
-    try {
-      cls.policy match {
-        case ErrorClassifier.FallbackCloud =>
-          val (rows, dur, spill) = attempt()
-          finish(rows, dur, spill, Venue.Cloud, cls.reason)
+    private def collect(block: Boolean): Unit = {
+      var next = if (block) done.take() else done.poll()
+      while (next != null) {
+        inFlight -= 1
+        next match {
+          case (i, Right(r)) => results(i) = r
+          case (i, Left(e)) => failed(i, e)
+        }
+        next = done.poll()
+      }
+    }
+
+    private def launch(i: Int): Unit = {
+      val node = order(i)
+      decisions(i) = traffic.decide(spark, node, sqlOf(node))
+      state.markRunning(node.uniqueId)
+      launched(i) = true
+      launchedAt(i) = System.nanoTime()
+      console.step(s"Materializing ${node.name}...")
+      build(i) match {
+        case Right((df, secs)) => submit(i, df, secs, Venue.Local, "")
+        case Left(e) => failed(i, e)
+      }
+    }
+
+    /** The model's output with dev sampling applied, and the seconds the
+      * build took. Each attempt times itself: a fallback retry's recorded
+      * duration must not include the failed first attempt (it would
+      * overstate savings and poison the COMPLEXITY gate's average). */
+    private def build(i: Int): Either[Throwable, (DataFrame, Double)] = {
+      val node = order(i)
+      val t0 = System.nanoTime()
+      try {
+        val df = node.build(spark)
+        val sampled =
+          if (target == "dev" && node.config.materialized != "snapshot")
+            node.config.devSampleMethod match {
+              // deterministic seed: a dev re-run sees the same rows
+              case "tablesample" =>
+                df.sample(node.config.devSampleFraction, 42L)
+              case _ => df.limit(node.config.devSampleSize)
+            }
+          else df
+        Right((sampled, (System.nanoTime() - t0) / 1e9))
+      } catch { case e: Throwable => Left(e) }
+    }
+
+    private def submit(i: Int, df: DataFrame, buildSeconds: Double,
+        venue: Venue, reason: String): Unit = {
+      val (node, decision) = (order(i), decisions(i))
+      inFlight += 1
+      pool.execute { () =>
+        done.put(i -> (try Right(write(node, decision, df, buildSeconds,
+          venue, reason)) catch { case e: Throwable => Left(e) }))
+      }
+    }
+
+    /** A pool task: write one built model and record its success. */
+    private def write(node: ModelNode, decision: RoutingDecision,
+        df: DataFrame, buildSeconds: Double, venue: Venue,
+        reason: String): RunResult = {
+      val sc = spark.sparkContext
+      val group = s"$groupPrefix-${node.uniqueId}"
+      SparkSession.setActiveSession(spark)
+      sc.setJobGroup(group, s"graft model ${node.name}")
+      try {
+        val t0 = System.nanoTime()
+        val out = materializer.write(node, df, Option(now))
+        // a parquet table's rows come from the footers of the files of
+        // the relation the write returned, not a job
+        val rows =
+          if (node.config.tableFormat == "iceberg" ||
+            node.config.materialized == "view") out.count()
+          else ParquetFooter.rowCount(spark, out.inputFiles)
+        val dur = buildSeconds + (System.nanoTime() - t0) / 1e9
+        // task-end events are asynchronous: drain, then read this
+        // model's group
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        val spill = spillListener.takeSpillBytes(group)
+        state.markSuccess(node.uniqueId, venue)
+        val venueName = if (venue == Venue.Local) "local" else "cloud"
+        savings.logExecution(node.name, venueName, dur)
+        runSummary.record(ModelRun(node.name, venueName, dur, rows,
+          "success", reason, spillBytes = spill))
+        console.success(f"${node.name} ($venueName, $dur%.1fs, $rows rows)")
+        RunResult(node.name, decision, dur, rows,
+          fallback = Option(reason).filter(_.nonEmpty))
+      } finally sc.clearJobGroup()
+    }
+
+    /** A first attempt failed: record the crash, then queue a classified
+      * retry, or stop the run. */
+    private def failed(i: Int, e: Throwable): Unit = {
+      val node = order(i)
+      state.markCrash(node.uniqueId)
+      ErrorClassifier.classify(e) match {
+        case Some(cls) if failures.isEmpty =>
+          // reference connections.py:538-545: "Local execution failed:
+          // <err>" → re-execute on the fallback venue
+          console.warn(s"Local execution failed: ${e.getMessage} " +
+            s"(${cls.reason})")
+          retries.enqueue((i, cls, e))
+        case cls => abort(i, e, cls.fold("")(_.reason),
+          (System.nanoTime() - launchedAt(i)) / 1e9,
+          s"${node.name}: ${e.getMessage}")
+      }
+    }
+
+    /** Record a model's failure and stop new launches; a queued retry
+      * will not run either, so it fails with its original error. */
+    private def abort(i: Int, e: Throwable, reason: String, seconds: Double,
+        message: String): Unit = {
+      runSummary.record(ModelRun(order(i).name, "local", seconds, 0L,
+        "error", reason))
+      console.error(message)
+      failures += i -> e
+      retries.dequeueAll(_ => true).foreach { case (j, cls, err) =>
+        abort(j, err, cls.reason, 0.0, s"${order(j).name}: ${err.getMessage}")
+      }
+    }
+
+    /** Execute a classified retry with no other model in flight:
+      * FallbackCloud re-runs flagged CLOUD (single-engine deployment —
+      * the run happens here, the venue is the flag the reference
+      * records); RetryDegraded re-runs locally with whole-stage codegen
+      * off. A retry failure surfaces the ORIGINAL error with the retry
+      * error suppressed. */
+    private def retry(pending: (Int, ErrorClassifier.ErrorClass,
+        Throwable)): Unit = {
+      val (i, cls, original) = pending
+      def attempt(venue: Venue): Either[Throwable, RunResult] =
+        build(i).flatMap { case (df, secs) =>
+          submit(i, df, secs, venue, cls.reason)
+          inFlight -= 1
+          done.take()._2
+        }
+      val outcome = cls.policy match {
+        case ErrorClassifier.FallbackCloud => attempt(Venue.Cloud)
         case ErrorClassifier.RetryDegraded =>
           val key = "spark.sql.codegen.wholeStage"
           val prior = spark.conf.get(key, "true")
           spark.conf.set(key, "false")
-          try {
-            val (rows, dur, spill) = attempt()
-            finish(rows, dur, spill, Venue.Local, cls.reason)
-          } finally spark.conf.set(key, prior)
+          try attempt(Venue.Local) finally spark.conf.set(key, prior)
       }
-    } catch {
-      case retryErr: Throwable =>
-        runSummary.record(ModelRun(node.name, "local", 0.0, 0L, "error",
-          cls.reason))
-        console.error(s"${node.name}: retry failed (${cls.reason})")
-        original.addSuppressed(retryErr)
-        throw original
+      outcome match {
+        case Right(r) => results(i) = r
+        case Left(retryErr) =>
+          original.addSuppressed(retryErr)
+          abort(i, original, cls.reason, 0.0,
+            s"${order(i).name}: retry failed (${cls.reason})")
+      }
     }
+  }
 
   /** CSV seed load (reference adapters.sql:130-152). */
   def seed(csvPath: String, name: String): DataFrame = {

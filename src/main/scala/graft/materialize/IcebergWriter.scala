@@ -872,7 +872,17 @@ object IcebergWriter {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fData = newData.map(d => Future {
+      // each leg's jobs run under the committing thread's job group, so
+      // per-group telemetry (SpillListener) counts them for the model
+      // that commits; a pool thread otherwise keeps whatever group the
+      // thread that created it had
+      val key = graft.telemetry.SpillListener.JobGroupKey
+      val group = spark.sparkContext.getLocalProperty(key)
+      def leg[T](body: => T): Future[T] = Future {
+        spark.sparkContext.setLocalProperty(key, group)
+        try body finally spark.sparkContext.setLocalProperty(key, null)
+      }
+      val fData = newData.map(d => leg {
         val files = writeFiles(stampIds(d, wlayout.idOf), "snap", spec)
         val m = new File(mdir, s"manifest-$commitId-d.avro")
         writeManifest(m, files, content = 0, spec, schema, wlayout)
@@ -880,14 +890,14 @@ object IcebergWriter {
       })
       // equality-delete files carry only the key columns, unpartitioned
       // (they apply table-wide by value)
-      val fEq = eqDelete.map { case (k, _) => Future {
+      val fEq = eqDelete.map { case (k, _) => leg {
         val files = writeFiles(stampIds(k, wlayout.idOf), "eqd", Nil)
         val m = new File(mdir, s"manifest-$commitId-e.avro")
         writeManifest(m, files, content = 2, spec, schema, wlayout,
           equalityIds = eqIdsOf(wlayout))
         (files, m)
       } }
-      val fTomb = tombstones.map { t => Future {
+      val fTomb = tombstones.map { t => leg {
         // tombstone paths are table-relative strings; store them
         // re-anchored at the table location like every writer does
         import org.apache.spark.sql.functions._

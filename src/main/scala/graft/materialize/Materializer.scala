@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import graft.model.{Dag, ModelNode}
 import graft.warehouse.Warehouse
 
-/** Executes a model DAG against a [[Warehouse]] — the engine-side
+/** Materializes one model into a [[Warehouse]] — the engine-side
   * equivalent of the reference's materialization macros + adapter executor
   * (reference `impl.py:222-303` and the materialization SQL macros).
   *
@@ -15,14 +15,10 @@ import graft.warehouse.Warehouse
   * [[Incremental]] / [[Snapshot]] followed by a table rewrite; `append`
   * is a real Parquet append (no rewrite). Each write can be verified by
   * row-count reconciliation (the reference's correctness primitive,
-  * `sync_manager.py:101-114`) via [[graft.sync.SyncManager]].
+  * `sync_manager.py:101-114`) via [[graft.sync.SyncManager]]. A DAG
+  * runs through [[graft.GraftSession.run]].
   */
 final class Materializer(wh: Warehouse, targetSchema: String = "main") {
-
-  /** Run every node in dependency order; returns the materialized
-    * DataFrames by model name. */
-  def run(nodes: Seq[ModelNode], now: Column = null): Map[String, DataFrame] =
-    Dag.topoOrder(nodes).map(n => n.name -> materialize(n, Option(now))).toMap
 
   private def schemaOf(n: ModelNode): String =
     Dag.schemaName(targetSchema, n.config.customSchema)
@@ -69,9 +65,15 @@ final class Materializer(wh: Warehouse, targetSchema: String = "main") {
     }
   }
 
-  def materialize(n: ModelNode, now: Option[Column] = None): DataFrame = {
-    val spark = wh.spark
-    val df = n.build(spark)
+  /** Build `n` and [[write]] its output. */
+  def materialize(n: ModelNode, now: Option[Column] = None): DataFrame =
+    write(n, n.build(wh.spark), now)
+
+  /** Check `df`, `n`'s built output, against the model's contract, write
+    * it by the model's materialization and return the written relation
+    * read back. Never calls `n.build`. */
+  def write(n: ModelNode, df: DataFrame,
+      now: Option[Column] = None): DataFrame = {
     enforceContract(n, df)
     val schema = schemaOf(n)
     if (n.config.tableFormat == "iceberg")

@@ -12,6 +12,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * crash; `crashBlacklistCount` crashes blacklist the model.
   *
   * Persisted as JSON next to the warehouse (Jackson ships with Spark).
+  * Every read and write holds the manager's lock: models running side
+  * by side mark their own entries, and each mark rewrites the one
+  * `state.json.tmp` before its rename.
   */
 final class StateManager(path: String,
     config: PlannerConfig = PlannerConfig()) {
@@ -53,7 +56,7 @@ final class StateManager(path: String,
     }
   }
 
-  private def persist(): Unit = {
+  private def persist(): Unit = synchronized {
     val obj = Map(
       "running" -> running,
       "crashes" -> crashes,
@@ -67,31 +70,34 @@ final class StateManager(path: String,
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def markRunning(modelId: String): Unit = {
+  def markRunning(modelId: String): Unit = synchronized {
     running += modelId -> System.currentTimeMillis()
     persist()
   }
 
-  def markSuccess(modelId: String, venue: Venue = Venue.Local): Unit = {
+  def markSuccess(modelId: String,
+      venue: Venue = Venue.Local): Unit = synchronized {
     running -= modelId
     successes += modelId -> (successes.getOrElse(modelId, 0) + 1)
     if (venue == Venue.Local) localRuns += 1 else cloudRuns += 1
     persist()
   }
 
-  def markCrash(modelId: String): Unit = {
+  def markCrash(modelId: String): Unit = synchronized {
     running -= modelId
     crashes += modelId -> (crashes.getOrElse(modelId, 0) + 1)
     persist()
   }
 
-  def crashCount(modelId: String): Int = crashes.getOrElse(modelId, 0)
+  def crashCount(modelId: String): Int =
+    synchronized(crashes.getOrElse(modelId, 0))
 
   def isBlacklisted(modelId: String): Boolean =
     crashCount(modelId) >= config.crashBlacklistCount
 
   /** Savings share: fraction of runs kept local (state.py savings test). */
-  def localSharePct: Double =
+  def localSharePct: Double = synchronized {
     if (localRuns + cloudRuns == 0) 0.0
     else 100.0 * localRuns / (localRuns + cloudRuns)
+  }
 }

@@ -163,8 +163,11 @@ object Console {
     * by frequency, first five errors, and the savings-CLI footer.
     * Savings follow the reference's rule (run_summary.py:36-40): only
     * successful local runs count, valued at the estimated cloud cost.
+    * The duration line sums the models' own seconds; the wall line is
+    * the run's `finished_at − started_at`, which is shorter when models
+    * overlap.
     */
-  def formatRunSummary(models: Seq[ModelRun]): String = {
+  def formatRunSummary(models: Seq[ModelRun], wallSeconds: Double): String = {
     val bar = "=" * 60
     val local = models.count(_.venue == "local")
     val cloud = models.count(_.venue == "cloud")
@@ -208,7 +211,8 @@ object Console {
     (Seq("", bar, "GRAFT RUN SUMMARY", bar, "") ++
       overview ++ Seq("",
         f"Estimated Savings: $$$saved%.2f",
-        f"Total Duration:    $duration%.1fs", "") ++
+        f"Total Duration:    $duration%.1fs (summed over models)",
+        f"Run Wall Time:     $wallSeconds%.1fs", "") ++
       breakdown ++ errorBlock ++
       Seq(bar, "Run 'graft.Cli savings' for detailed cost analysis", ""))
       .mkString("\n")

@@ -15,6 +15,11 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * feeds [[graft.planner.MetadataHarvester]] — per-model average runtime
   * for the COMPLEXITY routing gate. Clock is injected (no wall-clock
   * reads inside operators — SURVEY.md §7).
+  *
+  * Models that run side by side record as they finish, so every method
+  * holds the recorder's lock. A session's wall time (`finished_at −
+  * started_at`) is kept beside its summed model seconds: when models
+  * overlap, the sum exceeds the wall.
   */
 final case class ModelRun(
     name: String,
@@ -35,16 +40,20 @@ final class RunSummary(path: String,
   // millisecond must not overwrite each other
   private val sessionId = java.util.UUID.randomUUID().toString
   private val runs = scala.collection.mutable.ArrayBuffer[ModelRun]()
+  private var finishedAt = startedAt
 
-  def record(run: ModelRun): Unit = runs += run
+  def record(run: ModelRun): Unit = synchronized(runs += run)
 
   /** Runs recorded so far this session (feeds the end-of-run block). */
-  def recorded: Seq[ModelRun] = runs.toSeq
+  def recorded: Seq[ModelRun] = synchronized(runs.toSeq)
+
+  /** Seconds from the session's start to its last [[persist]]. */
+  def wallSeconds: Double = synchronized((finishedAt - startedAt) / 1e3)
 
   private def sessionObj = Map(
     "session_id" -> sessionId,
     "started_at" -> startedAt,
-    "finished_at" -> clock(),
+    "finished_at" -> finishedAt,
     "models" -> runs.map(r => Map(
       "name" -> r.name, "venue" -> r.venue,
       "duration_seconds" -> r.durationSeconds,
@@ -52,7 +61,8 @@ final class RunSummary(path: String,
       "spill_bytes" -> r.spillBytes)))
 
   /** Append-or-replace this session in the persisted ledger. */
-  def persist(): Unit = {
+  def persist(): Unit = synchronized {
+    finishedAt = clock()
     val prior = loadSessions(path)
       .filterNot(_.path("session_id").asText("") == sessionId)
     val obj = Map("sessions" -> (prior.map(mapper.convertValue(_,
@@ -66,13 +76,14 @@ final class RunSummary(path: String,
   }
 
   /** The closing summary line (run_summary.py render). */
-  def render: String = {
+  def render: String = synchronized {
     val ok = runs.count(_.status == "success")
     val failed = runs.length - ok
     val local = runs.count(_.venue == "local")
     val total = runs.map(_.durationSeconds).sum
     f"${runs.length} models ($ok ok, $failed failed), $local local, " +
-      f"$total%.1f s total, ${runs.map(_.rows).sum} rows produced"
+      f"$total%.1f s total over models in $wallSeconds%.1f s wall, " +
+      s"${runs.map(_.rows).sum} rows produced"
   }
 
   /** Last persisted session's model count (history reader analog). */
@@ -114,4 +125,12 @@ object RunSummary {
   def loadLastSession(path: String): Option[(Long, Seq[ModelRun])] =
     loadSessions(path).lastOption
       .map(s => (s.path("started_at").asLong(), runsOf(s)))
+
+  /** The last persisted session's wall seconds, `finished_at −
+    * started_at` (0 for a legacy session with no `finished_at`). */
+  def loadLastWallSeconds(path: String): Option[Double] =
+    loadSessions(path).lastOption.map { s =>
+      val start = s.path("started_at").asLong()
+      (s.path("finished_at").asLong(start) - start) / 1e3
+    }
 }

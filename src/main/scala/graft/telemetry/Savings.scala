@@ -37,12 +37,14 @@ final case class Execution(
     durationSeconds: Double,
     savedUsd: Double)
 
+/** The ledger holds its lock on every read and write: models running
+  * side by side log their executions as they finish. */
 final class SavingsTracker(warehouse: String = "xs",
     edition: String = "standard") {
   private val buf = scala.collection.mutable.ArrayBuffer[Execution]()
 
   def logExecution(model: String, engine: String,
-      durationSeconds: Double): Execution = {
+      durationSeconds: Double): Execution = synchronized {
     val saved =
       if (engine == "local")
         CostModel.cloudCostUsd(durationSeconds, warehouse, edition)
@@ -52,16 +54,17 @@ final class SavingsTracker(warehouse: String = "xs",
     e
   }
 
-  def executions: Seq[Execution] = buf.toSeq
-  def totalSavedUsd: Double = buf.map(_.savedUsd).sum
+  def executions: Seq[Execution] = synchronized(buf.toSeq)
+  def totalSavedUsd: Double = synchronized(buf.map(_.savedUsd).sum)
 
   /** Top-N models by savings (savings.py:276-291). */
-  def topModels(n: Int = 5): Seq[(String, Double)] =
+  def topModels(n: Int = 5): Seq[(String, Double)] = synchronized {
     buf.groupBy(_.model).view.mapValues(_.map(_.savedUsd).sum)
       .toSeq.sortBy { case (m, s) => (-s, m) }.take(n)
+  }
 
   /** Run summary line (run_summary.py analog). */
-  def summary: String = {
+  def summary: String = synchronized {
     val local = buf.count(_.engine == "local")
     val cloud = buf.count(_.engine == "cloud")
     f"$local local / $cloud cloud runs, $$${totalSavedUsd}%.2f estimated savings"

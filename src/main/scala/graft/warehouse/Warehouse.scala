@@ -48,8 +48,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 class Warehouse(val spark: SparkSession, val root: String,
     val keepVersions: Int = 2) {
+  // models running side by side register and drop views concurrently
   private val views =
-    scala.collection.mutable.Map[(String, String), DataFrame]()
+    scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
 
   @volatile private var versionLabel: String = ""
 
@@ -356,9 +357,11 @@ class Warehouse(val spark: SparkSession, val root: String,
     val line = mapper.writeValueAsString(mapper.createObjectNode()
       .put("schema", schema).put("table", name).put("version", version)
       .put("label", label).put("action", action)) + "\n"
-    Files.write(ledgerPath, line.getBytes("UTF-8"),
+    // one append at a time: a line must never interleave with another
+    // model's archive of its own table
+    Warehouse.synchronized(Files.write(ledgerPath, line.getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+      java.nio.file.StandardOpenOption.APPEND))
   }
 
   final case class VersionEntry(schema: String, table: String,

@@ -61,6 +61,8 @@ class CliSpec extends AnyFunSuite {
     assert(summary.contains("Models: 1 total"))
     assert(summary.contains("Local (FREE):  1 (100%)"))
     assert(summary.contains("Estimated Savings: $"))
+    assert(summary.matches("(?s).*Total Duration: +\\d+\\.\\ds \\(summed over models\\)" +
+      "\nRun Wall Time: +\\d+\\.\\ds\n.*"))
     assert(summary.contains("Run 'graft.Cli savings'"))
     val savings = Cli.cmdSavings(root, Nil)
     assert(savings.contains("Savings"))

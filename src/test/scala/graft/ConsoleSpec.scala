@@ -94,7 +94,7 @@ class ConsoleSpec extends AnyFunSuite {
       ModelRun("c2", "cloud", 1.0, 5, "success", "COMPLEXITY"))
     val errs = (1 to 7).map(i =>
       ModelRun(s"bad$i", "local", 0.0, 0, "error", "oom"))
-    val out = Console.formatRunSummary(ok ++ routed ++ errs)
+    val out = Console.formatRunSummary(ok ++ routed ++ errs, 3.0)
     assert(out.contains("GRAFT RUN SUMMARY"))
     assert(out.contains("Models: 12 total"))
     assert(out.contains("Local (FREE):  10 (83%)"))
@@ -104,7 +104,9 @@ class ConsoleSpec extends AnyFunSuite {
     // savings: only successful local runs (3 × 2 s), not cloud or errors
     val expected = graft.telemetry.CostModel.cloudCostUsd(2.0) * 3
     assert(out.contains(f"Estimated Savings: $$$expected%.2f"))
-    assert(out.contains("Total Duration:    8.0s"))
+    // models that overlapped: 8 s of model time in a 3 s run
+    assert(out.contains("Total Duration:    8.0s (summed over models)"))
+    assert(out.contains("Run Wall Time:     3.0s"))
     // breakdown sorted by -count: 7×oom, then 3×direct, then 2×COMPLEXITY
     val bIdx = out.indexOf("Routing Breakdown:")
     assert(bIdx >= 0)
@@ -116,7 +118,7 @@ class ConsoleSpec extends AnyFunSuite {
     assert(!out.contains("- bad6: oom"))
     assert(out.contains("... and 2 more"))
     // no Failed/Errors lines when everything succeeds
-    val clean = Console.formatRunSummary(ok)
+    val clean = Console.formatRunSummary(ok, 6.0)
     assert(!clean.contains("Failed:") && !clean.contains("Errors:"))
   }
 }

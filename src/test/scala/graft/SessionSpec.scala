@@ -320,10 +320,12 @@ class SessionSpec extends AnyFunSuite {
     }
     assert(gs.warehouse.read("main", "a_log").count() == 45)
     assert(gs.warehouse.read("main", "s_regions").count() == 10)
-    // the ledger persists the same rows
+    // the ledger persists the same rows; within a run, models are
+    // recorded as they finish, so each run's three are compared as sets
     assert(graft.telemetry.RunSummary
       .loadAllRuns(s"$root/_graft/run_summary.json")
-      .map(r => r.name -> r.rows) == recorded)
+      .map(r => r.name -> r.rows).grouped(3).map(_.toSet).toSeq ==
+      recorded.grouped(3).map(_.toSet).toSeq)
   }
 
   test("auto-cache: SQL referencing an unknown schema.table ingests once") {
@@ -509,6 +511,149 @@ class SessionSpec extends AnyFunSuite {
     }
   }
 
+  // ------------------------------------------------- concurrent models
+
+  /** The model ids in the persisted WAL's successes, crashes and running
+    * entries. */
+  private def walOf(root: String): (Set[String], Set[String], Set[String]) = {
+    import scala.jdk.CollectionConverters._
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Paths.get(root, "_graft", "state.json").toFile)
+    def ids(field: String) = j.path(field).fieldNames().asScala
+      .map(_.stripPrefix("model.graft.")).toSet
+    (ids("successes"), ids("crashes"), ids("running"))
+  }
+
+  test("concurrent run: an unclassified build failure is raised, its " +
+    "running siblings finish, nothing downstream runs, WAL = ledger") {
+    val root = Files.createTempDirectory("graft_conc_fail").toString
+    val gs = new GraftSession(spark, root)
+    var downstreamBuilt = false
+    val nodes = Seq(
+      ModelNode("a_ok", ModelConfig("table"), Nil)(
+        s => Tables.load(s, sf, "nation")),
+      ModelNode("b_ok", ModelConfig("table"), Nil)(
+        s => Tables.load(s, sf, "region")),
+      // the last parentless model in topological order: both siblings
+      // are in flight when its build throws
+      ModelNode("c_bad", ModelConfig("table"), Nil)(
+        _ => throw new IllegalStateException("c_bad broke")),
+      ModelNode("d_after_bad", ModelConfig("table"),
+        Seq("model.graft.c_bad"))(s => {
+        downstreamBuilt = true
+        Tables.load(s, sf, "region")
+      }),
+      // ready only after a_ok, and after c_bad in topological order: the
+      // failure has stopped new launches by then
+      ModelNode("e_after_a", ModelConfig("table"), Seq("model.graft.a_ok"))(
+        s => Tables.load(s, sf, "region")))
+    val err = intercept[IllegalStateException](gs.run(nodes))
+    assert(err.getMessage == "c_bad broke")
+    assert(gs.warehouse.tableExists("main", "a_ok"))
+    assert(gs.warehouse.tableExists("main", "b_ok"))
+    Seq("c_bad", "d_after_bad", "e_after_a").foreach(n =>
+      assert(!gs.warehouse.tableExists("main", n), n))
+    assert(!downstreamBuilt)
+    val Some((_, models)) = graft.telemetry.RunSummary
+      .loadLastSession(s"$root/_graft/run_summary.json")
+    val ledger = models.map(m => m.name -> m.status).toMap
+    assert(ledger == Map("a_ok" -> "success", "b_ok" -> "success",
+      "c_bad" -> "error"))
+    val (ok, crashed, running) = walOf(root)
+    assert(running.isEmpty)
+    nodes.map(_.name).foreach { n =>
+      val wal = if (ok(n)) "success" else if (crashed(n)) "error" else "never"
+      assert(wal == ledger.getOrElse(n, "never"), n)
+    }
+  }
+
+  test("concurrent run: a degraded retry waits for its in-flight " +
+    "sibling, which writes with whole-stage codegen on") {
+    val key = "spark.sql.codegen.wholeStage"
+    val gs = new GraftSession(spark,
+      Files.createTempDirectory("graft_conc_retry").toString)
+    var calls = 0
+    var retryBuild: Option[(Long, String)] = None
+    val nodes = Seq(
+      ModelNode("a_slow", ModelConfig("table"), Nil)(
+        s => TaskProbe.slowRows(s, "retry_sibling")),
+      ModelNode("b_oomish", ModelConfig("table"), Nil)(s => {
+        calls += 1
+        if (calls == 1) throw new RuntimeException(
+          "Not enough memory for hash aggregation")
+        retryBuild = Some(System.nanoTime() -> s.conf.get(key))
+        Tables.load(s, sf, "region")
+      }))
+    val r = gs.run(nodes)
+    assert(calls == 2)
+    assert(r.map(_.name) == Seq("a_slow", "b_oomish"))
+    assert(r(1).fallback.contains("Local execution exhausted memory"))
+    val (retryAt, retryConf) = retryBuild.get
+    assert(retryConf == "false")
+    val sibling = TaskProbe.seen("retry_sibling")
+    assert(sibling.size == 4)
+    assert(sibling.forall(_._2 == "true"), sibling)
+    assert(sibling.map(_._1).max < retryAt,
+      "the degraded retry began while its sibling was writing")
+    assert(spark.conf.get(key) != "false")
+  }
+
+  test("concurrent run: builds run on the calling thread in topological " +
+    "order, independent writes overlap") {
+    val gs = new GraftSession(spark,
+      Files.createTempDirectory("graft_conc_threads").toString)
+    val builds = scala.collection.mutable.ArrayBuffer[(String, Thread, Long)]()
+    def node(name: String, deps: Seq[String])(
+        body: org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame) =
+      ModelNode(name, ModelConfig("table"), deps.map("model.graft." + _))(
+        s => {
+          builds += ((name, Thread.currentThread, System.nanoTime()))
+          body(s)
+        })
+    val nodes = Seq(
+      node("joined", Seq("p1", "p2"))(
+        _ => gs.warehouse.read("main", "p1")
+          .union(gs.warehouse.read("main", "p2"))),
+      node("p1", Nil)(s => TaskProbe.slowRows(s, "threads_p1")),
+      node("p2", Nil)(s => TaskProbe.slowRows(s, "threads_p2")),
+      node("v", Nil)(s => Tables.load(s, sf, "region")))
+    val r = gs.run(nodes)
+    assert(r.map(_.name) == Seq("p1", "p2", "joined", "v"))
+    assert(builds.forall(_._2 eq Thread.currentThread), builds)
+    // the three parentless models build first, the child after its parents
+    assert(builds.map(_._1).toSeq == Seq("p1", "p2", "v", "joined"))
+    val (p1, p2) = (TaskProbe.seen("threads_p1").map(_._1),
+      TaskProbe.seen("threads_p2").map(_._1))
+    assert(p1.min < p2.max && p2.min < p1.max, "p1 and p2 did not overlap")
+    assert(builds.last._3 > (p1 ++ p2).max)
+    assert(r.find(_.name == "joined").get.rows == 8)
+  }
+
+  test("spill is attributed by job group: of two concurrent models only " +
+    "the spilling one records spill") {
+    val root = Files.createTempDirectory("graft_spill_group").toString
+    // the spill thresholds of "real spill telemetry flips Gate 5"
+    TestSpark.withConf(
+        "spark.sql.windowExec.buffer.spill.threshold" -> "64",
+        "spark.sql.windowExec.buffer.in.memory.threshold" -> "1") {
+      val gs = new GraftSession(spark, root)
+      gs.run(Seq(
+        // still writing when the spiller has finished: its group sees
+        // none of the spiller's spill
+        ModelNode("quiet", ModelConfig("table"), Nil)(
+          s => TaskProbe.rowsAfter(s, s"$root/main/spiller/_SUCCESS")),
+        ModelNode("spiller", ModelConfig("table"), Nil)(s => {
+          import org.apache.spark.sql.expressions.Window
+          Tables.load(s, sf, "orders").withColumn("rn", row_number().over(
+            Window.partitionBy("o_orderstatus").orderBy("o_orderkey")))
+        })))
+    }
+    val runs = graft.telemetry.RunSummary.loadAllRuns(
+      s"$root/_graft/run_summary.json").map(r => r.name -> r.spillBytes).toMap
+    assert(runs("spiller") > 0, runs)
+    assert(runs("quiet") == 0, runs)
+  }
+
   test("run summary records sessions and persists JSON") {
     val root = Files.createTempDirectory("graft_rs").toString
     val gs = new GraftSession(spark, root)
@@ -517,6 +662,11 @@ class SessionSpec extends AnyFunSuite {
     gs.run(Seq(node))
     assert(gs.runSummary.render.contains("1 models (1 ok, 0 failed)"))
     assert(gs.runSummary.render.contains("5 rows produced"))
+    // the run's wall time sits beside the summed model seconds
+    assert(gs.runSummary.render.matches(
+      ".* s total over models in \\d+\\.\\d s wall, .*"))
+    assert(graft.telemetry.RunSummary.loadLastWallSeconds(
+      s"$root/_graft/run_summary.json").contains(gs.runSummary.wallSeconds))
     // persisted JSON readable by a fresh reader
     val reader = new graft.telemetry.RunSummary(
       s"$root/_graft/run_summary.json")
@@ -542,5 +692,41 @@ class SessionSpec extends AnyFunSuite {
       new GraftSession(spark, root)
       assert(spark.conf.get(key) == EngineDefaults.minPartitionSize)
     }
+  }
+}
+
+/** Task-side probes for the concurrent-run specs. [[slowRows]] is a
+  * slow four-row model whose tasks record, per row, the instant and the
+  * shared session's live whole-stage codegen setting under a tag. */
+object TaskProbe {
+  private val rows =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
+
+  private val probe = udf { (tag: String, id: Long) =>
+    Thread.sleep(150)
+    rows.add((tag, System.nanoTime(),
+      TestSpark.session.conf.get("spark.sql.codegen.wholeStage")))
+    id
+  }
+
+  def slowRows(s: org.apache.spark.sql.SparkSession,
+      tag: String): org.apache.spark.sql.DataFrame =
+    s.range(0, 4, 1, 1).toDF("id").select(probe(lit(tag), col("id")).as("id"))
+
+  private val await = udf { (path: String, id: Long) =>
+    val deadline = System.nanoTime() + 60e9.toLong
+    while (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)) &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    id
+  }
+
+  /** A one-row model whose task waits until `path` exists. */
+  def rowsAfter(s: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.DataFrame =
+    s.range(0, 1, 1, 1).toDF("id").select(await(lit(path), col("id")).as("id"))
+
+  def seen(tag: String): Seq[(Long, String)] = {
+    import scala.jdk.CollectionConverters._
+    rows.asScala.toSeq.collect { case (`tag`, t, conf) => (t, conf) }
   }
 }

@@ -1,7 +1,10 @@
 #!/usr/bin/env python3
-"""Mechanical sentinel-normalized comparison of two bench records.
+"""Mechanical sentinel-normalized comparison of two bench records, or a
+pooled comparison of N parent/change pairs.
 
 Usage: python3 tools/bench_compare.py <A.json> <B.json> [threshold]
+       python3 tools/bench_compare.py <A1> <B1> <A2> <B2> ... [threshold]
+       python3 tools/bench_compare.py <pairs.json> [threshold]
 
 Host contention has moved identical code ±1.5x between rounds (SURVEY
 §8 rounds 5/7), so raw per-query deltas between two BENCH_r*.json are
@@ -31,15 +34,37 @@ Accepts either the raw one-line Bench JSON or the driver's wrapper
 record (uses its `parsed` field). NOT part of the shipped library —
 developer tooling only.
 
+POOLED MODE (more than one pair). One pair cannot tell a code effect on
+a sub-second query from host drift between two runs: the sentinel
+instants do not track the host across a whole 189-query run, and a
+single pair at sf0.1 on 4 cores flags 9-50 queries either way on code
+it does not change. Given N parent/change pairs (A1 B1 A2 B2 ..., or
+one record whose `pairs` list holds `parent` and `change` sides), a query
+is flagged SLOWER only when B > A within at least 9/10 of the pairs
+AND the pooled median ratio, median(all B) / median(all A), exceeds
+`threshold`; FASTER is the mirror image. The pairing itself is the
+host control, so no sentinel factor is applied. A side's per-query
+map is `queries`, else the full stderr map `queries_all` (a dict or
+its Python repr).
+
+Check: on the eight pairs of BENCH_one_warm_path.json
+  python3 tools/bench_compare.py BENCH_one_warm_path.json
+needs 8/8 pairs and flags four queries SLOWER at 1.3x (q_fn_regex
+2.01x, dt_accepted_values 1.58x, dt_freshness 1.43x, q_except 1.38x)
+and none faster; the per-pair mode flagged 9-50 queries a pair there.
+
 Check: reproduces the round-7 -> round-8 analysis (VERDICT r8):
   python3 tools/bench_compare.py BENCH_r07.json BENCH_r08.json
 reports host_factor ~0.7 (estimated, r7 pre-sentinel), t_bpe_apply and
 s_ann_lsh/q_fn_convert_tz as the real/host-side movers respectively.
 """
+import ast
 import json
 import math
 import statistics
 import sys
+
+PAIR_SHARE = 0.9  # pooled mode: a direction must hold in >= 9/10 pairs
 
 
 def load(path):
@@ -47,9 +72,75 @@ def load(path):
         d = json.load(f)
     if "parsed" in d and isinstance(d["parsed"], dict):
         d = d["parsed"]
-    if "queries" not in d:
+    if "queries" not in d and "pairs" not in d:
         sys.exit(f"{path}: no per-query map (not a bench record?)")
     return d
+
+
+def per_query(rec):
+    """A side's per-query seconds: `queries`, else `queries_all` (the
+    full stderr map, stored as a dict or as its Python repr)."""
+    q = rec.get("queries", rec.get("queries_all"))
+    if isinstance(q, str):
+        q = ast.literal_eval(q)
+    if not isinstance(q, dict):
+        sys.exit("a pair side has no per-query map")
+    return {k: float(v) for k, v in q.items() if k != "__sentinel"}
+
+
+def pairs_of(paths):
+    """(A, B) record pairs from alternating paths or `pairs` records."""
+    out, loose = [], []
+    for path in paths:
+        d = load(path)
+        if "pairs" in d:
+            out += [(p["parent"], p["change"]) for p in d["pairs"]]
+        else:
+            loose.append(d)
+    if len(loose) % 2:
+        sys.exit("pooled mode needs parent/change records in pairs")
+    return out + list(zip(loose[0::2], loose[1::2]))
+
+
+def pooled(pairs, threshold):
+    n = len(pairs)
+    need = math.ceil(PAIR_SHARE * n)
+    maps = [(per_query(a), per_query(b)) for a, b in pairs]
+    shared = sorted(set.intersection(*(set(a) & set(b) for a, b in maps)))
+    print(f"pooled: {n} pairs, {len(shared)} queries timed in every run; "
+          f"a query is flagged when one direction holds in >= {need}/{n} "
+          f"pairs and the pooled median ratio is beyond {threshold}x")
+    totals = [(float(a["value"]), float(b["value"])) for a, b in pairs
+              if a.get("value") and b.get("value")]
+    if totals:
+        ta = statistics.median(t for t, _ in totals)
+        tb = statistics.median(t for _, t in totals)
+        lower = sum(b < a for a, b in totals)
+        print(f"totals: median A {ta:.2f}s -> B {tb:.2f}s ({tb / ta:.3f}x), "
+              f"B lower in {lower}/{len(totals)} pairs")
+    flagged, consistent = [], 0
+    for q in shared:
+        va = [a[q] for a, _ in maps]
+        vb = [b[q] for _, b in maps]
+        slower = sum(b[q] > a[q] for a, b in maps)
+        faster = sum(b[q] < a[q] for a, b in maps)
+        ma, mb = statistics.median(va), statistics.median(vb)
+        if ma <= 0:
+            continue
+        ratio = mb / ma
+        if slower >= need or faster >= need:
+            consistent += 1
+        if slower >= need and ratio > threshold:
+            flagged.append((q, "SLOWER", slower, ma, mb, ratio))
+        elif faster >= need and ratio < 1 / threshold:
+            flagged.append((q, "faster", faster, ma, mb, ratio))
+    print(f"{consistent} queries move one way in >= {need}/{n} pairs")
+    if not flagged:
+        print(f"no query flagged beyond {threshold}x")
+    for q, direction, k, ma, mb, ratio in sorted(
+            flagged, key=lambda f: -abs(math.log(f[5]))):
+        print(f"  {q:28s} {ma:7.3f}s -> {mb:7.3f}s  pooled {ratio:5.2f}x  "
+              f"{direction} in {k}/{n} pairs")
 
 
 def median_sentinel(rec, key="sentinel_sec"):
@@ -61,10 +152,19 @@ def median_sentinel(rec, key="sentinel_sec"):
 
 
 def main():
-    if len(sys.argv) < 3:
+    args = sys.argv[1:]
+    threshold = 1.3
+    try:
+        threshold = float(args[-1])
+        args = args[:-1]
+    except (IndexError, ValueError):
+        pass
+    if not args:
         sys.exit(__doc__)
-    pa, pb = sys.argv[1], sys.argv[2]
-    threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.3
+    if len(args) != 2 or any("pairs" in load(p) for p in args):
+        pooled(pairs_of(args), threshold)
+        return
+    pa, pb = args
     a, b = load(pa), load(pb)
     qa, qb = a["queries"], b["queries"]
 
