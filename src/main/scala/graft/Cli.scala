@@ -67,6 +67,13 @@ object Cli {
 
   // ------------------------------------------------------------ catalog
 
+  /** Namespace levels from the CLI argument: levels separate on `.`,
+    * and a level name that itself contains a dot writes it as `\.`
+    * (shell-quoted), e.g. `prod.team\.data` → ["prod", "team.data"].
+    * The REST layer addresses levels losslessly (0x1F separator). */
+  private[graft] def nsLevels(ns: String): Seq[String] =
+    ns.split("(?<!\\\\)\\.", -1).toSeq.map(_.replace("\\.", "."))
+
   /** `graft catalog <uri> [ns [table]]` — the reference's attach-time
     * visibility (connections.py:1040-1049: "Connected to Iceberg
     * catalog …" + "Available namespaces: …") plus table drill-down,
@@ -75,40 +82,43 @@ object Cli {
     * `GRAFT_ICEBERG_CREDENTIAL` (client_id:client_secret OAuth2
     * exchange), `GRAFT_ICEBERG_WAREHOUSE`. Pure HTTP + JSON — no Spark
     * session spins up for catalog browsing. */
-  /** Namespace levels from the CLI argument: levels separate on `.`,
-    * and a level name that itself contains a dot writes it as `\.`
-    * (shell-quoted), e.g. `prod.team\.data` → ["prod", "team.data"].
-    * The REST layer addresses levels losslessly (0x1F separator). */
-  private[graft] def nsLevels(ns: String): Seq[String] =
-    ns.split("(?<!\\\\)\\.", -1).toSeq.map(_.replace("\\.", "."))
-
   def cmdCatalog(uri: String, rest: Seq[String]): String = {
     val cat = new graft.materialize.IcebergRestCatalog(uri,
       token = sys.env.get("GRAFT_ICEBERG_TOKEN"),
       credential = sys.env.get("GRAFT_ICEBERG_CREDENTIAL"),
       warehouse = sys.env.get("GRAFT_ICEBERG_WAREHOUSE"))
-    rest.toList match {
-      case Nil =>
-        val ns = cat.listNamespaces()
-        s"Connected to Iceberg catalog: $uri\n" +
-          s"Available namespaces: ${ns.map(_.mkString(".")).mkString(", ")}"
-      case ns :: Nil =>
-        val ts = cat.listTables(nsLevels(ns))
-        s"$ns: ${ts.size} table(s)\n" + ts.map("  " + _).mkString("\n")
-      case ns :: table :: _ =>
-        val (md, dir) = cat.loadTable(nsLevels(ns), table)
-        val parts =
-          if (md.partitionFields.isEmpty) "(unpartitioned)"
-          else md.partitionFields.map { case (n, t) => s"$n($t)" }
-            .mkString(", ")
-        s"""$ns.$table
-           |  location:  $dir
-           |  format:    v${md.formatVersion}
-           |  schema:    ${md.schema.simpleString}
-           |  partition: $parts
-           |  snapshots: ${md.snapshots.size} (current ${
-          md.currentSnapshot.map(_.snapshotId).getOrElse(-1L)})""".stripMargin
-    }
+    browse(rest, {
+      val ns = cat.listNamespaces()
+      s"Connected to Iceberg catalog: $uri\n" +
+        s"Available namespaces: ${ns.map(_.mkString(".")).mkString(", ")}"
+    }, ns => cat.listTables(nsLevels(ns)),
+      (ns, table) => cat.loadTable(nsLevels(ns), table))
+  }
+
+  /** The catalog browsers' shared drill-down: no argument prints
+    * `header`; a namespace lists its tables; a namespace and a table
+    * print the table's detail block, its first line suffixed by `at`. */
+  private def browse(rest: Seq[String], header: => String,
+      tables: String => Seq[String],
+      load: (String, String) => (graft.materialize.IcebergMetadata, String),
+      at: => String = ""): String = rest.toList match {
+    case Nil => header
+    case ns :: Nil =>
+      val ts = tables(ns)
+      s"$ns: ${ts.size} table(s)\n" + ts.map("  " + _).mkString("\n")
+    case ns :: table :: _ =>
+      val (md, dir) = load(ns, table)
+      val parts =
+        if (md.partitionFields.isEmpty) "(unpartitioned)"
+        else md.partitionFields.map { case (n, t) => s"$n($t)" }
+          .mkString(", ")
+      s"""$ns.$table$at
+         |  location:  $dir
+         |  format:    v${md.formatVersion}
+         |  schema:    ${md.schema.simpleString}
+         |  partition: $parts
+         |  snapshots: ${md.snapshots.size} (current ${
+        md.currentSnapshot.map(_.snapshotId).getOrElse(-1L)})""".stripMargin
   }
 
   /** `graft nessie <uri> [ns [table]]` — the reference's
@@ -120,31 +130,16 @@ object Cli {
     val cat = new graft.materialize.NessieCatalog(uri,
       token = sys.env.get("GRAFT_NESSIE_TOKEN"),
       ref = sys.env.get("GRAFT_NESSIE_REF"))
-    rest.toList match {
-      case Nil =>
-        val refs = cat.listReferences()
-          .map { case (n, t) => s"$n($t)" }.mkString(", ")
-        val ns = cat.listNamespaces()
-        s"Connected to Nessie catalog: $uri (branch ${cat.branch})\n" +
-          s"References: $refs\n" +
-          s"Available namespaces: ${ns.map(_.mkString(".")).mkString(", ")}"
-      case ns :: Nil =>
-        val ts = cat.listTables(nsLevels(ns))
-        s"$ns: ${ts.size} table(s)\n" + ts.map("  " + _).mkString("\n")
-      case ns :: table :: _ =>
-        val (md, dir) = cat.loadTable(nsLevels(ns), table)
-        val parts =
-          if (md.partitionFields.isEmpty) "(unpartitioned)"
-          else md.partitionFields.map { case (n, t) => s"$n($t)" }
-            .mkString(", ")
-        s"""$ns.$table @ ${cat.branch}
-           |  location:  $dir
-           |  format:    v${md.formatVersion}
-           |  schema:    ${md.schema.simpleString}
-           |  partition: $parts
-           |  snapshots: ${md.snapshots.size} (current ${
-          md.currentSnapshot.map(_.snapshotId).getOrElse(-1L)})""".stripMargin
-    }
+    browse(rest, {
+      val refs = cat.listReferences()
+        .map { case (n, t) => s"$n($t)" }.mkString(", ")
+      val ns = cat.listNamespaces()
+      s"Connected to Nessie catalog: $uri (branch ${cat.branch})\n" +
+        s"References: $refs\n" +
+        s"Available namespaces: ${ns.map(_.mkString(".")).mkString(", ")}"
+    }, ns => cat.listTables(nsLevels(ns)),
+      (ns, table) => cat.loadTable(nsLevels(ns), table),
+      at = s" @ ${cat.branch}")
   }
 
   /** `graft glue <region> [db [table]]` — the reference's
@@ -166,28 +161,11 @@ object Cli {
       secretKey = sys.env.getOrElse("AWS_SECRET_ACCESS_KEY", ""),
       sessionToken = sys.env.get("AWS_SESSION_TOKEN"),
       endpoint = endpoint)
-    rest.toList match {
-      case Nil =>
-        val dbs = cat.listDatabases()
-        s"Connected to Glue catalog: $region\n" +
-          s"Available databases: ${dbs.mkString(", ")}"
-      case db :: Nil =>
-        val ts = cat.listTables(db)
-        s"$db: ${ts.size} table(s)\n" + ts.map("  " + _).mkString("\n")
-      case db :: table :: _ =>
-        val (md, dir) = cat.loadTable(db, table)
-        val parts =
-          if (md.partitionFields.isEmpty) "(unpartitioned)"
-          else md.partitionFields.map { case (n, t) => s"$n($t)" }
-            .mkString(", ")
-        s"""$db.$table
-           |  location:  $dir
-           |  format:    v${md.formatVersion}
-           |  schema:    ${md.schema.simpleString}
-           |  partition: $parts
-           |  snapshots: ${md.snapshots.size} (current ${
-          md.currentSnapshot.map(_.snapshotId).getOrElse(-1L)})""".stripMargin
-    }
+    browse(rest, {
+      val dbs = cat.listDatabases()
+      s"Connected to Glue catalog: $region\n" +
+        s"Available databases: ${dbs.mkString(", ")}"
+    }, cat.listTables, cat.loadTable)
   }
 
   // ------------------------------------------------------------ explain

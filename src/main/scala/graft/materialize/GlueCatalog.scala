@@ -187,11 +187,7 @@ final class GlueCatalog(region: String, accessKey: String,
     val dir = IcebergTable.localPath(IcebergMetadata.parse(
       java.nio.file.Files.readString(
         java.nio.file.Path.of(IcebergTable.localPath(prevLoc)))).location)
-    IcebergWriter.append(spark, dir, df)
-    val hint = java.nio.file.Files.readString(java.nio.file.Path.of(
-      dir, "metadata", "version-hint.text")).trim
-    val newLoc = new java.io.File(new java.io.File(dir, "metadata"),
-      s"v$hint.metadata.json").getAbsolutePath
+    val newLoc = IcebergWriter.append(spark, dir, df).getAbsolutePath
     val req = mapper.createObjectNode()
     req.put("DatabaseName", db)
     val input = req.putObject("TableInput")

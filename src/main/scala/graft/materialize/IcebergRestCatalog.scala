@@ -218,13 +218,11 @@ final class IcebergRestCatalog(baseUri: String,
       df: org.apache.spark.sql.DataFrame): JsonNode = {
     val (md, dir) = loadTable(ns, table)
     val parentId = md.currentSnapshotId
-    IcebergWriter.append(spark, dir, df)
-    val newMd = IcebergTable.loadMetadata(dir)
-    val snapId = newMd.currentSnapshotId.getOrElse(
-      sys.error("iceberg rest: append produced no snapshot"))
-    // the snapshot node VERBATIM from the committed document — the
-    // catalog must record exactly what storage holds
-    val doc = mapper.readTree(IcebergTable.currentMetadataDoc(dir))
+    // the snapshot node VERBATIM from the document this append wrote —
+    // the catalog must record exactly what storage holds
+    val doc = mapper.readTree(java.nio.file.Files.readString(
+      IcebergWriter.append(spark, dir, df).toPath))
+    val snapId = doc.path("current-snapshot-id").asLong()
     val snapNode = doc.path("snapshots").elements().asScala
       .find(_.path("snapshot-id").asLong(-1L) == snapId)
       .getOrElse(sys.error(s"iceberg rest: snapshot $snapId missing " +

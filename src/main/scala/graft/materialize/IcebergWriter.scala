@@ -86,9 +86,8 @@ object IcebergWriter {
       IcebergPartField(derivedName(c, t), t,
         df.schema.fieldIndex(c) + 1)
     }
-    commit(spark, dir, df.schema, prior = Nil, parent = None,
-      newData = Some(df), tombstones = None, operation = "append",
-      partitionSpec = fields)
+    commit(spark, dir, df.schema, prior = Nil, newData = Some(df),
+      tombstones = None, operation = "append", partitionSpec = fields)
   }
 
   /** Iceberg's conventional derived-field names per transform. */
@@ -101,8 +100,9 @@ object IcebergWriter {
       case other => sys.error(s"unknown partition transform: $other")
     }
 
-  /** Append `df` as a new snapshot. */
-  def append(spark: SparkSession, tableDir: String, df: DataFrame): Unit = {
+  /** Append `df` as a new snapshot; returns the metadata file the
+    * commit wrote (what a catalog publishes). */
+  def append(spark: SparkSession, tableDir: String, df: DataFrame): File = {
     val (md, prior) = state(tableDir)
     // nullability is advisory on append (Spark DataFrames routinely
     // carry nullable=true for provably non-null columns); names+types
@@ -110,9 +110,8 @@ object IcebergWriter {
     require(md.schema.map(f => (f.name, f.dataType)) ==
       df.schema.map(f => (f.name, f.dataType)),
       s"append schema ${df.schema.simpleString} != table ${md.schema.simpleString}")
-    commit(spark, new File(tableDir), md.schema, prior,
-      parent = md.currentSnapshot, newData = Some(df),
-      tombstones = None, operation = "append", tableMd = Some(md))
+    commit(spark, new File(tableDir), md.schema, prior, newData = Some(df),
+      tombstones = None, operation = "append", tableMd = Some(md)).get._1
   }
 
   /** CREATE OR REPLACE semantics as one snapshot: the new data set
@@ -124,8 +123,8 @@ object IcebergWriter {
       df.schema.map(f => (f.name, f.dataType)),
       s"replace schema ${df.schema.simpleString} != table ${md.schema.simpleString}")
     commit(spark, new File(tableDir), md.schema, prior = Nil,
-      parent = md.currentSnapshot, newData = Some(df),
-      tombstones = None, operation = "replace", tableMd = Some(md))
+      newData = Some(df), tombstones = None, operation = "replace",
+      tableMd = Some(md))
   }
 
   /** Schema evolution by column addition: append a batch whose schema
@@ -155,18 +154,10 @@ object IcebergWriter {
     // as NULL, so required would be a lie the first old-file scan breaks
     val recorded = StructType(md.schema.fields ++
       df.schema.fields.drop(old.size).map(_.copy(nullable = true)))
-    commit(spark, new File(tableDir), recorded, prior,
-      parent = md.currentSnapshot, newData = Some(df),
-      tombstones = None, operation = "append", tableMd = Some(md),
-      schemaId = md.currentSchemaId + 1)
+    commit(spark, new File(tableDir), recorded, prior, newData = Some(df),
+      tombstones = None, operation = "append", tableMd = Some(md))
   }
 
-  /** The physical partition column for one spec field: identity
-    * partitions directly on the source column; every other transform
-    * derives `(name, expression)` via [[graft.functions.IcebergBucket]]
-    * (codegen'd murmur3 per the spec's Appendix B) or builtin column
-    * arithmetic. Sources resolve by id through the writer's top-level-
-    * first id assignment (schemaJson). */
   /** Column-name ↔ field-id keying of ONE table layout — what every
     * id-addressed metadata structure (stats maps, `equality_ids`,
     * partition `source-id`s) is written against. A table this writer
@@ -205,6 +196,11 @@ object IcebergWriter {
         "the written schema"))
   }
 
+  /** The physical partition column for one spec field: identity
+    * partitions directly on the source column; every other transform
+    * derives `(name, expression)` via [[graft.functions.IcebergBucket]]
+    * (codegen'd murmur3 per the spec's Appendix B) or builtin column
+    * arithmetic. Sources resolve by id through `layout`. */
   private def partitionColumn(pf: IcebergPartField,
       schema: StructType, layout: IdLayout): (String, Option[Column]) = {
     import org.apache.spark.sql.functions._
@@ -267,10 +263,9 @@ object IcebergWriter {
       cond: Column): Long = {
     val (md, prior) = state(tableDir)
     val tomb = tombstonesOf(liveRows(spark, tableDir, md).filter(cond))
-    commit(spark, new File(tableDir), md.schema, prior,
-      parent = md.currentSnapshot, newData = None,
-      tombstones = Some(tomb), operation = "delete",
-      tableMd = Some(md), skipIfEmptyTombstones = true)
+    commit(spark, new File(tableDir), md.schema, prior, newData = None,
+      tombstones = Some(tomb), operation = "delete", tableMd = Some(md),
+      skipIfEmptyTombstones = true).fold(0L)(_._2)
   }
 
   /** The reference's incremental delete+insert as ONE snapshot: rows
@@ -288,10 +283,8 @@ object IcebergWriter {
     val keyBatch = df.select(keys.map(col): _*).distinct()
     val tomb = tombstonesOf(
       liveRows(spark, tableDir, md).join(keyBatch, keys, "left_semi"))
-    commit(spark, new File(tableDir), md.schema, prior,
-      parent = md.currentSnapshot, newData = Some(df),
-      tombstones = Some(tomb), operation = "overwrite",
-      tableMd = Some(md))
+    commit(spark, new File(tableDir), md.schema, prior, newData = Some(df),
+      tombstones = Some(tomb), operation = "overwrite", tableMd = Some(md))
   }
 
   /** CDC-shaped upsert as ONE snapshot: append `df` and write an
@@ -315,8 +308,7 @@ object IcebergWriter {
       s"upsert schema ${df.schema.simpleString} != table ${md.schema.simpleString}")
     require(keys.nonEmpty && keys.forall(md.schema.fieldNames.contains),
       s"upsert keys $keys must be table columns")
-    commit(spark, new File(tableDir), md.schema, prior,
-      parent = md.currentSnapshot, newData = Some(df),
+    commit(spark, new File(tableDir), md.schema, prior, newData = Some(df),
       tombstones = None, operation = "overwrite", tableMd = Some(md),
       eqDelete = Some((df.select(keys.map(col): _*).distinct(), keys)))
   }
@@ -334,9 +326,8 @@ object IcebergWriter {
       keys.map(k => (k, md.schema(k).dataType)),
       s"keyRows schema ${keyRows.schema.simpleString} must be exactly " +
         s"the key columns $keys in table types")
-    commit(spark, new File(tableDir), md.schema, prior,
-      parent = md.currentSnapshot, newData = None, tombstones = None,
-      operation = "delete", tableMd = Some(md),
+    commit(spark, new File(tableDir), md.schema, prior, newData = None,
+      tombstones = None, operation = "delete", tableMd = Some(md),
       eqDelete = Some((keyRows.distinct(), keys)))
   }
 
@@ -360,54 +351,19 @@ object IcebergWriter {
       val prop = Map(StreamBatchProp -> batchId.toString)
       if (!exists)
         commit(spark, new File(tableDir), df.schema, prior = Nil,
-          parent = None, newData = Some(df), tombstones = None,
-          operation = "append", newProps = prop)
+          newData = Some(df), tombstones = None, operation = "append",
+          newProps = prop)
       else {
         val (md, priorRefs) = state(tableDir)
         commit(spark, new File(tableDir), md.schema, priorRefs,
-          parent = md.currentSnapshot, newData = Some(df),
-          tombstones = None, operation = "append", tableMd = Some(md),
-          newProps = prop)
+          newData = Some(df), tombstones = None, operation = "append",
+          tableMd = Some(md), newProps = prop)
       }
       true
     }
   }
 
   private val StreamBatchProp = "graft.stream.last-batch-id"
-
-  /** Metadata-ONLY commit: re-read the current document, transform it,
-    * claim the next version atomically (createFile, like [[commit]]'s
-    * claim). The transform re-applies on a fresh document if another
-    * process claims the version first — metadata-only changes carry no
-    * snapshot-dependent work, so the retry is always safe. */
-  private def commitMetadataOnly(dir: File)
-      (transform: String => String): Unit = {
-    val mdir = new File(dir, "metadata")
-    val lock = commitLocks.computeIfAbsent(dir.getCanonicalPath,
-      _ => new Object)
-    lock.synchronized {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        val doc = transform(IcebergTable.currentMetadataDoc(dir.getPath))
-        val version = currentVersion(mdir) + 1
-        val vfile = new File(mdir, s"v$version.metadata.json")
-        try {
-          java.nio.file.Files.createFile(vfile.toPath)
-          java.nio.file.Files.writeString(vfile.toPath, doc)
-          java.nio.file.Files.writeString(
-            new File(mdir, "version-hint.text").toPath, version.toString)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            attempts += 1
-            require(attempts < 20, s"iceberg: gave up claiming a " +
-              s"metadata version on $dir after $attempts conflicts")
-            Thread.sleep(25L * attempts)
-        }
-      }
-    }
-  }
 
   /** The raw document's schemas array, its current node, and the next
     * (max+1) schema id — the shared plumbing of every layout-preserving
@@ -428,6 +384,26 @@ object IcebergWriter {
     (schemas, current, nextId)
   }
 
+  /** Metadata-only schema change: the new schema node copies the
+    * current one, `change` edits the copy (given the document root),
+    * and the copy becomes the current schema under the next schema id.
+    * Built inside the claim, so a lost claim re-applies the change on
+    * the refreshed document — it carries no snapshot-dependent work. */
+  private def changeSchema(tableDir: String)
+      (change: (ObjectNode, ObjectNode) => Unit): Unit =
+    claim(new File(tableDir)) { _ =>
+      val om = new ObjectMapper()
+      val root = om.readTree(IcebergTable.currentMetadataDoc(tableDir))
+        .asInstanceOf[ObjectNode]
+      val (schemas, current, nextId) = currentSchemaNode(root)
+      val node = current.deepCopy[ObjectNode]()
+      node.put("schema-id", nextId)
+      change(root, node)
+      schemas.add(node)
+      root.put("current-schema-id", nextId)
+      Some(om.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+    }
+
   /** RENAME a top-level column — a metadata-only evolution commit: the
     * new schema node copies the current one with the field's NAME
     * changed and its id (the identity every data file, stats map and
@@ -436,24 +412,14 @@ object IcebergWriter {
     * follows renames; only id-less legacy files fall back to names).
     * Layout-preserving on foreign documents like every other commit. */
   def renameColumn(tableDir: String, from: String, to: String): Unit =
-    commitMetadataOnly(new File(tableDir)) { raw =>
-      val om = new ObjectMapper()
-      val root = om.readTree(raw).asInstanceOf[ObjectNode]
-      val (schemas, current, nextId) = currentSchemaNode(root)
-      val node = current.deepCopy[ObjectNode]()
-      node.put("schema-id", nextId)
-      val fields = node.withArray[ArrayNode]("fields")
-      val names = fields.elements().asScala.map(_.path("name").asText()).toSeq
+    changeSchema(tableDir) { (_, node) =>
+      val fields = node.withArray[ArrayNode]("fields").elements().asScala.toSeq
+      val names = fields.map(_.path("name").asText())
       require(names.contains(from), s"iceberg: no column '$from' to rename")
       require(!names.contains(to),
         s"iceberg: rename target '$to' already exists")
-      fields.elements().asScala
-        .collectFirst { case f: ObjectNode
-          if f.path("name").asText() == from => f }
-        .foreach(_.put("name", to))
-      schemas.add(node)
-      root.put("current-schema-id", nextId)
-      om.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+      fields.collectFirst { case f: ObjectNode
+        if f.path("name").asText() == from => f }.foreach(_.put("name", to))
     }
 
   /** DROP a top-level column — a metadata-only evolution commit: the
@@ -465,120 +431,102 @@ object IcebergWriter {
     * the column sources a partition field or is an identifier field —
     * those ids are load-bearing outside the schema. */
   def dropColumn(tableDir: String, name: String): Unit =
-    commitMetadataOnly(new File(tableDir)) { raw =>
-      val om = new ObjectMapper()
-      val root = om.readTree(raw).asInstanceOf[ObjectNode]
-      val (schemas, current, nextId) = currentSchemaNode(root)
-      val node = current.deepCopy[ObjectNode]()
-      node.put("schema-id", nextId)
+    changeSchema(tableDir) { (root, node) =>
       val fields = node.withArray[ArrayNode]("fields")
-      val dropped = fields.elements().asScala
-        .collectFirst { case f: ObjectNode
-          if f.path("name").asText() == name => f }
-        .getOrElse(sys.error(s"iceberg: no column '$name' to drop"))
+      val idx = fields.elements().asScala.indexWhere(
+        _.path("name").asText() == name)
+      require(idx >= 0, s"iceberg: no column '$name' to drop")
       require(fields.size() > 1,
         s"iceberg: cannot drop the only column '$name'")
-      val droppedId = dropped.path("id").asInt(-1)
+      val droppedId = fields.get(idx).path("id").asInt(-1)
       root.path("partition-specs").elements().asScala
         .flatMap(_.path("fields").elements().asScala).foreach { pf =>
           require(pf.path("source-id").asInt(-1) != droppedId,
             s"iceberg: column '$name' (id $droppedId) sources partition " +
               s"field '${pf.path("name").asText()}' — drop refused")
         }
-      current.path("identifier-field-ids").elements().asScala.foreach { i =>
+      node.path("identifier-field-ids").elements().asScala.foreach { i =>
         require(i.asInt(-1) != droppedId, s"iceberg: column '$name' " +
           s"(id $droppedId) is an identifier field — drop refused")
       }
-      var idx = -1
-      fields.elements().asScala.zipWithIndex.foreach { case (f, i) =>
-        if (f.path("name").asText() == name) idx = i
-      }
       fields.remove(idx)
-      schemas.add(node)
-      root.put("current-schema-id", nextId)
-      om.writerWithDefaultPrettyPrinter().writeValueAsString(root)
     }
 
   /** Snapshot expiry: keep the most recent `keepLast` snapshots (the
     * current one always survives), rewrite the metadata document, and
-    * delete every data file, manifest, and manifest list no kept
-    * snapshot reaches — the table-maintenance half of merge-on-read
-    * (tombstone-heavy histories otherwise grow without bound; at
-    * 100 TB expiry is what bounds metadata work and storage). All
-    * reachability walking is driver-side metadata reads. */
+    * delete the manifest lists, manifests, data and delete files that
+    * an expired snapshot reaches and no kept snapshot does — the
+    * table-maintenance half of merge-on-read (tombstone-heavy histories
+    * otherwise grow without bound; at 100 TB expiry is what bounds
+    * metadata work and storage). Files no snapshot ever referenced — a
+    * concurrent commit's not-yet-claimed legs among them — are not
+    * expiry's to delete. All reachability walking is driver-side
+    * metadata reads of the document the claim amends. */
   def expireSnapshots(tableDir: String, keepLast: Int): Unit = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val md = IcebergTable.loadMetadata(tableDir)
-    val ordered = md.snapshots.sortBy(s => (s.timestampMs, s.snapshotId))
-    val kept = (ordered.takeRight(keepLast) ++
-      md.currentSnapshot.toSeq).distinct.sortBy(s =>
-      (s.timestampMs, s.snapshotId))
-    if (kept.size == md.snapshots.size) return
-    val reachable = scala.collection.mutable.Set[String]()
-    def reach(path: String): String = {
-      val f = new File(IcebergTable.resolve(path, md, tableDir))
-      require(f.isFile, s"iceberg: reachable file not found: $f")
-      reachable += f.getCanonicalPath
-      f.getPath
-    }
-    kept.foreach { s =>
-      reach(s.manifestList)
-      IcebergTable.manifestRows(md, s, tableDir).foreach { row =>
-        // every entry is reachable, DELETED-status ones included: a
-        // kept snapshot's manifests still name them
-        IcebergTable.readAvro(reach(row.path)).foreach { e =>
-          reach(e.get("data_file").asInstanceOf[GenericRecord]
-            .get("file_path").toString)
+    var expired = Set.empty[String]
+    claim(new File(tableDir)) { _ =>
+      val raw = IcebergTable.currentMetadataDoc(tableDir)
+      val md = IcebergMetadata.parse(raw)
+      val ordered = md.snapshots.sortBy(s => (s.timestampMs, s.snapshotId))
+      val kept = (ordered.takeRight(keepLast) ++
+        md.currentSnapshot.toSeq).distinct.sortBy(s =>
+        (s.timestampMs, s.snapshotId))
+      if (kept.size == md.snapshots.size) None
+      else {
+        // every file a set of snapshots reaches (canonical paths); every
+        // manifest entry counts, DELETED-status ones included: the
+        // snapshot's manifests still name them
+        def reach(snaps: Seq[IcebergSnapshot]): Set[String] = {
+          def file(path: String): File = {
+            val f = new File(IcebergTable.resolve(path, md, tableDir))
+            require(f.isFile, s"iceberg: reachable file not found: $f")
+            f
+          }
+          snaps.flatMap { s =>
+            file(s.manifestList) +: IcebergTable.manifestRows(md, s, tableDir)
+              .flatMap { row =>
+                val m = file(row.path)
+                m +: IcebergTable.readAvro(m.getPath).map(e => file(
+                  e.get("data_file").asInstanceOf[GenericRecord]
+                    .get("file_path").toString))
+              }
+          }.map(_.getCanonicalPath).toSet
         }
+        val keptIds = kept.map(_.snapshotId).toSet
+        expired = reach(md.snapshots.filterNot(s => keptIds(s.snapshotId))) --
+          reach(kept)
+        // amend the RAW metadata with only the kept snapshots: in-place
+        // amendment (not regeneration) keeps location, schemas, field
+        // ids, specs, sort orders and refs verbatim, so expiry is
+        // layout-preserving on foreign-written tables too
+        val m = new ObjectMapper()
+        val root = m.readTree(raw).asInstanceOf[ObjectNode]
+        root.put("current-snapshot-id",
+          md.currentSnapshotId.getOrElse(kept.last.snapshotId))
+        def filterArray(field: String, idField: String): Unit =
+          Option(root.get(field)).collect { case a: ArrayNode => a }
+            .foreach { a =>
+              val keep = a.elements().asScala
+                .filter(e => keptIds.contains(e.path(idField).asLong(-1L)))
+                .toSeq
+              a.removeAll()
+              keep.foreach(a.add)
+            }
+        filterArray("snapshots", "snapshot-id")
+        filterArray("snapshot-log", "snapshot-id")
+        // refs to expired snapshots would dangle — drop them
+        Option(root.get("refs")).collect { case o: ObjectNode => o }
+          .foreach { refs =>
+            val dead = refs.fields().asScala.filterNot(e =>
+              keptIds.contains(e.getValue.path("snapshot-id").asLong(-1L)))
+              .map(_.getKey).toSeq
+            dead.foreach(refs.remove)
+          }
+        Some(m.writerWithDefaultPrettyPrinter().writeValueAsString(root))
       }
     }
-    // amend the RAW metadata with only the kept snapshots, then drop
-    // orphans — in-place amendment (not regeneration) keeps location,
-    // schemas, field ids, specs, sort orders and refs verbatim, so
-    // expiry is layout-preserving on foreign-written tables too
-    val m = new ObjectMapper()
-    val dir = new File(tableDir)
-    val mdir = new File(dir, "metadata")
-    val keptIds = kept.map(_.snapshotId).toSet
-    val root = m.readTree(
-      IcebergTable.currentMetadataDoc(tableDir)).asInstanceOf[ObjectNode]
-    root.put("current-snapshot-id",
-      md.currentSnapshotId.getOrElse(kept.last.snapshotId))
-    def filterArray(field: String, idField: String): Unit =
-      Option(root.get(field)).collect { case a: ArrayNode => a }
-        .foreach { a =>
-          val keep = a.elements().asScala
-            .filter(e => keptIds.contains(e.path(idField).asLong(-1L)))
-            .toSeq
-          a.removeAll()
-          keep.foreach(a.add)
-        }
-    filterArray("snapshots", "snapshot-id")
-    filterArray("snapshot-log", "snapshot-id")
-    // refs to expired snapshots would dangle — drop them
-    Option(root.get("refs")).collect { case o: ObjectNode => o }
-      .foreach { refs =>
-        val dead = refs.fields().asScala.filterNot(e =>
-          keptIds.contains(e.getValue.path("snapshot-id").asLong(-1L)))
-          .map(_.getKey).toSeq
-        dead.foreach(refs.remove)
-      }
-    val doc = m.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-    val version = currentVersion(mdir) + 1
-    java.nio.file.Files.writeString(
-      new File(mdir, s"v$version.metadata.json").toPath, doc)
-    java.nio.file.Files.writeString(
-      new File(mdir, "version-hint.text").toPath, version.toString)
-    def sweep(d: File, keep: File => Boolean): Unit =
-      Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
-        if (f.isDirectory) sweep(f, keep)
-        else if (!keep(f)) f.delete()
-      }
-    sweep(new File(dir, "data"),
-      f => reachable.contains(f.getCanonicalPath))
-    sweep(mdir, f => f.getName.endsWith(".metadata.json") ||
-      f.getName == "version-hint.text" ||
-      reachable.contains(f.getCanonicalPath))
+    expired.foreach(p => deleteWithChecksum(new File(p)))
   }
 
   /** Compaction (snapshot operation `replace`): materialize the live
@@ -596,8 +544,8 @@ object IcebergWriter {
     val live = IcebergTable.read(spark, tableDir)
     val df = if (targetFiles > 0) live.repartition(targetFiles) else live
     commit(spark, new File(tableDir), md.schema, prior = Nil,
-      parent = md.currentSnapshot, newData = Some(df),
-      tombstones = None, operation = "replace", tableMd = Some(md))
+      newData = Some(df), tombstones = None, operation = "replace",
+      tableMd = Some(md))
   }
 
   // ---------------------------------------------------------------- //
@@ -631,9 +579,6 @@ object IcebergWriter {
     live.select(col("__graft_file").as("file_path"),
       col("__graft_row").as("pos"))
 
-  /** Write one snapshot: data files and/or a positional-delete file,
-    * their manifests, the manifest list (prior manifests carried
-    * forward verbatim), and the next `v<N>.metadata.json` + hint. */
   /** Per-table commit locks (canonical path → monitor): commits from
     * ONE driver JVM — the Spark deployment model — fully serialize,
     * so concurrent appends refresh onto each other instead of clobber.
@@ -666,15 +611,8 @@ object IcebergWriter {
     val tableSchema = m.schema
     val om = new ObjectMapper()
     val root = om.readTree(IcebergTable.currentMetadataDoc(dir.getPath))
-    val schemas = Option(root.get("schemas"))
-      .collect { case a: ArrayNode if a.size() > 0 => a }
-      .getOrElse(sys.error(s"iceberg: ${dir.getPath} metadata carries " +
-        "no schemas array — cannot evolve"))
-    val currentId = root.path("current-schema-id").asInt(0)
-    val currentNode = schemas.elements().asScala
-      .find(_.path("schema-id").asInt(-1) == currentId)
-      .getOrElse(sys.error(s"iceberg: current-schema-id $currentId " +
-        s"missing from the schemas array of ${dir.getPath}"))
+      .asInstanceOf[ObjectNode]
+    val (schemas, currentNode, newSchemaId) = currentSchemaNode(root)
     def allIds(n: com.fasterxml.jackson.databind.JsonNode): Iterator[Int] =
       if (n.isObject)
         n.fields().asScala.flatMap { e =>
@@ -689,8 +627,6 @@ object IcebergWriter {
       else Iterator.empty
     val lastAssigned = (allIds(schemas).toSeq :+
       root.path("last-column-id").asInt(0)).max
-    val newSchemaId = schemas.elements().asScala
-      .map(_.path("schema-id").asInt(0)).max + 1
     val node = currentNode.deepCopy[ObjectNode]()
     node.put("schema-id", newSchemaId)
     val counter = new java.util.concurrent.atomic.AtomicInteger(lastAssigned)
@@ -710,26 +646,31 @@ object IcebergWriter {
     (node, newSchemaId, counter.get(), layout)
   }
 
+  /** Write one snapshot: data files and/or delete files, their
+    * manifests, the manifest list (prior manifests carried forward
+    * verbatim), and the next metadata version through [[claim]].
+    * Returns the metadata file written and the rows the positional
+    * tombstones delete; None when an empty delete was abandoned. A
+    * failed write leg or a refused claim leaves none of the commit's
+    * files behind. */
   private def commit(spark: SparkSession, dir: File, schema: StructType,
-      prior: Seq[ManifestListRow], parent: Option[IcebergSnapshot],
+      prior: Seq[ManifestListRow],
       newData: Option[DataFrame], tombstones: Option[DataFrame],
       operation: String,
       tableMd: Option[IcebergMetadata] = None,
       newProps: Map[String, String] = Map.empty,
       partitionSpec: Seq[IcebergPartField] = Nil,
-      schemaId: Int = -1,
       eqDelete: Option[(DataFrame, Seq[String])] = None,
-      skipIfEmptyTombstones: Boolean = false): Long = {
-    // the caller's own state()/loadMetadata result — the snapshot this
-    // commit's inputs were computed against. Re-loading here (the r17
-    // shape) both re-parsed the document a second time per commit
-    // (driver work that grows with snapshot history) and could racily
-    // adopt a NEWER version than the distributed work reflects; the
-    // in-lock refresh below still detects any concurrent movement.
+      skipIfEmptyTombstones: Boolean = false): Option[(File, Long)] = {
+    // the caller's own state()/loadMetadata result (None for a create);
+    // its current snapshot is the one this commit's inputs were
+    // computed against. Re-loading here (the r17 shape) both re-parsed
+    // the document a second time per commit (driver work that grows
+    // with snapshot history) and could racily adopt a NEWER version
+    // than the distributed work reflects; the in-lock refresh below
+    // still detects any concurrent movement.
     val md0 = tableMd
-    require(md0.isDefined == parent.isDefined,
-      "iceberg: commit needs the caller's table metadata exactly when " +
-        "committing onto an existing snapshot")
+    val parent = md0.flatMap(_.currentSnapshot)
     // the partition spec is a TABLE property: every commit — including
     // tombstone-only deletes that write no data files — must carry it
     // forward into the new metadata version, or the next writer sees an
@@ -751,18 +692,16 @@ object IcebergWriter {
         s"onto $base — format-version ${m.formatVersion} (v2 manifests" +
         " and sequence numbers would corrupt a v1 table)")
     }
-    // evolution pieces are stable pre-lock: evolution commits are
-    // non-retryable, so a moved document raises instead of refreshing
+    // a written schema wider than the table's evolves it. Evolution
+    // pieces are stable pre-lock: evolution commits are non-retryable,
+    // so a moved document raises instead of refreshing
     val evolution: Option[(ObjectNode, Int, Int, IdLayout)] =
-      md0.filter(_ => schemaId >= 0)
+      md0.filter(_.schema.length < schema.length)
         .map(m => evolutionPieces(m, dir, schema))
     // the layout the PARTITION DERIVATION resolves source ids against
     // (stable pre-lock: specs never change after create)
-    val wlayout = (md0, evolution) match {
-      case (_, Some((_, _, _, l))) => l
-      case (Some(m), None) if schemaId < 0 => layoutOf(m)
-      case _ => positionalLayout(schema)
-    }
+    val wlayout = evolution.map(_._4).orElse(md0.map(layoutOf))
+      .getOrElse(positionalLayout(schema))
     val mdir = new File(dir, "metadata"); mdir.mkdirs()
 
     def leaves(f: File): Seq[File] =
@@ -882,6 +821,15 @@ object IcebergWriter {
         spark.sparkContext.setLocalProperty(key, group)
         try body finally spark.sparkContext.setLocalProperty(key, null)
       }
+      // a zero-row delete file (an empty shuffle partition of a delete
+      // write) deletes nothing — remove it rather than carry a
+      // stats-free entry every future read must anti-join against
+      def nonEmptyFiles(
+          files: Seq[(String, Map[String, String], FileStats)]) = {
+        val (empty, kept) = files.partition(_._3.rows == 0L)
+        empty.foreach(f => deleteWithChecksum(new File(f._1)))
+        kept
+      }
       val fData = newData.map(d => leg {
         val files = writeFiles(stampIds(d, wlayout.idOf), "snap", spec)
         val m = new File(mdir, s"manifest-$commitId-d.avro")
@@ -891,7 +839,8 @@ object IcebergWriter {
       // equality-delete files carry only the key columns, unpartitioned
       // (they apply table-wide by value)
       val fEq = eqDelete.map { case (k, _) => leg {
-        val files = writeFiles(stampIds(k, wlayout.idOf), "eqd", Nil)
+        val files =
+          nonEmptyFiles(writeFiles(stampIds(k, wlayout.idOf), "eqd", Nil))
         val m = new File(mdir, s"manifest-$commitId-e.avro")
         writeManifest(m, files, content = 2, spec, schema, wlayout,
           equalityIds = eqIdsOf(wlayout))
@@ -905,15 +854,24 @@ object IcebergWriter {
           concat(lit(base + "/"), col("file_path")).as("file_path"),
           col("pos"))
         // positional-delete physical columns carry the spec's RESERVED ids
-        val files = writeFiles(stampIds(abs, Map("file_path" -> 2147483546,
-          "pos" -> 2147483545).get), "del", Nil)
+        val files = nonEmptyFiles(writeFiles(stampIds(abs, Map(
+          "file_path" -> 2147483546, "pos" -> 2147483545).get), "del", Nil))
         val m = new File(mdir, s"manifest-$commitId-t.avro")
         writeManifest(m, files, content = 1, spec, schema, wlayout)
         (files, m)
       } }
-      (fData.map(Await.result(_, Duration.Inf)),
-        fEq.map(Await.result(_, Duration.Inf)),
-        fTomb.map(Await.result(_, Duration.Inf)))
+      // every leg is waited for, so no sibling is still writing when a
+      // failure abandons the commit's files and raises
+      def settled[T](f: Option[Future[T]]) =
+        f.map(Await.ready(_, Duration.Inf).value.get)
+      val (d, e, t) = (settled(fData), settled(fEq), settled(fTomb))
+      Seq(d, e, t).flatten.collect { case scala.util.Failure(x) => x } match {
+        case first +: rest =>
+          abandon(dir, commitId)
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => (d.map(_.get), e.map(_.get), t.map(_.get))
+      }
     }
     // the tombstone row count comes from the leg's own footer stats —
     // the same numbers its manifest records; no second footer read
@@ -924,9 +882,8 @@ object IcebergWriter {
     val tombRows: Long =
       tombLeg.map(_._1.iterator.map(_._3.rows).sum).getOrElse(0L)
     if (skipIfEmptyTombstones && tombRows == 0L) {
-      deleteRecursively(new File(dir, s"data/del-$commitId"))
-      tombLeg.foreach(_._2.delete()) // the pre-written (entry-less) manifest
-      return 0L
+      abandon(dir, commitId)
+      return None
     }
     // append-only commits can REFRESH onto a concurrent commit and
     // retry (their inputs don't depend on the parent snapshot's
@@ -934,121 +891,125 @@ object IcebergWriter {
     // replace/compact's live set, schema evolution — must fail loudly
     // on conflict, exactly like Iceberg's non-retryable validation
     val retryable = tombstones.isEmpty && operation == "append" &&
-      schemaId < 0
-    val lock = commitLocks.computeIfAbsent(dir.getCanonicalPath,
-      _ => new Object)
-    lock.synchronized {
-      var attempts = 0
-      var done = false
-      while (!done) {
-        val mdNow =
-          if (parent.isDefined) Some(IcebergTable.loadMetadata(dir.getPath))
-          else None
-        val conflicted =
-          mdNow.flatMap(_.currentSnapshotId) != parent.map(_.snapshotId)
-        if (conflicted || attempts > 0)
-          require(retryable, s"iceberg: concurrent commit detected on " +
-            s"$base (current snapshot moved past " +
-            s"${parent.map(_.snapshotId)}); this $operation was computed " +
-            "against a stale snapshot — re-run it")
-        if (conflicted)
-          // a refresh must not resurrect a stale schema: a concurrent
-          // schema evolution makes this append non-retryable too
-          require(mdNow.get.schema.map(f => (f.name, f.dataType)) ==
-            md0.get.schema.map(f => (f.name, f.dataType)),
-            s"iceberg: concurrent schema change on $base — re-run")
-        val effParent = if (conflicted) mdNow.flatMap(_.currentSnapshot)
-          else parent
-        val effPrior =
-          if (!conflicted) prior
-          else mdNow.get.currentSnapshot.toSeq.flatMap(
-            IcebergTable.manifestRows(mdNow.get, _, dir.getPath))
-        // next sequence number: past the document's counter AND past
-        // every carried manifest's (a foreign document with an absent
-        // or stale last-sequence-number must not produce a commit
-        // whose deletes tie with existing data files — the
-        // strictly-greater apply rule would silently skip them)
-        val seq = math.max(
-          mdNow.map(_.lastSequenceNumber).getOrElse(0L),
-          effPrior.map(_.seq).foldLeft(0L)(math.max)) + 1
-        // deterministic history: snapshot id = seq — unless a foreign
-        // table's arbitrary snapshot ids already claimed it
-        val takenIds = mdNow.map(_.snapshots.map(_.snapshotId).toSet)
-          .getOrElse(Set.empty[Long])
-        val snapId = Iterator.iterate(seq)(_ + 1)
-          .dropWhile(takenIds).next()
-        // the layout MANIFEST KEYING uses: the refreshed table's own
-        // field-id table (schema evolution extends it with the new ids)
-        val layout = evolution.map(_._4).getOrElse(
-          mdNow.map(layoutOf).getOrElse(positionalLayout(schema)))
-        // defensive re-key: a conflicted refresh whose field-id table
-        // moved (schema names+types were already verified equal above)
-        // rewrites the pre-lock manifests under the refreshed layout.
-        // Non-conflicted commits — every commit our own writer can
-        // produce — take the fast path: layout == wlayout by
-        // construction, the pre-written manifests stand.
-        if (layout.idByName != wlayout.idByName) {
-          dataLeg.foreach { case (files, m) =>
-            writeManifest(m, files, content = 0, spec, schema, layout) }
-          tombLeg.foreach { case (files, m) =>
-            writeManifest(m, files, content = 1, spec, schema, layout) }
-          eqLeg.foreach { case (files, m) =>
-            writeManifest(m, files, content = 2, spec, schema, layout,
-              equalityIds = eqIdsOf(layout)) }
+      evolution.isEmpty
+    // the manifest list of an attempt whose claim was lost
+    var staleList: Option[File] = None
+    // the document of one claim attempt, built from the table as it is
+    // inside the claim
+    def document(attempt: Int): Option[String] = {
+      staleList.foreach(_.delete())
+      val raw = md0.map(_ => IcebergTable.currentMetadataDoc(dir.getPath))
+      val mdNow = raw.map(IcebergMetadata.parse)
+      val conflicted =
+        mdNow.flatMap(_.currentSnapshotId) != parent.map(_.snapshotId)
+      if (conflicted || attempt > 0)
+        require(retryable, s"iceberg: concurrent commit detected on " +
+          s"$base (current snapshot moved past " +
+          s"${parent.map(_.snapshotId)}); this $operation was computed " +
+          "against a stale snapshot — re-run it")
+      if (conflicted)
+        // a refresh must not resurrect a stale schema: a concurrent
+        // schema evolution makes this append non-retryable too
+        require(mdNow.get.schema.map(f => (f.name, f.dataType)) ==
+          md0.get.schema.map(f => (f.name, f.dataType)),
+          s"iceberg: concurrent schema change on $base — re-run")
+      val effParent = if (conflicted) mdNow.flatMap(_.currentSnapshot)
+        else parent
+      val effPrior =
+        if (!conflicted) prior
+        else mdNow.get.currentSnapshot.toSeq.flatMap(
+          IcebergTable.manifestRows(mdNow.get, _, dir.getPath))
+      // next sequence number: past the document's counter AND past
+      // every carried manifest's (a foreign document with an absent
+      // or stale last-sequence-number must not produce a commit
+      // whose deletes tie with existing data files — the
+      // strictly-greater apply rule would silently skip them)
+      val seq = math.max(
+        mdNow.map(_.lastSequenceNumber).getOrElse(0L),
+        effPrior.map(_.seq).foldLeft(0L)(math.max)) + 1
+      // deterministic history: snapshot id = seq — unless a foreign
+      // table's arbitrary snapshot ids already claimed it
+      val takenIds = mdNow.map(_.snapshots.map(_.snapshotId).toSet)
+        .getOrElse(Set.empty[Long])
+      val snapId = Iterator.iterate(seq)(_ + 1)
+        .dropWhile(takenIds).next()
+      // the layout MANIFEST KEYING uses: the refreshed table's own
+      // field-id table (schema evolution extends it with the new ids)
+      val layout = evolution.map(_._4).getOrElse(
+        mdNow.map(layoutOf).getOrElse(positionalLayout(schema)))
+      // defensive re-key: a conflicted refresh whose field-id table
+      // moved (schema names+types were already verified equal above)
+      // rewrites the pre-lock manifests under the refreshed layout.
+      // Non-conflicted commits — every commit our own writer can
+      // produce — take the fast path: layout == wlayout by
+      // construction, the pre-written manifests stand.
+      if (layout.idByName != wlayout.idByName) {
+        dataLeg.foreach { case (files, m) =>
+          writeManifest(m, files, content = 0, spec, schema, layout) }
+        tombLeg.foreach { case (files, m) =>
+          writeManifest(m, files, content = 1, spec, schema, layout) }
+        eqLeg.foreach { case (files, m) =>
+          writeManifest(m, files, content = 2, spec, schema, layout,
+            equalityIds = eqIdsOf(layout)) }
+      }
+      val defSpecId = mdNow.map(_.defaultSpecId).getOrElse(0)
+      // new manifests: lengths from the files just written (after
+      // any re-key above); carried rows keep the lengths they were
+      // read with
+      val refs = effPrior ++
+        dataLeg.map { case (files, m) =>
+          ManifestListRow(m.getAbsolutePath, seq, 0, defSpecId,
+            summariesOf(files, spec, schema, layout), m.length())
+        } ++
+        (tombLeg ++ eqLeg).map { case (_, m) =>
+          ManifestListRow(m.getAbsolutePath, seq, 1, defSpecId, None,
+            m.length())
         }
-        val defSpecId = mdNow.map(_.defaultSpecId).getOrElse(0)
-        // new manifests: lengths from the files just written (after
-        // any re-key above); carried rows keep the lengths they were
-        // read with
-        val refs = effPrior ++
-          dataLeg.map { case (files, m) =>
-            ManifestListRow(m.getAbsolutePath, seq, 0, defSpecId,
-              summariesOf(files, spec, schema, layout), m.length())
-          } ++
-          (tombLeg ++ eqLeg).map { case (_, m) =>
-            ManifestListRow(m.getAbsolutePath, seq, 1, defSpecId, None,
-              m.length())
-          }
-        val mlist = new File(mdir, s"snap-$snapId-$commitId.avro")
-        writeManifestList(mlist, refs, spec, schema, layout)
-        val tsMs = math.max(System.currentTimeMillis(),
-          effParent.map(_.timestampMs + 1).getOrElse(0L))
-        val jm = new ObjectMapper()
-        val sn = jm.createObjectNode()
-        sn.put("snapshot-id", snapId)
-        effParent.foreach(p => sn.put("parent-snapshot-id", p.snapshotId))
-        sn.put("sequence-number", seq)
-        sn.put("timestamp-ms", tsMs)
-        sn.put("manifest-list", mlist.getAbsolutePath)
-        sn.putObject("summary").put("operation", operation)
-        val sid = evolution.map(_._2).getOrElse(
-          mdNow.map(_.currentSchemaId).getOrElse(0))
-        sn.put("schema-id", sid)
-        // a RELOCATED table keeps its original `location` — prior
-        // snapshots' absolute manifest paths re-anchor through it
-        // (IcebergTable.resolve); new files written under `base` are
-        // absolute and resolve as themselves
-        val doc =
-          if (mdNow.isDefined)
-            // layout-preserving commit: amend the CURRENT raw document
-            // in place — schemas, field ids, specs, sort orders, refs
-            // and foreign snapshot summaries all survive verbatim; an
-            // evolution additionally appends its new schema node
-            amendMetadataJson(
-              IcebergTable.currentMetadataDoc(dir.getPath),
-              seq, snapId, tsMs, sn, newProps,
-              evolve = evolution.map { case (n, id, last, _) =>
-                (n, id, last) })
-          else {
-            val allSnaps = mdNow.map(_.snapshots).getOrElse(Nil)
-              .map(snapshotJson(jm, _)) :+ sn
-            val props = mdNow.map(_.properties).getOrElse(Map.empty) ++
-              newProps
-            metadataJson(
-              mdNow.map(_.location).filter(_.nonEmpty).getOrElse(base),
-              schema, seq, snapId, tsMs, allSnaps, props, spec, sid)
-          }
-        val version = mdNow.map(_ => currentVersion(mdir) + 1).getOrElse(1)
+      val mlist = new File(mdir, s"snap-$snapId-$commitId.avro")
+      writeManifestList(mlist, refs, spec, schema, layout)
+      staleList = Some(mlist)
+      val tsMs = math.max(System.currentTimeMillis(),
+        effParent.map(_.timestampMs + 1).getOrElse(0L))
+      val sn = new ObjectMapper().createObjectNode()
+      sn.put("snapshot-id", snapId)
+      effParent.foreach(p => sn.put("parent-snapshot-id", p.snapshotId))
+      sn.put("sequence-number", seq)
+      sn.put("timestamp-ms", tsMs)
+      sn.put("manifest-list", mlist.getAbsolutePath)
+      sn.putObject("summary").put("operation", operation)
+      sn.put("schema-id", evolution.map(_._2).getOrElse(
+        mdNow.map(_.currentSchemaId).getOrElse(0)))
+      // a commit onto an existing table amends its CURRENT raw
+      // document in place — schemas, field ids, specs, sort orders,
+      // refs, foreign snapshot summaries and a RELOCATED table's
+      // original `location` all survive verbatim; an evolution
+      // additionally appends its new schema node
+      Some(raw.map(amendMetadataJson(_, seq, snapId, tsMs, sn, newProps,
+          evolve = evolution.map { case (n, id, last, _) => (n, id, last) }))
+        .getOrElse(metadataJson(base, schema, sn, newProps, spec)))
+    }
+    val written =
+      try claim(dir, create = md0.isEmpty)(document)
+      catch { case e: Throwable => abandon(dir, commitId); throw e }
+    written.map(_ -> tombRows)
+  }
+
+  /** The one writer of a metadata version. Under the table's commit
+    * lock, `build` makes the document (None: nothing to commit) from
+    * the table as it is now, given the attempt number; the next version
+    * (1 for a create) is claimed with an atomic `createFile`, and the
+    * document and the version hint are written. A claim lost to another
+    * process re-runs `build` on the refreshed table after a backoff, up
+    * to 20 attempts; a create has nothing to refresh onto and raises.
+    * Returns the metadata file written. */
+  private def claim(dir: File, create: Boolean = false)
+      (build: Int => Option[String]): Option[File] = {
+    val mdir = new File(dir, "metadata")
+    @annotation.tailrec
+    def attempt(n: Int): Option[File] = build(n) match {
+      case None => None
+      case Some(doc) =>
+        val version = if (create) 1 else currentVersion(mdir) + 1
         val vfile = new File(mdir, s"v$version.metadata.json")
         // test-only chaos hook: signal + pause between computing the
         // version and claiming it, so the cross-process conflict spec
@@ -1056,36 +1017,58 @@ object IcebergWriter {
         // only via the package-private var (set by the fork-worker
         // test main from ITS env) — a stray env var in a deployment
         // never reaches this path
-        if (attempts == 0)
-          testClaimHook.foreach { case (ms, mk) =>
-            java.nio.file.Files.writeString(new File(mk).toPath,
-              version.toString)
-            Thread.sleep(ms)
-          }
-        try {
-          // ATOMIC claim: createFile fails if the version exists — a
-          // cross-process writer that raced us loses exactly one of
-          // the two claims, and the loser retries (append) or raises
-          java.nio.file.Files.createFile(vfile.toPath)
+        if (n == 0) testClaimHook.foreach { case (ms, mk) =>
+          java.nio.file.Files.writeString(new File(mk).toPath,
+            version.toString)
+          Thread.sleep(ms)
+        }
+        // ATOMIC claim: createFile fails if the version exists — of two
+        // racing writers exactly one wins, and the loser refreshes
+        val won =
+          try { java.nio.file.Files.createFile(vfile.toPath); true }
+          catch { case _: java.nio.file.FileAlreadyExistsException => false }
+        if (won) {
           java.nio.file.Files.writeString(vfile.toPath, doc)
           java.nio.file.Files.writeString(
             new File(mdir, "version-hint.text").toPath, version.toString)
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            require(parent.isDefined, s"iceberg: concurrent CREATE on " +
-              s"$base — the table already has a metadata version")
-            attempts += 1
-            require(attempts < 20,
-              s"iceberg: gave up claiming a metadata version on $base " +
-                s"after $attempts conflicts")
-            // let the other process finish its hint write, then
-            // refresh from its committed state
-            Thread.sleep(25L * attempts)
+          Some(vfile)
+        } else {
+          require(!create, s"iceberg: concurrent CREATE on $dir — the " +
+            "table already has a metadata version")
+          require(n + 1 < 20, s"iceberg: gave up claiming a metadata " +
+            s"version on $dir after ${n + 1} conflicts")
+          // let the other process finish its hint write, then refresh
+          // from its committed state
+          Thread.sleep(25L * (n + 1))
+          attempt(n + 1)
         }
-      }
     }
-    tombRows
+    commitLocks.computeIfAbsent(dir.getCanonicalPath, _ => new Object)
+      .synchronized(attempt(0))
+  }
+
+  /** Delete every file a commit wrote before claiming a version: its
+    * `data/<leg>-<commitId>` directories, its manifests and its
+    * manifest lists. */
+  private def abandon(dir: File, commitId: String): Unit = {
+    def under(sub: String): Seq[File] =
+      Option(new File(dir, sub).listFiles()).toSeq.flatten
+    under("data").filter(_.getName.endsWith(s"-$commitId"))
+      .foreach(deleteRecursively)
+    under("metadata").filter(f => f.getName.startsWith(s"manifest-$commitId-")
+      || f.getName.endsWith(s"-$commitId.avro")).foreach(_.delete())
+  }
+
+  /** Delete a file and its Hadoop checksum sibling. */
+  private def deleteWithChecksum(f: File): Unit = {
+    f.delete()
+    new File(f.getParentFile, s".${f.getName}.crc").delete()
+  }
+
+  private def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete()
   }
 
   private def currentVersion(mdir: File): Int =
@@ -1230,7 +1213,7 @@ object IcebergWriter {
       val g = new GenericData.Record(item)
       g.put("key", id); g.put("value", v); g
     }
-    val rows = files.flatMap { case (f, pv, stats) =>
+    val rows = files.map { case (f, pv, stats) =>
       val d = new GenericData.Record(dfSchema)
       // data AND delete files carry bounds: data-file bounds drive scan
       // pruning; an equality delete's key-column bounds and a
@@ -1238,11 +1221,6 @@ object IcebergWriter {
       // read skip delete files that cannot touch its kept set
       // (IcebergTable.pruneDeletes). Stats were collected by the write
       // leg itself (writeFiles) — no footer read here.
-      // a zero-row delete file (an empty shuffle partition of the
-      // tombstone write) deletes nothing — drop it rather than carry a
-      // stats-free entry every future read must anti-join against
-      if (content != 0 && stats.rows == 0L) None
-      else Some {
       d.put("content", content)
       if (equalityIds.nonEmpty) {
         val l = new java.util.ArrayList[Integer](equalityIds.size)
@@ -1316,7 +1294,6 @@ object IcebergWriter {
       r.put("status", 1) // ADDED; sequence_number null => inherited
       r.put("data_file", d)
       r
-      }
     }
     writeAvro(path, manifestSchema, rows)
   }
@@ -1556,26 +1533,25 @@ object IcebergWriter {
 
   // -- metadata.json ------------------------------------------------- //
 
+  /** A new table's first metadata document, holding its one snapshot
+    * `sn`. */
   private def metadataJson(location: String, schema: StructType,
-      seq: Long, currentSnapId: Long, tsMs: Long,
-      keptSnapshots: Seq[ObjectNode],
-      properties: Map[String, String],
-      partitionBy: Seq[IcebergPartField] = Nil,
-      schemaId: Int = 0): String = {
+      sn: ObjectNode, properties: Map[String, String],
+      partitionBy: Seq[IcebergPartField]): String = {
     val m = new ObjectMapper()
     val root = m.createObjectNode()
     root.put("format-version", 2)
     root.put("table-uuid", "graft-" + location.hashCode.toHexString)
     root.put("location", location)
-    root.put("last-sequence-number", seq)
-    root.put("last-updated-ms", tsMs)
-    val (schemaNode, lastColumnId) = schemaJson(m, schema, schemaId)
+    root.put("last-sequence-number", sn.path("sequence-number").asLong())
+    root.put("last-updated-ms", sn.path("timestamp-ms").asLong())
+    val (schemaNode, lastColumnId) = schemaJson(m, schema)
     // the highest id the walker ASSIGNED — nested list/map/struct
     // element ids included, not just the top-level column count
     root.put("last-column-id", lastColumnId)
     val schemas = root.putArray("schemas")
     schemas.add(schemaNode)
-    root.put("current-schema-id", schemaId)
+    root.put("current-schema-id", 0)
     val specs = root.putArray("partition-specs")
     val spec0 = m.createObjectNode()
     spec0.put("spec-id", 0)
@@ -1590,13 +1566,12 @@ object IcebergWriter {
     }
     specs.add(spec0)
     root.put("default-spec-id", 0)
-    root.put("current-snapshot-id", currentSnapId)
+    root.put("current-snapshot-id", sn.path("snapshot-id").asLong())
     if (properties.nonEmpty) {
       val p = root.putObject("properties")
       properties.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
     }
-    val snaps = root.putArray("snapshots")
-    keptSnapshots.foreach(snaps.add)
+    root.putArray("snapshots").add(sn)
     m.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
@@ -1661,23 +1636,13 @@ object IcebergWriter {
     m.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  private def snapshotJson(m: ObjectMapper, s: IcebergSnapshot): ObjectNode = {
-    val n = m.createObjectNode()
-    n.put("snapshot-id", s.snapshotId)
-    s.parentId.foreach(p => n.put("parent-snapshot-id", p))
-    n.put("timestamp-ms", s.timestampMs)
-    n.put("manifest-list", s.manifestList)
-    n.putObject("summary").put("operation", s.operation)
-    n
-  }
-
   /** Schema node + the last assigned field id (nested ids included) —
     * the pair `last-column-id` must record. */
-  private def schemaJson(m: ObjectMapper, schema: StructType,
-      schemaId: Int = 0): (ObjectNode, Int) = {
+  private def schemaJson(m: ObjectMapper,
+      schema: StructType): (ObjectNode, Int) = {
     val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
     val node = m.createObjectNode()
-    node.put("schema-id", schemaId)
+    node.put("schema-id", 0)
     node.put("type", "struct")
     val fields = node.putArray("fields")
     // ids are assigned top-level-first so equality_ids stay stable and
@@ -1738,11 +1703,4 @@ object IcebergWriter {
         }
       case other => sys.error(s"no Iceberg mapping for Spark type $other")
     }
-
-  /** Recursive local delete (abandoned-commit cleanup). */
-  private[graft] def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 }

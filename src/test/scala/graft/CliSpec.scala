@@ -14,6 +14,30 @@ class CliSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** A hand-written one-snapshot v2 metadata document (no Spark) and
+    * the table-detail block every catalog browser renders for it. */
+  private def detailFixture(): (String, String => String) = {
+    val f = Files.createTempFile("graft_cli_md", ".metadata.json")
+    Files.writeString(f, """{"format-version":2,"table-uuid":"t",
+      |"location":"/warehouse/db/t1","last-sequence-number":1,
+      |"last-updated-ms":1,"last-column-id":2,"current-schema-id":0,
+      |"schemas":[{"schema-id":0,"type":"struct","fields":[
+      |{"id":1,"name":"id","required":true,"type":"long"},
+      |{"id":2,"name":"name","required":false,"type":"string"}]}],
+      |"default-spec-id":0,"partition-specs":[{"spec-id":0,"fields":[
+      |{"name":"name","transform":"identity","source-id":2,
+      |"field-id":1000}]}],"current-snapshot-id":1,"snapshots":[
+      |{"snapshot-id":1,"timestamp-ms":1,
+      |"manifest-list":"/warehouse/db/t1/metadata/snap-1.avro",
+      |"summary":{"operation":"append"}}]}""".stripMargin)
+    (f.toString, first => s"""$first
+      |  location:  /warehouse/db/t1
+      |  format:    v2
+      |  schema:    struct<id:bigint,name:string>
+      |  partition: name(identity)
+      |  snapshots: 1 (current 1)""".stripMargin)
+  }
+
   private def freshSession(): (GraftSession, String) = {
     val root = Files.createTempDirectory("graft_cli").toString
     (new GraftSession(spark, root), root)
@@ -140,6 +164,7 @@ class CliSpec extends AnyFunSuite {
       ex.getResponseBody.write(b)
       ex.close()
     }
+    val (mdPath, detail) = detailFixture()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/api/v2/config", (ex: HttpExchange) =>
       respond(ex, """{"defaultBranch":"main"}"""))
@@ -147,6 +172,9 @@ class CliSpec extends AnyFunSuite {
       ex.getRequestURI.getPath match {
         case "/api/v2/trees" => respond(ex,
           """{"references":[{"name":"main","type":"BRANCH"}]}""")
+        case p if p.contains("/contents/") => respond(ex,
+          s"""{"content":{"type":"ICEBERG_TABLE",
+            |"metadataLocation":"$mdPath"}}""".stripMargin)
         case _ => respond(ex,
           """{"entries":[{"name":{"elements":["db"]},"type":"NAMESPACE"},
             |{"name":{"elements":["db","t1"]},
@@ -161,6 +189,8 @@ class CliSpec extends AnyFunSuite {
       assert(out.contains("Available namespaces: db"))
       val ts = Cli.run(Seq("nessie", uri, "db"), None, "/tmp/none")
       assert(ts.contains("1 table(s)") && ts.contains("t1"))
+      assert(Cli.run(Seq("nessie", uri, "db", "t1"), None, "/tmp/none") ==
+        detail("db.t1 @ main"))
       assert(Cli.cmdHelp.contains("nessie <uri>"))
     } finally server.stop(0)
   }
@@ -177,6 +207,7 @@ class CliSpec extends AnyFunSuite {
     }
     // auth-agnostic loopback (signature conformance is GlueCatalogSpec's
     // job); routes on X-Amz-Target like the real JSON 1.1 service
+    val (mdPath, detail) = detailFixture()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", (ex: HttpExchange) => {
       ex.getRequestBody.readAllBytes()
@@ -185,6 +216,9 @@ class CliSpec extends AnyFunSuite {
           respond(ex, """{"DatabaseList":[{"Name":"lake"}]}""")
         case Some("AWSGlue.GetTables") =>
           respond(ex, """{"TableList":[{"Name":"orders"}]}""")
+        case Some("AWSGlue.GetTable") => respond(ex,
+          s"""{"Table":{"Name":"orders","Parameters":{"table_type":
+            |"ICEBERG","metadata_location":"$mdPath"}}}""".stripMargin)
         case _ => respond(ex, "{}")
       }
     })
@@ -195,6 +229,8 @@ class CliSpec extends AnyFunSuite {
       assert(out.contains("Available databases: lake"))
       val ts = Cli.run(Seq("glue", arg, "lake"), None, "/tmp/none")
       assert(ts.contains("1 table(s)") && ts.contains("orders"))
+      assert(Cli.run(Seq("glue", arg, "lake", "orders"), None, "/tmp/none")
+        == detail("lake.orders"))
       assert(Cli.cmdHelp.contains("glue <region>"))
     } finally server.stop(0)
   }

@@ -121,6 +121,36 @@ class IcebergWriterSpec extends AnyFunSuite {
     intercept[Exception](IcebergTable.readVersion(spark, dir, 1L).count())
   }
 
+  test("expireSnapshots deletes only what the expired snapshots reached") {
+    import spark.implicits._
+    val dirF = Files.createTempDirectory("graft_iceexp_pending").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir, Seq((1L, "a")).toDF("id", "name"))
+    IcebergWriter.append(spark, dir, Seq((2L, "b")).toDF("id", "name"))
+    IcebergWriter.append(spark, dir, Seq((3L, "c")).toDF("id", "name"))
+    // a concurrent commit's legs land before its version is claimed:
+    // a data file and a manifest that no snapshot references yet
+    def under(sub: String, ext: String): java.io.File = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dirF, sub)).find(_.getName.endsWith(ext)).get
+    }
+    val pendingData = new java.io.File(dirF, "data/snap-pending/part.parquet")
+    pendingData.getParentFile.mkdirs()
+    Files.copy(under("data", ".parquet").toPath, pendingData.toPath)
+    val pendingManifest =
+      new java.io.File(dirF, "metadata/manifest-pending-d.avro")
+    Files.copy(under("metadata", "-d.avro").toPath, pendingManifest.toPath)
+    val lists = IcebergTable.loadMetadata(dir).snapshots
+      .map(s => new java.io.File(s.manifestList))
+    IcebergWriter.expireSnapshots(dir, keepLast = 1)
+    assert(pendingData.isFile && pendingManifest.isFile)
+    // only the expired snapshots' manifest lists went: the kept
+    // snapshot still carries every manifest and data file forward
+    assert(lists.map(_.isFile) == Seq(false, false, true))
+    assert(ids(dir) == Seq(1L, 2L, 3L))
+  }
+
   test("partitioned table: values injected at read, readWhere prunes files, " +
     "deletes and compaction respect the layout") {
     import spark.implicits._
@@ -877,6 +907,93 @@ class IcebergWriterSpec extends AnyFunSuite {
       .trim == "3")
   }
 
+  /** Every path under `dir`, relative to it. */
+  private def tree(dir: java.io.File): Set[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    walk(dir).map(_.getPath.stripPrefix(dir.getPath)).toSet
+  }
+
+  test("a failed commit leg leaves nothing behind") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dirF = Files.createTempDirectory("graft_icefault").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    val before = tree(dirF)
+    // the data leg raises on its first row; the equality-delete leg
+    // projects only the key, so it writes its files and manifest
+    val batch = spark.range(0, 20, 1, 1).select(col("id"),
+      when(col("id") >= 0, raise_error(lit("injected leg failure")))
+        .otherwise(lit("x")).as("name"))
+    val group = s"iceberg-fault-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "fault injection")
+    val e = try intercept[Exception](
+      IcebergWriter.upsertKeys(spark, dir, batch, Seq("id")))
+    finally sc.clearJobGroup()
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected leg")))
+    // the sibling leg ran to its end before the raise, and nothing the
+    // commit wrote is left: no path carries its commit id
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(j => !sc.statusTracker.getJobInfo(j)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING)))
+    assert(tree(dirF) == before)
+    assert(ids(dir) == Seq(1L, 2L))
+    assert(IcebergTable.loadMetadata(dir).snapshots.size == 1)
+  }
+
+  /** Run `op` while a rival claims, in the file system, the metadata
+    * version `op` computed, between the computing and the claiming. */
+  private def withRivalClaim[T](dirF: java.io.File)(op: => T): T = {
+    val marker = new java.io.File(dirF.getParentFile,
+      s"${dirF.getName}.marker")
+    val rival = new Thread(() => {
+      while (!marker.isFile) Thread.sleep(5)
+      val v = Files.readString(marker.toPath).trim
+      Files.createFile(new java.io.File(dirF,
+        s"metadata/v$v.metadata.json").toPath)
+    })
+    rival.setDaemon(true)
+    rival.start()
+    IcebergWriter.testClaimHook = Some((2000L, marker.getPath))
+    try op
+    finally {
+      IcebergWriter.testClaimHook = None
+      rival.join(10000)
+      marker.delete()
+    }
+  }
+
+  test("a lost claim leaves only the claimed commit's files") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dirF = Files.createTempDirectory("graft_icerefuse").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    val before = tree(dirF)
+    // a delete was computed against its snapshot: it may not refresh,
+    // so it raises and leaves nothing behind
+    val e = intercept[IllegalArgumentException](withRivalClaim(dirF)(
+      IcebergWriter.deleteWhere(spark, dir, col("id") === 1L)))
+    assert(e.getMessage.contains("concurrent commit detected"))
+    assert(tree(dirF) == before + "/metadata/v2.metadata.json")
+    assert(ids(dir) == Seq(1L, 2L))
+    // an append refreshes and claims the next version; the manifest
+    // list of its lost attempt is gone
+    val v = withRivalClaim(dirF)(IcebergWriter.append(spark, dir,
+      Seq((3L, "c")).toDF("id", "name")))
+    assert(v.getName == "v4.metadata.json")
+    assert(ids(dir) == Seq(1L, 2L, 3L))
+    assert(new java.io.File(dirF, "metadata").list()
+      .count(_.startsWith("snap-")) == 2)
+  }
+
   test("writer emits the SPEC metadata layouts: r102 tuples, id-keyed binary bounds") {
     import spark.implicits._
     val dirF = Files.createTempDirectory("graft_icespec").toFile
@@ -1077,5 +1194,33 @@ class IcebergWriterSpec extends AnyFunSuite {
       .map(_.toString)
     assert(hits == Seq("src/main/scala/graft/materialize/IcebergTable.scala"),
       s"avro metadata decoded outside IcebergTable: $hits")
+  }
+
+  test("every metadata version is claimed in one place") {
+    import java.nio.file.{Files => F, Paths}
+    import scala.jdk.CollectionConverters._
+    // code only: block and line comments are stripped before counting
+    def code(p: java.nio.file.Path): String = F.readString(p)
+      .replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("(?m)(^|\\s)//.*$", "$1")
+    def count(text: String, regex: String): Int =
+      regex.r.findAllMatchIn(text).size
+    val hint = "version-hint.text"
+    val writer = code(Paths.get(
+      "src/main/scala/graft/materialize/IcebergWriter.scala"))
+    assert(count(writer, "createFile\\(") == 1)
+    assert(count(writer, "version-hint") == 1)
+    assert(count(writer,
+      "writeString\\(\\s*new File\\(mdir, \"version-hint\\.text\"\\)") == 1)
+    val s = F.walk(Paths.get("src/main/scala"))
+    val files =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    val named = files.filter(f => code(f).contains(hint)).map(_.toString)
+      .sorted
+    assert(named == Seq(
+      "src/main/scala/graft/materialize/IcebergTable.scala",
+      "src/main/scala/graft/materialize/IcebergWriter.scala"),
+      s"$hint named outside the Iceberg reader and writer: $named")
   }
 }
