@@ -476,26 +476,29 @@ object IcebergWriter {
       else {
         // every file a set of snapshots reaches (canonical paths); every
         // manifest entry counts, DELETED-status ones included: the
-        // snapshot's manifests still name them
-        def reach(snaps: Seq[IcebergSnapshot]): Set[String] = {
-          def file(path: String): File = {
+        // snapshot's manifests still name them. A kept snapshot's files
+        // must all be there; an expired one's may already be gone (a
+        // foreign engine's cleanup, a concurrent expire) and are skipped
+        def reach(snaps: Seq[IcebergSnapshot], strict: Boolean): Set[String] = {
+          def file(path: String): Option[File] = {
             val f = new File(IcebergTable.resolve(path, md, tableDir))
-            require(f.isFile, s"iceberg: reachable file not found: $f")
-            f
+            require(!strict || f.isFile,
+              s"iceberg: reachable file not found: $f")
+            Some(f).filter(_.isFile)
           }
           snaps.flatMap { s =>
-            file(s.manifestList) +: IcebergTable.manifestRows(md, s, tableDir)
-              .flatMap { row =>
-                val m = file(row.path)
-                m +: IcebergTable.readAvro(m.getPath).map(e => file(
-                  e.get("data_file").asInstanceOf[GenericRecord]
-                    .get("file_path").toString))
-              }
+            file(s.manifestList).toSeq.flatMap(_ +:
+              IcebergTable.manifestRows(md, s, tableDir).flatMap { row =>
+                file(row.path).toSeq.flatMap(m =>
+                  m +: IcebergTable.readAvro(m.getPath).flatMap(e => file(
+                    e.get("data_file").asInstanceOf[GenericRecord]
+                      .get("file_path").toString)))
+              })
           }.map(_.getCanonicalPath).toSet
         }
         val keptIds = kept.map(_.snapshotId).toSet
-        expired = reach(md.snapshots.filterNot(s => keptIds(s.snapshotId))) --
-          reach(kept)
+        expired = reach(md.snapshots.filterNot(s => keptIds(s.snapshotId)),
+          strict = false) -- reach(kept, strict = true)
         // amend the RAW metadata with only the kept snapshots: in-place
         // amendment (not regeneration) keeps location, schemas, field
         // ids, specs, sort orders and refs verbatim, so expiry is
@@ -595,6 +598,10 @@ object IcebergWriter {
     * own env); never read from the environment here. */
   @volatile private[graft] var testClaimHook: Option[(Long, String)] = None
 
+  /** Test-only commit id, so a spec can make two commits' file names
+    * meet; set only in-process, like `testClaimHook`. */
+  @volatile private[graft] var testCommitId: Option[String] = None
+
   /** Layout-preserving schema-EVOLUTION pieces for a commit onto an
     * existing table: the evolved schema NODE (a deep copy of the
     * table's current raw schema node — original ids, identifier
@@ -677,7 +684,14 @@ object IcebergWriter {
     // unpartitioned table (caught by the partitioned-lifecycle spec).
     // Specs never change after create, so the pre-lock read is stable.
     val spec = md0.map(_.specFields).getOrElse(partitionSpec)
-    val commitId = UUID.randomUUID().toString.take(8)
+    // a full random UUID: file names keyed by it never meet another
+    // commit's, however long the table lives
+    val commitId = testCommitId.getOrElse(UUID.randomUUID().toString)
+    // every path this commit creates: what `abandon` deletes when the
+    // commit never claims a version. Only paths made here are listed, so
+    // a failed commit never deletes another commit's files
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[File]()
+    def made(f: File): File = { created.add(f); f }
     val base = dir.getAbsolutePath
     // commits onto an EXISTING table preserve its layout: manifests
     // are keyed with the table's own field ids and the metadata
@@ -772,9 +786,17 @@ object IcebergWriter {
               .otherwise(col(name)))
         }
       }
+      // the leg's directory is claimed with an atomic createDirectory
+      // before it is listed as made: a name that already exists raises
+      // here and stays out of `created`; the write appends into the
+      // empty directory this commit now owns
       val out = new File(dir, s"data/$sub-$commitId")
-      if (partCols.isEmpty) df.write.parquet(out.getPath)
-      else df.write.partitionBy(partCols: _*).parquet(out.getPath)
+      java.nio.file.Files.createDirectories(out.getParentFile.toPath)
+      java.nio.file.Files.createDirectory(out.toPath)
+      made(out)
+      val w = df.write.mode("append")
+      if (partCols.isEmpty) w.parquet(out.getPath)
+      else w.partitionBy(partCols: _*).parquet(out.getPath)
       // footer stats per file, read concurrently (independent KB-sized
       // metadata reads — at a 10^5-file commit the serial walk was the
       // driver-side floor)
@@ -832,7 +854,7 @@ object IcebergWriter {
       }
       val fData = newData.map(d => leg {
         val files = writeFiles(stampIds(d, wlayout.idOf), "snap", spec)
-        val m = new File(mdir, s"manifest-$commitId-d.avro")
+        val m = made(new File(mdir, s"manifest-$commitId-d.avro"))
         writeManifest(m, files, content = 0, spec, schema, wlayout)
         (files, m)
       })
@@ -841,7 +863,7 @@ object IcebergWriter {
       val fEq = eqDelete.map { case (k, _) => leg {
         val files =
           nonEmptyFiles(writeFiles(stampIds(k, wlayout.idOf), "eqd", Nil))
-        val m = new File(mdir, s"manifest-$commitId-e.avro")
+        val m = made(new File(mdir, s"manifest-$commitId-e.avro"))
         writeManifest(m, files, content = 2, spec, schema, wlayout,
           equalityIds = eqIdsOf(wlayout))
         (files, m)
@@ -856,7 +878,7 @@ object IcebergWriter {
         // positional-delete physical columns carry the spec's RESERVED ids
         val files = nonEmptyFiles(writeFiles(stampIds(abs, Map(
           "file_path" -> 2147483546, "pos" -> 2147483545).get), "del", Nil))
-        val m = new File(mdir, s"manifest-$commitId-t.avro")
+        val m = made(new File(mdir, s"manifest-$commitId-t.avro"))
         writeManifest(m, files, content = 1, spec, schema, wlayout)
         (files, m)
       } }
@@ -867,7 +889,7 @@ object IcebergWriter {
       val (d, e, t) = (settled(fData), settled(fEq), settled(fTomb))
       Seq(d, e, t).flatten.collect { case scala.util.Failure(x) => x } match {
         case first +: rest =>
-          abandon(dir, commitId)
+          abandon(created)
           rest.foreach(first.addSuppressed)
           throw first
         case _ => (d.map(_.get), e.map(_.get), t.map(_.get))
@@ -882,7 +904,7 @@ object IcebergWriter {
     val tombRows: Long =
       tombLeg.map(_._1.iterator.map(_._3.rows).sum).getOrElse(0L)
     if (skipIfEmptyTombstones && tombRows == 0L) {
-      abandon(dir, commitId)
+      abandon(created)
       return None
     }
     // append-only commits can REFRESH onto a concurrent commit and
@@ -965,7 +987,7 @@ object IcebergWriter {
           ManifestListRow(m.getAbsolutePath, seq, 1, defSpecId, None,
             m.length())
         }
-      val mlist = new File(mdir, s"snap-$snapId-$commitId.avro")
+      val mlist = made(new File(mdir, s"snap-$snapId-$commitId.avro"))
       writeManifestList(mlist, refs, spec, schema, layout)
       staleList = Some(mlist)
       val tsMs = math.max(System.currentTimeMillis(),
@@ -988,10 +1010,8 @@ object IcebergWriter {
           evolve = evolution.map { case (n, id, last, _) => (n, id, last) }))
         .getOrElse(metadataJson(base, schema, sn, newProps, spec)))
     }
-    val written =
-      try claim(dir, create = md0.isEmpty)(document)
-      catch { case e: Throwable => abandon(dir, commitId); throw e }
-    written.map(_ -> tombRows)
+    claim(dir, create = md0.isEmpty, refused = () => abandon(created))(
+      document).map(_ -> tombRows)
   }
 
   /** The one writer of a metadata version. Under the table's commit
@@ -1001,12 +1021,17 @@ object IcebergWriter {
     * document and the version hint are written. A claim lost to another
     * process re-runs `build` on the refreshed table after a backoff, up
     * to 20 attempts; a create has nothing to refresh onto and raises.
+    * A refused claim (`build` raised, a create lost, 20 conflicts) runs
+    * `refused` before it raises; a failure after the version is claimed
+    * does not, since the claimed document names the caller's files.
     * Returns the metadata file written. */
-  private def claim(dir: File, create: Boolean = false)
+  private def claim(dir: File, create: Boolean = false,
+      refused: () => Unit = () => ())
       (build: Int => Option[String]): Option[File] = {
     val mdir = new File(dir, "metadata")
+    // the claimed version, its file and the document to write into it
     @annotation.tailrec
-    def attempt(n: Int): Option[File] = build(n) match {
+    def attempt(n: Int): Option[(Int, File, String)] = build(n) match {
       case None => None
       case Some(doc) =>
         val version = if (create) 1 else currentVersion(mdir) + 1
@@ -1027,12 +1052,8 @@ object IcebergWriter {
         val won =
           try { java.nio.file.Files.createFile(vfile.toPath); true }
           catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        if (won) {
-          java.nio.file.Files.writeString(vfile.toPath, doc)
-          java.nio.file.Files.writeString(
-            new File(mdir, "version-hint.text").toPath, version.toString)
-          Some(vfile)
-        } else {
+        if (won) Some((version, vfile, doc))
+        else {
           require(!create, s"iceberg: concurrent CREATE on $dir — the " +
             "table already has a metadata version")
           require(n + 1 < 20, s"iceberg: gave up claiming a metadata " +
@@ -1044,20 +1065,22 @@ object IcebergWriter {
         }
     }
     commitLocks.computeIfAbsent(dir.getCanonicalPath, _ => new Object)
-      .synchronized(attempt(0))
+      .synchronized {
+        val claimed =
+          try attempt(0) catch { case e: Throwable => refused(); throw e }
+        claimed.map { case (version, vfile, doc) =>
+          java.nio.file.Files.writeString(vfile.toPath, doc)
+          java.nio.file.Files.writeString(
+            new File(mdir, "version-hint.text").toPath, version.toString)
+          vfile
+        }
+      }
   }
 
-  /** Delete every file a commit wrote before claiming a version: its
-    * `data/<leg>-<commitId>` directories, its manifests and its
-    * manifest lists. */
-  private def abandon(dir: File, commitId: String): Unit = {
-    def under(sub: String): Seq[File] =
-      Option(new File(dir, sub).listFiles()).toSeq.flatten
-    under("data").filter(_.getName.endsWith(s"-$commitId"))
-      .foreach(deleteRecursively)
-    under("metadata").filter(f => f.getName.startsWith(s"manifest-$commitId-")
-      || f.getName.endsWith(s"-$commitId.avro")).foreach(_.delete())
-  }
+  /** Delete what a commit created before it could claim a version: its
+    * leg directories, manifests and manifest lists. */
+  private def abandon(created: java.util.Collection[File]): Unit =
+    created.forEach(f => deleteRecursively(f))
 
   /** Delete a file and its Hadoop checksum sibling. */
   private def deleteWithChecksum(f: File): Unit = {

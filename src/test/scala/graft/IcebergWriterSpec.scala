@@ -994,6 +994,67 @@ class IcebergWriterSpec extends AnyFunSuite {
       .count(_.startsWith("snap-")) == 2)
   }
 
+  test("a commit whose file names meet an earlier commit's deletes none of them") {
+    import spark.implicits._
+    val dirF = Files.createTempDirectory("graft_icecollide").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir, Seq((1L, "a")).toDF("id", "name"))
+    val before = try {
+      IcebergWriter.testCommitId = Some("collide")
+      IcebergWriter.append(spark, dir, Seq((2L, "b")).toDF("id", "name"))
+      val before = tree(dirF)
+      assert(before.contains("/data/snap-collide"))
+      // the upsert's data leg meets the append's data/snap-collide and
+      // raises; its equality-delete leg writes under a name of its own
+      intercept[Exception](IcebergWriter.upsertKeys(spark, dir,
+        Seq((2L, "c")).toDF("id", "name"), Seq("id")))
+      before
+    } finally IcebergWriter.testCommitId = None
+    // the earlier commit's files stay; only the upsert's own are gone
+    assert(tree(dirF) == before)
+    assert(ids(dir) == Seq(1L, 2L))
+  }
+
+  test("a failed hint write after a won claim keeps the commit's files") {
+    import spark.implicits._
+    val dirF = Files.createTempDirectory("graft_icehint").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir, Seq((1L, "a")).toDF("id", "name"))
+    // a directory where the hint goes: the claim of v2 and its document
+    // write succeed, the hint write then raises
+    val hint = new java.io.File(dirF, "metadata/version-hint.text")
+    assert(hint.delete() && hint.mkdir())
+    intercept[java.io.IOException](
+      IcebergWriter.append(spark, dir, Seq((2L, "b")).toDF("id", "name")))
+    assert(new java.io.File(dirF, "metadata/v2.metadata.json").length() > 0)
+    // without a hint file the reader takes the highest version, v2,
+    // whose data and manifests are all still there
+    assert(ids(dir) == Seq(1L, 2L))
+  }
+
+  test("expireSnapshots skips an expired snapshot's already-missing files") {
+    import spark.implicits._
+    val dirF = Files.createTempDirectory("graft_iceexp_missing").toFile
+    val dir = dirF.getPath
+    IcebergWriter.create(spark, dir, Seq((1L, "a")).toDF("id", "name"))
+    IcebergWriter.append(spark, dir, Seq((2L, "b")).toDF("id", "name"))
+    def dataFiles: Seq[java.io.File] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dirF, "data"))
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getPath)
+    }
+    val old = dataFiles
+    IcebergWriter.compact(spark, dir, targetFiles = 1)
+    // another engine's cleanup already removed one expired data file
+    assert(old.head.delete())
+    IcebergWriter.expireSnapshots(dir, keepLast = 1)
+    assert(old.forall(!_.exists()))
+    assert(IcebergTable.loadMetadata(dir).snapshots.map(_.snapshotId) ==
+      Seq(3L))
+    assert(ids(dir) == Seq(1L, 2L))
+  }
+
   test("writer emits the SPEC metadata layouts: r102 tuples, id-keyed binary bounds") {
     import spark.implicits._
     val dirF = Files.createTempDirectory("graft_icespec").toFile
