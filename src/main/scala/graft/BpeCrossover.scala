@@ -9,10 +9,10 @@ import graft.ops.Bpe
   * tooling, not a driver surface). The round-8 A/B proved the recount
   * loop faster on this repo's degenerate testdata vocabulary (30-3,099
   * distinct words) and parked the incremental loop behind a 1 M-word
-  * gate (`graft.bpe.incrementalMinWords`) — but that default encoded an
-  * UNMEASURED crossover: nothing had timed the two loops on a
-  * dictionary the gate's size. This main synthesizes a ≥1 M
-  * distinct-word corpus and measures both.
+  * size gate — but that threshold encoded an UNMEASURED crossover:
+  * nothing had timed the two loops on a dictionary the gate's size.
+  * This main synthesizes a ≥1 M distinct-word corpus and measures
+  * both.
   *
   * Corpus synthesis (GenScale discipline — pure column programs, no
   * RNG state, bit-reproducible): word k < nWords is the concatenation
@@ -24,7 +24,7 @@ import graft.ops.Bpe
   * words drawn by xxhash64(doc_id, slot) mod nWords, so every word
   * appears ~(8·nDocs/nWords) times.
   *
-  * Per strategy leg (forced via the gate conf): rounds of training on
+  * Per strategy leg (forced through [[Bpe.trainWith]]): rounds of training on
   * the same corpus, wall seconds of `repeats` runs after an untimed
   * small-vocab JIT warm. Both strategies' merge tables are asserted
   * bit-identical on the full corpus (the OpsSpec equality test at this
@@ -85,27 +85,20 @@ object BpeCrossover {
       s""""n_words_distinct":$distinctWords,"n_docs":$nDocs,""" +
       s""""rounds":$rounds}}""")
 
-    def train(strategy: String): DataFrame = {
-      val gate = if (strategy == "incremental") "0"
-        else Long.MaxValue.toString
-      spark.conf.set(Bpe.IncrementalMinWordsKey, gate)
-      try Bpe.trainMerges(corpus, "text", rounds)
-      finally spark.conf.unset(Bpe.IncrementalMinWordsKey)
-    }
+    val strategies = Seq("recount" -> Bpe.Recount,
+      "incremental" -> Bpe.Incremental)
 
     // untimed JIT warm of BOTH loops on a small vocabulary
     val warm = syntheticCorpus(spark, 5000L, 4000L).localCheckpoint()
-    Seq("recount", "incremental").foreach { s =>
-      val gate = if (s == "incremental") "0" else Long.MaxValue.toString
-      spark.conf.set(Bpe.IncrementalMinWordsKey, gate)
-      try Bpe.trainMerges(warm, "text", rounds).collect()
-      finally spark.conf.unset(Bpe.IncrementalMinWordsKey)
+    strategies.foreach { case (_, s) =>
+      Bpe.trainWith(warm, "text", rounds, Some(s)).collect()
     }
 
     var tables = Map.empty[String, Seq[String]]
-    for (rep <- 1 to repeats; strategy <- Seq("recount", "incremental")) {
+    for (rep <- 1 to repeats; (strategy, s) <- strategies) {
       val t0 = System.nanoTime()
-      val rows = train(strategy).orderBy("merge_rank").collect()
+      val rows = Bpe.trainWith(corpus, "text", rounds, Some(s))
+        .orderBy("merge_rank").collect()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"strategy":"$strategy","rep":$rep,""" +
         f""""sec":$sec%.3f,"n_words":$distinctWords,"rounds":$rounds}""")

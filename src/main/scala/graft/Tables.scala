@@ -91,19 +91,14 @@ object Tables {
         load(spark, dir, n).createOrReplaceTempView(n)
     }
 
-  /** SHUFFLE_HASH hint, gated on `graft.join.shuffleHash` (default on).
+  /** SHUFFLE_HASH hint on `df` as a join's build side.
     *
     * The hint avoids sort-merge's full sort of the fact side (measured
-    * 4.3× per-row at sf10 on q5's lineitem leg), but Spark's shuffled
-    * hash join cannot spill its build-side map: the per-partition build
-    * size is build_rows / shuffle_partitions, so it is only safe while
-    * `spark.sql.shuffle.partitions` scales with the data (the house
-    * sizing rule in SURVEY §8). Cluster-scale runs where partitions are
-    * NOT scaled up with the data should set the flag to false and take
-    * spillable sort-merge instead. */
-  def shuffleHash(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("graft.join.shuffleHash", "true").toBoolean)
-      df.hint("SHUFFLE_HASH")
-    else df
+    * 4.3× per-row at sf10 on q5's lineitem leg). Spark's shuffled hash
+    * join cannot spill its build-side map, so the per-partition build
+    * size, build_rows / shuffle partitions, must stay bounded. It does
+    * here: every session starts each exchange at
+    * [[EngineDefaults.initialPartitionNum]] partitions, the house rule
+    * that partitions scale with the data (SURVEY §8). */
+  def shuffleHash(df: DataFrame): DataFrame = df.hint("SHUFFLE_HASH")
 }

@@ -142,9 +142,7 @@ final class GlueCatalog(region: String, accessKey: String,
     val loc = params.path("metadata_location").asText("")
     require(loc.nonEmpty,
       s"glue: ICEBERG table $db.$table carries no metadata_location")
-    val md = IcebergMetadata.parse(java.nio.file.Files.readString(
-      java.nio.file.Path.of(IcebergTable.localPath(loc))))
-    (md, IcebergTable.localPath(md.location))
+    IcebergTable.loadAt(loc)
   }
 
   /** Catalog-resolved read: GetTable → metadata document → manifest
@@ -184,9 +182,7 @@ final class GlueCatalog(region: String, accessKey: String,
     val prevLoc = t.path("Parameters").path("metadata_location").asText("")
     require(prevLoc.nonEmpty,
       s"glue: ICEBERG table $db.$table carries no metadata_location")
-    val dir = IcebergTable.localPath(IcebergMetadata.parse(
-      java.nio.file.Files.readString(
-        java.nio.file.Path.of(IcebergTable.localPath(prevLoc)))).location)
+    val (_, dir) = IcebergTable.loadAt(prevLoc)
     val newLoc = IcebergWriter.append(spark, dir, df).getAbsolutePath
     val req = mapper.createObjectNode()
     req.put("DatabaseName", db)

@@ -150,17 +150,17 @@ final class IcebergRestCatalog(baseUri: String,
     val t = java.net.URLEncoder.encode(
       table, java.nio.charset.StandardCharsets.UTF_8)
     val n = get(s"/v1$prefix/namespaces/${nsPath(ns)}/tables/$t")
-    val md = Option(n.get("metadata")).filterNot(_.isNull) match {
-      case Some(embedded) => IcebergMetadata.parse(embedded.toString)
+    Option(n.get("metadata")).filterNot(_.isNull) match {
+      case Some(embedded) =>
+        val md = IcebergMetadata.parse(embedded.toString)
+        (md, IcebergTable.localPath(md.location))
       case None =>
         val loc = n.path("metadata-location").asText("")
         require(loc.nonEmpty, s"iceberg rest: LoadTableResult for " +
           s"${ns.mkString(".")}.$table carries neither metadata nor " +
           "metadata-location")
-        IcebergMetadata.parse(java.nio.file.Files.readString(
-          java.nio.file.Path.of(IcebergTable.localPath(loc))))
+        IcebergTable.loadAt(loc)
     }
-    (md, IcebergTable.localPath(md.location))
   }
 
   /** Catalog-resolved read: LoadTableResult → manifest chain →

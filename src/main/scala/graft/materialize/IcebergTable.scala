@@ -42,6 +42,16 @@ object IcebergTable {
   def loadMetadata(tableDir: String): IcebergMetadata =
     IcebergMetadata.parse(currentMetadataDoc(tableDir))
 
+  /** The metadata document a catalog points at (`metadataLocation`,
+    * a path or `file:` URI) and the local table directory its
+    * `location` names — what each catalog's `loadTable` returns. */
+  private[materialize] def loadAt(metadataLocation: String)
+      : (IcebergMetadata, String) = {
+    val md = IcebergMetadata.parse(java.nio.file.Files.readString(
+      java.nio.file.Path.of(localPath(metadataLocation))))
+    (md, localPath(md.location))
+  }
+
   /** Raw text of the table's CURRENT metadata document — what a
     * layout-preserving commit amends in place. */
   private[materialize] def currentMetadataDoc(tableDir: String): String =

@@ -458,10 +458,13 @@ object IcebergWriter {
     * an expired snapshot reaches and no kept snapshot does — the
     * table-maintenance half of merge-on-read (tombstone-heavy histories
     * otherwise grow without bound; at 100 TB expiry is what bounds
-    * metadata work and storage). Files no snapshot ever referenced — a
-    * concurrent commit's not-yet-claimed legs among them — are not
-    * expiry's to delete. All reachability walking is driver-side
-    * metadata reads of the document the claim amends. */
+    * metadata work and storage). A commit's leg directory
+    * (`data/<leg>-<commitId>`) that held an expired file and has no
+    * parquet file left goes too, with its `_SUCCESS` marker. Files no
+    * snapshot ever referenced — a concurrent commit's not-yet-claimed
+    * legs among them — are not expiry's to delete. All reachability
+    * walking is driver-side metadata reads of the document the claim
+    * amends. */
   def expireSnapshots(tableDir: String, keepLast: Int): Unit = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     var expired = Set.empty[String]
@@ -530,6 +533,18 @@ object IcebergWriter {
       }
     }
     expired.foreach(p => deleteWithChecksum(new File(p)))
+    // the leg directories (data/<leg>-<commitId>) that held an expired
+    // file; partitioned legs keep theirs in col=value/ subdirectories
+    def holdsParquet(d: File): Boolean = {
+      val s = java.nio.file.Files.walk(d.toPath)
+      try s.anyMatch(_.toString.endsWith(".parquet")) finally s.close()
+    }
+    val data = new File(tableDir, "data").getCanonicalPath + File.separator
+    expired.filter(_.startsWith(data)).map(_.substring(data.length))
+      .filter(_.contains(File.separatorChar))
+      .map(r => new File(data, r.takeWhile(_ != File.separatorChar)))
+      .filter(_.isDirectory).filterNot(holdsParquet)
+      .foreach(deleteRecursively)
   }
 
   /** Compaction (snapshot operation `replace`): materialize the live

@@ -121,9 +121,7 @@ final class NessieCatalog(baseUri: String,
     val loc = c.path("metadataLocation").asText("")
     require(loc.nonEmpty, s"nessie: ICEBERG_TABLE " +
       s"${(ns :+ table).mkString(".")} carries no metadataLocation")
-    val md = IcebergMetadata.parse(java.nio.file.Files.readString(
-      java.nio.file.Path.of(IcebergTable.localPath(loc))))
-    (md, IcebergTable.localPath(md.location))
+    IcebergTable.loadAt(loc)
   }
 
   /** Catalog-resolved read: content → metadata document → manifest

@@ -54,13 +54,12 @@ import TextOps.tokens
   * incremental wins from 30 k up (6.1 vs 7.3 at 30 k; 16.2 vs 17.4 at
   * 1.28 M; 37.8 vs 50.0 at 4 M — the gap widens with the vocabulary,
   * as the touched-word fraction shrinks). The size gate encodes that
-  * measurement: below `graft.bpe.incrementalMinWords` (default
-  * 100,000 — above the 10-30 k crossover band with margin for corpora
-  * whose merges touch more of the dictionary) the recount loop runs;
-  * at or above it, the incremental loop. Both emit bit-identical merge
-  * tables (each has passed the sf0.01 driver oracle; OpsSpec asserts
-  * cross-strategy equality on both the testdata and the diversified
-  * corpus).
+  * measurement: below 100,000 distinct words (above the 10-30 k
+  * crossover band, with margin for corpora whose merges touch more of
+  * the dictionary) the recount loop runs; at or above it, the
+  * incremental loop. Both emit bit-identical merge tables (each has
+  * passed the sf0.01 driver oracle; OpsSpec asserts cross-strategy
+  * equality on both the testdata and the diversified corpus).
   *
   * Engine-exact and differentially checkable end-to-end: pair counts
   * are integer sums of word frequencies; the winning pair is picked by
@@ -78,10 +77,14 @@ import TextOps.tokens
   */
 object Bpe {
 
-  /** Session-conf key: dictionary size (distinct words) at or above
-    * which the incremental pair-count strategy replaces full recount. */
-  val IncrementalMinWordsKey = "graft.bpe.incrementalMinWords"
-  private val IncrementalMinWordsDefault = 100000L
+  /** Dictionary size (distinct words) at or above which the
+    * incremental pair-count loop replaces full recount. */
+  private val IncrementalMinWords = 100000L
+
+  /** The two training loops behind [[trainMerges]]. */
+  private[graft] sealed trait Strategy
+  private[graft] case object Recount extends Strategy
+  private[graft] case object Incremental extends Strategy
 
   private val emptyPairs = array().cast(
     ArrayType(StructType(Seq(StructField("lhs", StringType),
@@ -155,9 +158,15 @@ object Bpe {
   /** Learn `rounds` BPE merges from the corpus. Returns one row per
     * merge: (merge_rank 1-based, lhs, rhs, pair_count) in learned
     * order. Words shorter than 2 characters carry no pairs and are
-    * dropped up front. */
+    * dropped up front. The loop is picked by dictionary size. */
   def trainMerges(docs: DataFrame, textCol: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = trainWith(docs, textCol, rounds, None)
+
+  /** [[trainMerges]] with the loop forced to `strategy`, or picked by
+    * the size gate when `None`. Both loops learn bit-identical tables;
+    * specs and [[graft.BpeCrossover]] compare them through this. */
+  private[graft] def trainWith(docs: DataFrame, textCol: String,
+      rounds: Int, strategy: Option[Strategy]): DataFrame = {
     require(rounds >= 1, "bpe: rounds must be >= 1")
     val spark = docs.sparkSession
     // corpus -> word-frequency dictionary (the only corpus-sized pass).
@@ -171,16 +180,15 @@ object Bpe {
       .select(concat(lit("||"),
         regexp_replace(col("w"), "(.)", "$1||")).as("enc"), col("freq")),
       eager = false)
-    // malformed conf values fall back to the default instead of
-    // aborting training with a NumberFormatException
-    val minWords = spark.conf.getOption(IncrementalMinWordsKey)
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(IncrementalMinWordsDefault)
-    // the gate probe is the job that materializes the lazy checkpoint;
-    // every later consumer reads the persisted blocks
-    val merges =
-      if (dict0.data.count() >= minWords) trainIncremental(dict0, rounds)
-      else trainRecount(dict0, rounds)
+    // the gate probe is the job that materializes the lazy checkpoint
+    // (also when the loop is forced); every later consumer reads the
+    // persisted blocks
+    val words = dict0.data.count()
+    val merges = strategy.getOrElse(
+        if (words >= IncrementalMinWords) Incremental else Recount) match {
+      case Incremental => trainIncremental(dict0, rounds)
+      case Recount => trainRecount(dict0, rounds)
+    }
     merges.reduce(_ union _)
       .select(col("merge_rank"), col("lhs"), col("rhs"),
         col("pair_count"))

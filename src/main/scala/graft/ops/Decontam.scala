@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   * closing per-document aggregation combines map-side (explode
   * preserves row locality, so each document collapses back to one row
   * before the exchange) — shuffle volume ≈ #contaminated documents,
-  * not #n-grams. For an eval corpus too big to broadcast, pass
-  * `broadcastEval = false` to fall back to a shuffle join on the gram
-  * hash.
+  * not #n-grams. [[overlap]] and [[novelty]] leave the broadcast to
+  * AQE, which falls back to a shuffle join on the gram hash for an
+  * eval corpus too big to broadcast.
   *
   * n-gram hashes are the [[graft.functions.TextHash.hashedNgrams]]
   * arithmetic combine over md5-h32 token hashes — deterministic and
@@ -33,27 +33,23 @@ object Decontam {
     * fraction. Dropping flagged documents is then a broadcast-able
     * anti-join on `doc_id`.
     *
-    * `broadcastEval = true` FORCES the eval-gram broadcast — only
-    * correct when the eval set is known-bounded. The default leaves
-    * the join unhinted so AQE auto-broadcasts a small eval side at
+    * The join is unhinted, so AQE auto-broadcasts a small eval side at
     * runtime and falls back to a distributed join for a corpus-scale
-    * one: the round-12 fifth-decade probe measured the forced hint
-    * collecting a ~1 GB gram set to the driver (eval splits that are a
+    * one: the round-12 fifth-decade probe measured a forced broadcast
+    * hint collecting a ~1 GB gram set to the driver (eval splits that are a
     * FRACTION of the corpus grow with it — past driver limits the
     * forced broadcast is wrong by construction). When the train side
-    * must never shuffle regardless of eval size, use [[bloomOverlap]]
+    * must never shuffle regardless of eval size, use [[overlapBloom]]
     * — its broadcast digest is fixed-size by construction. */
   def overlap(train: DataFrame, evalDocs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 8,
-      broadcastEval: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text",
+      n: Int = 8): DataFrame = {
     import graft.functions.TextHash
     val grams =
       TextHash.hashedNgrams(TextHash.tokenHashes(col(textCol)), n)
     val evalGrams = evalDocs.select(explode(grams).as("g"))
       .distinct()
-    val probeSide =
-      (if (broadcastEval) broadcast(evalGrams) else evalGrams)
-        .withColumn("__hit", lit(1))
+    val probeSide = evalGrams.withColumn("__hit", lit(1))
     train
       .select(col(idCol), grams.as("__sh"))
       .filter(size(col("__sh")) > 0)
@@ -77,18 +73,15 @@ object Decontam {
     * overlap's contaminated-only ledger. Identical scale shape:
     * broadcast distinct reference gram hashes, one narrow target pass,
     * map-side-combined per-doc aggregation. Like [[overlap]], the
-    * reference-gram broadcast is AQE-adaptive by default — a forced
-    * hint is only correct for known-bounded references. */
+    * reference-gram broadcast is left to AQE. */
   def novelty(target: DataFrame, reference: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 8,
-      broadcastRef: Boolean = false): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text",
+      n: Int = 8): DataFrame = {
     import graft.functions.TextHash
     val grams =
       TextHash.hashedNgrams(TextHash.tokenHashes(col(textCol)), n)
     val refGrams = reference.select(explode(grams).as("g")).distinct()
-    val probeSide =
-      (if (broadcastRef) broadcast(refGrams) else refGrams)
-        .withColumn("__hit", lit(1))
+    val probeSide = refGrams.withColumn("__hit", lit(1))
     target
       .select(col(idCol), grams.as("__sh"))
       .filter(size(col("__sh")) > 0)
@@ -164,11 +157,11 @@ object Decontam {
     * eval-corpus-sized — the train side stays a narrow tokenize+hash+
     * explode pass, and the closing groupBy combines map-side (a train
     * document's grams stay row-local through the explode), so shuffle
-    * volume ≈ #contaminated pairs, not #n-grams. */
+    * volume ≈ #contaminated pairs, not #n-grams. Unlike [[overlap]],
+    * the eval side is always broadcast: the join is hinted. */
   def attribution(train: DataFrame, evalDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 8,
-      benchmarkCol: String = "source",
-      broadcastEval: Boolean = true): DataFrame = {
+      benchmarkCol: String = "source"): DataFrame = {
     import graft.functions.TextHash
     val grams =
       TextHash.hashedNgrams(TextHash.tokenHashes(col(textCol)), n)
@@ -176,14 +169,12 @@ object Decontam {
     // already unique — no distinct needed before the broadcast
     val evalGrams = evalDocs.select(col(idCol).as("eval_id"),
       col(benchmarkCol).as("benchmark"), explode(grams).as("g"))
-    val probeSide =
-      if (broadcastEval) broadcast(evalGrams) else evalGrams
     train
       .select(col(idCol), grams.as("__sh"))
       .filter(size(col("__sh")) > 0)
       .select(col(idCol), size(col("__sh")).as("__n"),
         explode(col("__sh")).as("g"))
-      .join(probeSide, Seq("g"))
+      .join(broadcast(evalGrams), Seq("g"))
       .groupBy(col(idCol), col("eval_id"), col("benchmark"))
       .agg(min(col("__n")).as("n_ngrams"),
         count(lit(1)).as("shared_ngrams"))

@@ -10,14 +10,6 @@ import org.apache.spark.sql.types._
   */
 object Graph {
 
-  /** Session-conf key: out-degree attachment strategy for [[pageRank]].
-    * `window` (default) fuses the count into the edge-dedup pass —
-    * fewest exchanges, but a hub node's edge list lands in ONE window
-    * task; `join` pays an extra agg exchange + join whose skew AQE can
-    * split at runtime — the right choice on power-law graphs with
-    * extreme hubs. Both produce bit-identical ranks. */
-  val OutdegreeStrategyKey = "graft.graph.outdegreeStrategy"
-
   /** Fixed-iteration PageRank with damping `d`: r₀ = 1/N,
     * rₖ₊₁(v) = (1−d)/N + d·Σ_{u→v} rₖ(u)/outdeg(u).
     *
@@ -39,7 +31,15 @@ object Graph {
     * their mass leaks rather than redistributes — the common
     * simplification; pipelines that need mass conservation add a
     * dangling-sum term, at the cost of one extra tiny aggregate per
-    * round. */
+    * round.
+    *
+    * Known limitation, hub skew (ADVICE r17): out-degree is a window
+    * count over `src`, and a window partition is one task (AQE splits
+    * skewed JOINS only), so a power-law hub whose out-edge list dwarfs
+    * the median makes a straggler with no runtime mitigation. A
+    * groupBy+join out-degree would be skew-splittable at the cost of
+    * one extra exchange per call. No workload here has a hub, so the
+    * shape is fixed; re-open with a profile of a hub-skewed graph. */
   def pageRank(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", damping: Double = 0.85,
       iterations: Int = 5): DataFrame = {
@@ -56,32 +56,10 @@ object Graph {
     // (guide §2.4: two operations keyed the same way share the
     // partitioning; the window count is duplicate-insensitive only
     // AFTER distinct, so the order is load-bearing).
-    //
-    // HUB-SKEW limitation of the window shape (ADVICE r17): a window
-    // partition is one task — AQE's skew splitting applies to JOINS
-    // only — so a power-law hub whose out-edge list dwarfs the median
-    // makes a straggler here with no runtime mitigation. The
-    // `outdegreeStrategy=join` conf restores the previous groupBy+join
-    // shape: one extra agg exchange + join for the same integer, but
-    // the join IS AQE-skew-splittable and the groupBy is map-side
-    // combined. Bit-identical ranks either way (same integer outdeg);
-    // the window default is the measured-best on near-uniform graphs.
-    val dedup = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val eDeg = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    val joinShape = edges.sparkSession.conf
-      .getOption(OutdegreeStrategyKey).map(_.trim) match {
-      case Some("join") => true
-      case Some("window") | None => false
-      case Some(other) => sys.error(
-        s"$OutdegreeStrategyKey must be 'window' or 'join', got " +
-          s"'$other' — a silently-ignored typo here would leave the " +
-          "hub-straggler the knob exists to avoid")
-    }
-    val eDeg = (if (joinShape)
-        dedup.join(dedup.groupBy(col("src"))
-          .agg(count(lit(1)).as("outdeg")), Seq("src"))
-      else dedup.withColumn("outdeg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+      .withColumn("outdeg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .localCheckpoint(false)
     val nodes = eDeg.select(col("src").as("node"))
       .union(eDeg.select(col("dst")))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.queries.Exact.{c2, revScaled, sumRevenue}
 
 /** Core relational operators from SURVEY.md §2.1–§2.7: scans, projections,
   * filters, joins (equi/semi/anti), aggregations, windows, sorts/top-k,
@@ -23,29 +24,6 @@ object CoreQueries {
 
   private def dec(c: org.apache.spark.sql.Column, p: Int = 24, s: Int = 6) =
     c.cast(DecimalType(p, s))
-
-  /** Exact integer cents of a 2-dp money/rate column: the TPC-H money
-    * and percentage columns are DECIMAL(·,2) quantities stored as
-    * doubles, so floor(x·100 + 0.5) recovers the exact integer — the
-    * q_fn_stats fixed-point recipe. The revenue family accumulates
-    * these integer products instead of per-row double→DECIMAL(24,6)
-    * casts: the cast HALF_UPs the SHORTEST string repr in Spark but
-    * the binary value in DuckDB, and at sf1 row counts a 6-dp
-    * near-tie row appears and flips the last ulp of the sum (caught
-    * by the full-inventory sf1 sweep on q1_agg's sum_charge).
-    * Integer arithmetic has no ties. */
-  private def c2(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5))
-
-  /** Revenue row `extprice·(1−disc)` in exact 1e-4 units. */
-  private def revScaled =
-    c2(col("l_extendedprice")) * (lit(100L) - c2(col("l_discount")))
-
-  /** `SUM(extprice·(1−disc))` — exact DECIMAL accumulation of the
-    * scaled-integer rows, rescaled once at the end. */
-  private def sumRevenue =
-    sum(revScaled.cast(DecimalType(28, 0))).cast(DoubleType) /
-      lit(10000.0)
 
   val defs: Map[String, Q] = Map(
     // ------------------------------------------------------------------

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.Dialect
+import graft.functions.{Dialect, Registry}
 import graft.functions.Dialect.{arrayConstruct, dateaddSf, datediffSf, iff,
   listaggSorted, md5ScdId, objectConstruct, parseJsonText, regexpSubstr,
   toVariant, tryToBoolean, tryToDate, tryToDouble, tryToNumber,
@@ -248,21 +248,17 @@ object FunctionQueries {
     }),
 
     // VariantType-native twin (SURVEY §1.2's "upgradeable" note): the
-    // SAME Snowflake text under graft.variant.native=true — colon paths
+    // SAME Snowflake text transpiled with `nativeVariant` — colon paths
     // compile to variant_get over Spark 4's binary VariantType (one
     // parse into a navigable value instead of re-scanning JSON text per
-    // path); the string-repr path stays the default because its results
-    // are directly oracle-comparable. Values must match exactly.
+    // path); `SnowflakeSql.run` keeps the string-repr path because its
+    // results are directly oracle-comparable. Values must match exactly.
     "q_sql_colon_path_native" -> ((s, dir) => {
-      // restore the caller's prior flag value, not a hard-coded
-      // "false" — a session that enabled the documented upgrade path
-      // globally must not be silently downgraded by this query
-      val prev = s.conf.get("graft.variant.native", "false")
-      s.conf.set("graft.variant.native", "true")
-      try sfSql(s, dir,
-        """SELECT event_id, props:k::int AS k_val
-          |FROM events WHERE props:k::int BETWEEN 20 AND 40""".stripMargin)
-      finally s.conf.set("graft.variant.native", prev)
+      val sql = """SELECT event_id, props:k::int AS k_val
+        |FROM events WHERE props:k::int BETWEEN 20 AND 40""".stripMargin
+      Tables.registerFor(s, dir, sql)
+      Registry.register(s)
+      s.sql(SnowflakeSql.transpile(sql, nativeVariant = true))
     }),
 
     // VARIANT cast forms (CAST(x AS VARIANT), x::VARIANT, TO_VARIANT(x))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.Tables
+import graft.queries.Exact.h32Sql
 import graft.ops.{Dedup, Sampling, Search, Similarity, TextAnalysis}
 
 /** Round-4 pipeline additions: corpus-wide segment (paragraph) dedup,
@@ -16,8 +17,6 @@ import graft.ops.{Dedup, Sampling, Search, Similarity, TextAnalysis}
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private def h32Sql(arg: String) =
-    s"('0x' || substr(md5($arg), 1, 8))::BIGINT"
   private val toksSql =
     "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 

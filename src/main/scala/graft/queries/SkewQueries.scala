@@ -36,16 +36,10 @@ import graft.ops.Skew
   * commit f0feb50) and is recorded in SCALING.md.
   *
   * Money discipline: revenue accumulates exact scaled-integer cents
-  * products (the house c2 recipe — see [[TpchQueries]]), rescaled once.
+  * products (the house c2 recipe — see [[Exact]]), rescaled once.
   */
 object SkewQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  /** Exact 1e-4-unit revenue row, as in [[TpchQueries.revScaled]]. */
-  private def revScaled =
-    (floor(col("l_extendedprice") * lit(100.0) + lit(0.5)) *
-      (lit(100L) - floor(col("l_discount") * lit(100.0) + lit(0.5))))
-      .cast(DecimalType(28, 0))
 
   /** The skewed big side: ~20% of lineitem rows routed to the hot
     * supplier key (min s_suppkey), the rest untouched. The 1-row hot
@@ -58,7 +52,7 @@ object SkewQueries {
       .select(
         when(pmod(col("l_orderkey"), lit(5)) === 0, col("__hot"))
           .otherwise(col("l_suppkey")).as("supp_eff"),
-        revScaled.as("__rev"))
+        Exact.revScaled.cast(DecimalType(28, 0)).as("__rev"))
   }
 
   /** The small side: supplier enriched with its nation name, keyed to

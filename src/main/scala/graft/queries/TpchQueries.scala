@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 import graft.Tables
+import graft.queries.Exact.{c2, revScaled, sumRevenue}
 
 /** The remaining TPC-H query shapes (q2, q4, q9, q11, q12, q14, q15, q16,
   * q17, q19, q20, q21, q22), completing the 22-query suite started in
@@ -14,7 +15,7 @@ import graft.Tables
   * columns. Queries that reference those are ADAPTED — same plan shape,
   * join depth and aggregation structure, with stand-ins from the columns
   * that exist (documented per query). Money/ratio arithmetic follows the
-  * house integer-cents discipline (see [[CoreQueries]] `c2`): every
+  * house integer-cents discipline (see [[Exact.c2]]): every
   * aggregate that feeds a comparison or a hash-checked output value is an
   * exact scaled-integer DECIMAL accumulation, rescaled once at the end,
   * so no cross-engine double tie can flip a row at any scale.
@@ -31,22 +32,10 @@ object TpchQueries {
   private def dec(c: org.apache.spark.sql.Column) =
     c.cast(DecimalType(28, 0))
 
-  /** Exact integer cents of a 2-dp money/rate column (the q_fn_stats
-    * fixed-point recipe — see CoreQueries.c2). */
-  private def c2(c: org.apache.spark.sql.Column) =
-    floor(c * lit(100.0) + lit(0.5))
-
   /** Integral l_quantity as BIGINT (the generator writes whole units). */
   private def qtyL = floor(col("l_quantity") + lit(0.5)).cast(LongType)
 
-  /** Revenue row `extprice·(1−disc)` in exact 1e-4 units. */
-  private def revScaled =
-    c2(col("l_extendedprice")) * (lit(100L) - c2(col("l_discount")))
-
-  private def sumRevenue =
-    sum(dec(revScaled)).cast(DoubleType) / lit(10000.0)
-
-  /** The DuckDB text of [[revScaled]] (kept in lockstep). */
+  /** The DuckDB text of [[Exact.revScaled]] (kept in lockstep). */
   private val revSql =
     """CAST((CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
       |    * (100 - CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT)))

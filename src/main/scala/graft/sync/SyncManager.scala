@@ -17,8 +17,7 @@ import graft.warehouse.Warehouse
   */
 final case class SyncConfig(
     maxAttempts: Int = 3,
-    backoffMillis: Long = 1000,
-    verifyRowCount: Boolean = true)
+    backoffMillis: Long = 1000)
 
 final case class SyncResult(
     table: String,
@@ -45,12 +44,10 @@ final class SyncManager(config: SyncConfig = SyncConfig(),
       attempt += 1
       last =
         try {
-          val srcCount =
-            if (config.verifyRowCount) source.rowCount(schema, table) else -1L
+          val srcCount = source.rowCount(schema, table)
           target.createTableAs(source.read(schema, table), schema, table)
-          val tgtCount =
-            if (config.verifyRowCount) target.rowCount(schema, table) else -1L
-          if (config.verifyRowCount && srcCount != tgtCount)
+          val tgtCount = target.rowCount(schema, table)
+          if (srcCount != tgtCount)
             SyncResult(table, "failed", attempt, srcCount, tgtCount,
               Some(s"row count mismatch: $srcCount != $tgtCount"))
           else SyncResult(table, "synced", attempt, srcCount, tgtCount, None)

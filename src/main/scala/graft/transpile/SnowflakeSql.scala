@@ -35,17 +35,12 @@ import graft.functions.Registry
 object SnowflakeSql {
 
   /** Run Snowflake-dialect SQL on Spark. Colon-path access compiles to
-    * `get_json_object` (string-repr VARIANT, the oracle-comparable
-    * default) or — when the session sets `graft.variant.native=true` —
-    * to `variant_get(try_parse_json(col), path, 'string')` over Spark
-    * 4's binary VariantType (same string-out semantics, so downstream
-    * `::type` casts behave identically; the binary form parses the JSON
-    * once into a navigable value instead of re-scanning text per
-    * path). */
+    * `get_json_object` (string-repr VARIANT, directly comparable with
+    * the oracle); [[transpile]] with `nativeVariant = true` gives the
+    * binary-VariantType form instead. */
   def run(spark: SparkSession, sql: String): DataFrame = {
     Registry.register(spark)
-    val t0 = transpile(sql,
-      spark.conf.get("graft.variant.native", "false").toBoolean)
+    val t0 = transpile(sql)
     // global-top-k QUALIFY (no PARTITION BY) would plan an
     // unpartitioned WindowExec — ALL rows through one task. ORDER BY +
     // LIMIT is the same multiset and plans as TakeOrderedAndProject
@@ -132,7 +127,12 @@ object SnowflakeSql {
   }
 
   /** Text-level rewrites only (QUALIFY needs the DataFrame step in
-    * [[run]]; `transpile` leaves it in place). */
+    * [[run]]; `transpile` leaves it in place). With `nativeVariant`,
+    * colon paths compile to `variant_get(try_parse_json(col), path,
+    * 'string')` over Spark 4's binary VariantType (same string-out
+    * semantics, so downstream `::type` casts behave identically; the
+    * binary form parses the JSON once into a navigable value instead
+    * of re-scanning text per path). */
   def transpile(sql: String, nativeVariant: Boolean = false): String = {
     var s = sql
     s = rewriteCastVariant(s)
@@ -288,10 +288,10 @@ object SnowflakeSql {
   }
 
   /** `col:a.b` (not `::`) → get_json_object(col, '$.a.b'), or the
-    * VariantType form under the `graft.variant.native` flag (string
-    * target type keeps `::type` cast semantics identical). */
+    * VariantType form when `nativeVariant` (string target type keeps
+    * `::type` cast semantics identical). */
   private def rewriteColonPaths(sql: String,
-      nativeVariant: Boolean = false): String = {
+      nativeVariant: Boolean): String = {
     val re = ("(?<![:\\w'])([A-Za-z_]\\w*)\\s*:(?!:)\\s*" +
       "([A-Za-z_]\\w*(?:\\.[A-Za-z_]\\w*)*)").r
     re.replaceAllIn(sql, m => scala.util.matching.Regex.quoteReplacement(

@@ -13,10 +13,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * VERSIONED READS: every replace-type write (CTAS overwrite, rename
   * promote) ARCHIVES the table's previous directory under
   * `<schema>/.versions/<table>/<n>` instead of deleting it, keeping the
-  * newest `keepVersions` — the snapshot/time-travel capability the
-  * reference gets from its Iceberg catalog ATTACH (reference
-  * `connections.py:990-1055`; no Iceberg jars ship in this container,
-  * SURVEY §8), re-expressed over plain Parquet dirs. Each archive
+  * newest [[Warehouse.KeepVersions]] — the snapshot/time-travel
+  * capability the reference gets from its Iceberg catalog ATTACH
+  * (reference `connections.py:990-1055`; no Iceberg jars ship in this
+  * container, SURVEY §8), re-expressed over plain Parquet dirs. Each archive
   * appends a ledger line (schema, table, version, label, action) like
   * the sync history; labels are caller-pinned via [[setVersionLabel]]
   * (never wall-clock — determinism convention), so [[readAsOf]] can
@@ -46,8 +46,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `saveAsTable`/Iceberg replace the raw Parquet dirs; the API is kept at
   * that altitude so swapping the backend does not touch callers.
   */
-class Warehouse(val spark: SparkSession, val root: String,
-    val keepVersions: Int = 2) {
+class Warehouse(val spark: SparkSession, val root: String) {
   // models running side by side register and drop views concurrently
   private val views =
     scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
@@ -292,7 +291,8 @@ class Warehouse(val spark: SparkSession, val root: String,
   }
 
   /** Move the live table dir into the version archive (a rename — no
-    * data copy), record it in the ledger, prune beyond [[keepVersions]].
+    * data copy), record it in the ledger, prune beyond
+    * [[Warehouse.KeepVersions]].
     * The label stored is the label of the REPLACING write, i.e. the
     * instant this version stopped being live. */
   private def archiveCurrent(schema: String, name: String,
@@ -302,7 +302,7 @@ class Warehouse(val spark: SparkSession, val root: String,
     Files.move(Paths.get(tablePath(schema, name)),
       versionsDir(schema, name).resolve(next.toString))
     ledgerAppend(schema, name, next, versionLabel, action)
-    versions(schema, name).dropRight(keepVersions).foreach(v =>
+    versions(schema, name).dropRight(Warehouse.KeepVersions).foreach(v =>
       deleteRecursive(versionsDir(schema, name).resolve(v.toString)))
   }
 
@@ -329,9 +329,9 @@ class Warehouse(val spark: SparkSession, val root: String,
     * strings — use a sortable format, e.g. ISO timestamps): the oldest
     * version whose replacement label is AFTER the target, else the
     * live table. If the ledger shows the covering version existed but
-    * [[keepVersions]] pruning has deleted it, this FAILS rather than
-    * silently serving newer data — a time-travel read must never
-    * return rows from after the asked-for instant. */
+    * [[Warehouse.KeepVersions]] pruning has deleted it, this FAILS
+    * rather than silently serving newer data — a time-travel read must
+    * never return rows from after the asked-for instant. */
   def readAsOf(schema: String, name: String, asOfLabel: String): DataFrame = {
     val covering = versionLedger
       .filter(e => e.schema == schema && e.table == name &&
@@ -343,8 +343,9 @@ class Warehouse(val spark: SparkSession, val root: String,
         readVersion(schema, name, v)
       case Some(v) => throw new IllegalStateException(
         s"readAsOf('$asOfLabel') on $schema.$name: covering version $v " +
-          s"was pruned (keepVersions=$keepVersions); oldest retained " +
-          s"version is ${versions(schema, name).headOption.getOrElse(-1)}")
+          s"was pruned (KeepVersions=${Warehouse.KeepVersions}); oldest " +
+          s"retained version is " +
+          s"${versions(schema, name).headOption.getOrElse(-1)}")
     }
   }
 
@@ -381,6 +382,9 @@ class Warehouse(val spark: SparkSession, val root: String,
 
 object Warehouse {
   import org.apache.spark.sql.functions._
+
+  /** Archived versions kept per table; older ones are deleted. */
+  val KeepVersions = 2
 
   // the version ledger's JSON codec (JSONL: one archived version a line)
   private val ledgerMapper = new com.fasterxml.jackson.databind.ObjectMapper()

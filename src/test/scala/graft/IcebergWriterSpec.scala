@@ -116,6 +116,10 @@ class IcebergWriterSpec extends AnyFunSuite {
     assert(ids(dir) == Seq(1L, 3L))
     assert(dataFiles.size < before)
     assert(dataFiles.size == 1) // the compacted layout only
+    // the emptied commit directories went with their _SUCCESS markers
+    val legs = new java.io.File(dirF, "data").listFiles().toSeq
+    assert(legs.map(_.getName) ==
+      Seq(dataFiles.head.getParentFile.getName), legs)
     val md = IcebergTable.loadMetadata(dir)
     assert(md.snapshots.map(_.snapshotId) == Seq(4L))
     intercept[Exception](IcebergTable.readVersion(spark, dir, 1L).count())

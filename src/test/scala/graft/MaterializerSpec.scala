@@ -226,7 +226,7 @@ class MaterializerSpec extends AnyFunSuite {
     val entries = wh.versionLedger.filter(_.table == "inc_v")
     assert(entries.map(e => (e.version, e.label, e.action)) ==
       Seq((1, "2024-02-01", "promote"), (2, "2024-03-01", "promote")))
-    // a fourth run prunes beyond keepVersions = 2
+    // a fourth run prunes beyond Warehouse.KeepVersions = 2
     wh.setVersionLabel("2024-04-01")
     m.materialize(node("v4"))
     assert(wh.versions("main", "inc_v") == Seq(2, 3))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Dedup, Multimodal, Similarity}
+import graft.ops.{Bpe, Dedup, Multimodal, Similarity}
 
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
@@ -799,21 +799,6 @@ class OpsSpec extends AnyFunSuite {
     assert(rs.values.sum < 1.0) // dangling node 1 leaks its mass
   }
 
-  test("pagerank: join out-degree strategy is bit-identical to window") {
-    import spark.implicits._
-    // mixed shape (hub + chain + duplicate edge) exercises dedup,
-    // multi-out-degree division, and dangling mass on both strategies
-    val g = Seq((1L, 2L), (1L, 3L), (1L, 3L), (2L, 3L), (3L, 4L),
-      (5L, 1L)).toDF("src", "dst")
-    val byWindow = graft.ops.Graph.pageRank(g, iterations = 4).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    TestSpark.withConf(graft.ops.Graph.OutdegreeStrategyKey -> "join") {
-      val byJoin = graft.ops.Graph.pageRank(g, iterations = 4).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(byJoin == byWindow, s"join=$byJoin window=$byWindow")
-    }
-  }
-
   test("pack manifest: offsets are the ordered cumsum, bucket-invariant") {
     import spark.implicits._
     val docs = Seq(
@@ -927,7 +912,7 @@ class OpsSpec extends AnyFunSuite {
   test("BPE incremental and recount strategies learn identical merge tables") {
     import spark.implicits._
     // real corpus slice + the hand-computed toy: force each strategy
-    // via the size gate's conf knob and compare full merge tables. The
+    // through Bpe.trainWith and compare full merge tables. The
     // incremental path's delta bookkeeping (full-outer count merge,
     // zero-count drop, touched-set recount) must be exactly equal to a
     // from-scratch recount at every round.
@@ -935,21 +920,15 @@ class OpsSpec extends AnyFunSuite {
       .unionByName(Seq((90001L, "lower lower lower"), (90002L, "low low"),
         (90003L, "newest")).toDF("doc_id", "text"), allowMissingColumns = true)
       .select("doc_id", "text")
-    def table(minWords: String): Seq[(Int, String, String, Long)] =
-      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
-        graft.ops.Bpe.trainMerges(docs, "text", rounds = 5)
-          .orderBy("merge_rank").collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-            r.getLong(3))).toSeq
-      }
-    val recount = table(minWords = Long.MaxValue.toString)
-    val incremental = table(minWords = "0")
+    def table(strategy: Bpe.Strategy): Seq[(Int, String, String, Long)] =
+      Bpe.trainWith(docs, "text", rounds = 5, Some(strategy))
+        .orderBy("merge_rank").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+          r.getLong(3))).toSeq
+    val recount = table(Bpe.Recount)
+    val incremental = table(Bpe.Incremental)
     assert(recount == incremental, s"recount=$recount incr=$incremental")
     assert(recount.length == 5)
-    // a malformed gate conf falls back to the default instead of
-    // aborting training with a NumberFormatException
-    val malformed = table(minWords = "not-a-number")
-    assert(malformed == recount)
   }
 
   test("BPE strategies agree on a diversified synthetic vocabulary") {
@@ -959,13 +938,11 @@ class OpsSpec extends AnyFunSuite {
     // shape the incremental strategy exists for (its full-size 1 M+
     // word A/B runs via `runMain graft.BpeCrossover`, SCALING.md r9)
     val docs = graft.BpeCrossover.syntheticCorpus(spark, 20000L, 10000L)
-    def table(minWords: String): Seq[String] =
-      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
-        graft.ops.Bpe.trainMerges(docs, "text", rounds = 6)
-          .orderBy("merge_rank").collect().map(_.mkString("|")).toSeq
-      }
-    val recount = table(Long.MaxValue.toString)
-    val incremental = table("0")
+    def table(strategy: Bpe.Strategy): Seq[String] =
+      Bpe.trainWith(docs, "text", rounds = 6, Some(strategy))
+        .orderBy("merge_rank").collect().map(_.mkString("|")).toSeq
+    val recount = table(Bpe.Recount)
+    val incremental = table(Bpe.Incremental)
     assert(recount == incremental, s"recount=$recount incr=$incremental")
     assert(recount.length == 6)
   }
@@ -977,15 +954,13 @@ class OpsSpec extends AnyFunSuite {
     // round-8 leak fix: before it, cached blocks grew with the round
     // count and squeezed whatever ran after training.
     val docs = Tables.load(spark, sf, "documents").limit(300)
-    for (minWords <- Seq(Long.MaxValue.toString, "0")) {
-      TestSpark.withConf(graft.ops.Bpe.IncrementalMinWordsKey -> minWords) {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val rounds = 4
-        graft.ops.Bpe.trainMerges(docs, "text", rounds).collect()
-        val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-        assert(added.size <= rounds,
-          s"minWords=$minWords leaked ${added.size} cached RDDs (> $rounds tops)")
-      }
+    for (strategy <- Seq(Bpe.Recount, Bpe.Incremental)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rounds = 4
+      Bpe.trainWith(docs, "text", rounds, Some(strategy)).collect()
+      val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+      assert(added.size <= rounds,
+        s"$strategy leaked ${added.size} cached RDDs (> $rounds tops)")
     }
   }
 

@@ -62,6 +62,31 @@ class SessionFactorySpec extends AnyFunSuite {
       s"session builders outside EngineDefaults.local: $hits")
   }
 
+  test("src/main reads no graft.* session conf") {
+    // the prefix is assembled so this file does not match itself
+    val prefix = Seq("graft", "").mkString(".")
+    val sources = {
+      val s = Files.walk(Paths.get("src/main/scala"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f.getFileName.toString -> Files.readString(f)).toList
+      finally s.close()
+    }
+    // a key is a literal or a string constant named by the call
+    val constant = """val\s+(\w+)\s*(?::\s*String\s*)?=\s*"([^"]*)"""".r
+    val constants = sources.flatMap { case (_, text) =>
+      constant.findAllMatchIn(text).map(m => m.group(1) -> m.group(2))
+    }.toMap
+    val access = ("""\.conf\s*\.\s*(?:get|getOption|set|unset|contains)""" +
+      """\(\s*(?:"([^"]*)"|([\w.]+))""").r
+    val hits = sources.flatMap { case (file, text) =>
+      access.findAllMatchIn(text).map { m =>
+        Option(m.group(1)).getOrElse(
+          constants.getOrElse(m.group(2).split('.').last, ""))
+      }.filter(_.startsWith(prefix)).map(key => s"$file: $key")
+    }.distinct
+    assert(hits.isEmpty, s"graft.* session confs read in src/main: $hits")
+  }
+
   test("src/main reads exactly the listed environment variables") {
     val deployment = Set("GRAFT_WAREHOUSE", "SPARK_MASTER",
       "GRAFT_ICEBERG_TOKEN", "GRAFT_ICEBERG_CREDENTIAL",
