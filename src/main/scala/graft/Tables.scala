@@ -95,10 +95,11 @@ object Tables {
     *
     * The hint avoids sort-merge's full sort of the fact side (measured
     * 4.3× per-row at sf10 on q5's lineitem leg). Spark's shuffled hash
-    * join cannot spill its build-side map, so the per-partition build
-    * size, build_rows / shuffle partitions, must stay bounded. It does
-    * here: every session starts each exchange at
+    * join cannot spill its build-side map, so it is safe only while the
+    * per-partition build size, build_rows / shuffle partitions, stays
+    * bounded: every session starts each exchange at
     * [[EngineDefaults.initialPartitionNum]] partitions, the house rule
-    * that partitions scale with the data (SURVEY §8). */
+    * that partitions scale with the data. A deployment whose partition
+    * count does not grow with its data needs sort-merge here. */
   def shuffleHash(df: DataFrame): DataFrame = df.hint("SHUFFLE_HASH")
 }
