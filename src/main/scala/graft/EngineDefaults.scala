@@ -81,24 +81,37 @@ object EngineDefaults {
 
   /** Apply the shared confs to a session builder: AQE with the
     * [[minPartitionSize]] coalescing floor, the [[codegenCacheEntries]]
-    * class cache, and [[graft.warehouse.LocalFs]] as the `file:`
-    * filesystem (`fs.file.impl`), which sets warehouse file and directory
-    * modes without forking a `chmod` process for each. The codegen cache
-    * size and the filesystem are static: they take effect only through
-    * the builder. */
+    * class cache, [[graft.warehouse.LocalFs]] as the `file:` filesystem
+    * (`fs.file.impl`), which sets warehouse file and directory modes
+    * without forking a `chmod` process for each, and
+    * [[graft.warehouse.HadoopConfPlugin]], which drops the Hadoop conf's
+    * per-property source records when the context starts, so every scan
+    * broadcast and every write task ships the conf without them. The
+    * plugin goes in `spark.plugins.defaultList`, which Spark prepends to
+    * `spark.plugins`, so a caller's own plugin list still loads. The
+    * codegen cache size, the filesystem and the plugin are static: they
+    * take effect only through the builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config(MinPartKey, minPartitionSize)
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
       .config("spark.hadoop.fs.file.impl", classOf[graft.warehouse.LocalFs].getName)
+      .config("spark.plugins.defaultList",
+        classOf[graft.warehouse.HadoopConfPlugin].getName)
 
-  /** Seed the floor onto an EXTERNALLY-built session (the GraftSession
-    * deployment path) — only when the deployment did not explicitly set
-    * it, so an operator's own tuning always wins. Only the floor: the
-    * static confs of [[tune]] cannot be seeded, so such a session keeps
-    * its own codegen cache size and its own `file:` filesystem. */
-  def seed(spark: SparkSession): Unit =
+  /** Seed the engine defaults onto an EXTERNALLY-built session (the
+    * GraftSession deployment path): the coalescing floor, only when the
+    * deployment did not explicitly set it, so an operator's own tuning
+    * always wins; and the plugin's
+    * [[graft.warehouse.HadoopConfPlugin.dropSources]] on the context's
+    * Hadoop conf, which changes no value. The other static confs of
+    * [[tune]] cannot be seeded, so such a session keeps its own codegen
+    * cache size and its own `file:` filesystem. */
+  def seed(spark: SparkSession): Unit = {
     if (!org.apache.spark.sql.GraftBridge.isConfSet(spark, MinPartKey))
       spark.conf.set(MinPartKey, minPartitionSize)
+    graft.warehouse.HadoopConfPlugin.dropSources(
+      spark.sparkContext.hadoopConfiguration)
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.queries.Exact.h32Sql
+import graft.queries.Exact.{h32Sql, toksSql}
 import graft.ops.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 
 /** The north-star LLM-data-pipeline operators (BASELINE.json) as
@@ -18,9 +18,7 @@ import graft.ops.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
 object DataOpsQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  // Shared DuckDB fragments mirroring graft.ops.TextOps exactly
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+  // Shared DuckDB fragment mirroring graft.ops.TextOps exactly
   private val shingleSql = // distinct word 3-grams over toks column t
     """CASE WHEN len(t) >= 3 THEN list_distinct(list_transform(
       |  generate_series(1, len(t) - 2),

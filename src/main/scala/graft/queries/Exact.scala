@@ -42,4 +42,10 @@ object Exact {
     * token hash): the first 8 hex digits of md5 as a BIGINT. */
   def h32Sql(arg: String): String =
     s"('0x' || substr(md5($arg), 1, 8))::BIGINT"
+
+  /** DuckDB text of `graft.ops.TextOps.tokens` over a `text` column:
+    * lower-case, split on every run of non-alphanumerics, drop empty
+    * tokens. */
+  val toksSql: String =
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 }

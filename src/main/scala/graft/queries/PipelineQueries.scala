@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.Tables
-import graft.queries.Exact.h32Sql
+import graft.queries.Exact.{h32Sql, toksSql}
 import graft.ops.{Dedup, Sampling, Search, Similarity, TextAnalysis}
 
 /** Round-4 pipeline additions: corpus-wide segment (paragraph) dedup,
@@ -16,9 +16,6 @@ import graft.ops.{Dedup, Sampling, Search, Similarity, TextAnalysis}
   */
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
   // synthetic skewed domain labels over documents (60/25/10/5%): the
   // head-heavy mixture temperature sampling exists to flatten

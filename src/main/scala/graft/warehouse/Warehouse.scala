@@ -76,19 +76,28 @@ class Warehouse(val spark: SparkSession, val root: String) {
     views.getOrElse((schema, name),
       ParquetFooter.readTable(spark, tablePath(schema, name)))
 
-  /** CTAS — CREATE OR REPLACE TABLE (adapters.sql:32-47). Overwrite is
-    * atomic-enough locally (Spark writes to a staging dir then renames);
-    * partitionBy columns become physical partition dirs so partition-wise
-    * incremental rewrites prune. */
+  /** CTAS — CREATE OR REPLACE TABLE (adapters.sql:32-47); partitionBy
+    * columns become physical partition dirs so partition-wise
+    * incremental rewrites prune. Replacing a live table writes under a
+    * staging name first and archives and renames only after the write
+    * succeeded, like the reference's build-then-swap: a write that fails
+    * deletes its staging directory, and the live table, its versions and
+    * the ledger stay as they were. A write to a fresh name goes direct. */
   def createTableAs(df: DataFrame, schema: String, name: String,
       partitionBy: Seq[String] = Nil, mode: SaveMode = SaveMode.Overwrite)
       : Unit = {
     createSchema(schema)
     views.remove((schema, name))
-    if (mode == SaveMode.Overwrite) archiveCurrent(schema, name, "ctas")
     val w = df.write.mode(mode)
     val withParts = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
-    withParts.parquet(tablePath(schema, name))
+    if (mode == SaveMode.Overwrite && tableExists(schema, name)) {
+      val staging = Paths.get(root, schema,
+        s".$name.staging-${java.util.UUID.randomUUID()}")
+      try withParts.parquet(staging.toString)
+      catch { case e: Throwable => deleteRecursive(staging); throw e }
+      archiveCurrent(schema, name, "ctas")
+      Files.move(staging, Paths.get(tablePath(schema, name)))
+    } else withParts.parquet(tablePath(schema, name))
   }
 
   def append(df: DataFrame, schema: String, name: String): Unit =

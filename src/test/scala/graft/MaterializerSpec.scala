@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -27,6 +29,27 @@ class MaterializerSpec extends AnyFunSuite {
     m.materialize(node)
     assert(wh.read("main", "nations").count() == 25)
     assert(wh.tableExists("main", "nations"))
+  }
+
+  test("a table rebuild that fails at execution keeps the live table") {
+    val wh = freshWh()
+    val m = new Materializer(wh)
+    val node = ModelNode("ids", ModelConfig("table"), Nil)(
+      s => s.range(10).toDF("id"))
+    m.materialize(node)
+    val failing = node.copy(build = s => s.range(10).toDF("id")
+      .selectExpr("id", "if(id > 5, raise_error('boom'), 1) AS flag"))
+    intercept[Exception](m.materialize(failing))
+    // the first version is still live and nothing was archived
+    assert(wh.tableExists("main", "ids"))
+    assert(wh.read("main", "ids").columns.toSeq == Seq("id"))
+    assert(wh.read("main", "ids").count() == 10)
+    assert(wh.versions("main", "ids").isEmpty)
+    assert(wh.versionLedger.isEmpty)
+    // and the failed write left no staging directory behind
+    val left = Files.list(Paths.get(wh.root, "main"))
+      .iterator().asScala.map(_.getFileName.toString).toList
+    assert(left == List("ids"))
   }
 
   test("view materialization registers without writing files") {

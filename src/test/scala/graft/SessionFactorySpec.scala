@@ -25,6 +25,8 @@ class SessionFactorySpec extends AnyFunSuite {
       EngineDefaults.minPartitionSize)
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") ==
       classOf[graft.warehouse.LocalFs].getName)
+    assert(spark.sparkContext.getConf.get("spark.plugins.defaultList") ==
+      classOf[graft.warehouse.HadoopConfPlugin].getName)
   }
 
   test("withConf restores a set key and unsets an absent one, " +
@@ -60,6 +62,23 @@ class SessionFactorySpec extends AnyFunSuite {
       .map(_.toString)
     assert(hits == Seq("src/main/scala/graft/EngineDefaults.scala"),
       s"session builders outside EngineDefaults.local: $hits")
+  }
+
+  test("reflection into library internals lives in one file") {
+    // the needles are assembled so this file does not match itself
+    val needles = Seq(Seq("set", "Accessible"), Seq("getDeclared", "Field"))
+      .map(_.mkString)
+    val files = {
+      val s = Files.walk(Paths.get("src/main/scala"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    val hits = files.filter { f =>
+      val text = Files.readString(f)
+      needles.exists(text.contains)
+    }.map(_.toString)
+    assert(hits == Seq("src/main/scala/graft/warehouse/HadoopConfPlugin.scala"),
+      s"reflection outside HadoopConfPlugin: $hits")
   }
 
   test("src/main reads no graft.* session conf") {
